@@ -19,7 +19,8 @@ object BenchFreshRep {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: BenchFreshRep <query> <sfDir> <warmDir>")
     val Array(name, sfDir, warmDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

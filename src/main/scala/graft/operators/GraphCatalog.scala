@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Named-graph store replacing the reference's write path
   * (ops 1/2, `primary_server.c:70-99`) and its per-graph
@@ -25,6 +26,15 @@ import org.apache.spark.sql.functions._
 final class GraphCatalog(spark: SparkSession, root: String) {
 
   private def edgePath(name: String) = s"$root/$name/edges"
+
+  /** The catalog's edge schema. Every write casts its edges to it, so
+    * every read declares it instead of inferring it from a Parquet
+    * footer, which costs a Spark job per load. */
+  private val edgeSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType)))
+  private def asEdges(edges: DataFrame) =
+    edges.select(edgeSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+  private def readEdges(path: String) = spark.read.schema(edgeSchema).parquet(path)
   private def validate(name: String): Unit =
     require(name.nonEmpty && !name.contains("/") && !name.contains(".."),
       s"invalid graph name: $name")
@@ -32,7 +42,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
   /** Reference op=1 (Add graph). Create-or-replace, atomic per graph. */
   def addGraph(name: String, edges: DataFrame): Unit = {
     validate(name)
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
+    asEdges(edges)
       .write.mode(SaveMode.Overwrite).parquet(edgePath(name))
   }
 
@@ -41,8 +51,9 @@ final class GraphCatalog(spark: SparkSession, root: String) {
   def modifyGraph(name: String, edges: DataFrame): Unit = addGraph(name, edges)
 
   /** Snapshot read of a named graph's edge list (fail-stop under
-    * concurrent overwrite — see class doc). */
-  def load(name: String): DataFrame = { validate(name); spark.read.parquet(edgePath(name)) }
+    * concurrent overwrite — see class doc). Runs no Spark job; an
+    * absent graph fails here. */
+  def load(name: String): DataFrame = { validate(name); readEdges(edgePath(name)) }
 
   /** Materialised snapshot: survives a concurrent overwrite of the
     * underlying files. `persist()` is NOT enough — Spark's
@@ -68,7 +79,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * right layout for a graph queried many times at 100 TB. */
   def addGraphBucketed(name: String, edges: DataFrame, buckets: Int = 32): Unit = {
     validate(name)
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
+    asEdges(edges)
       .write.mode(SaveMode.Overwrite)
       .format("parquet")
       .bucketBy(buckets, "src").sortBy("src")
@@ -89,7 +100,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * construction. Creates the graph when absent (append to empty). */
   def addEdges(name: String, edges: DataFrame): Unit = {
     validate(name)
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
+    asEdges(edges)
       .write.mode(SaveMode.Append).parquet(edgePath(name))
   }
 
@@ -106,7 +117,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
   def addEdgesBucketed(name: String, edges: DataFrame): Unit = {
     validate(name)
     val spec = bucketSpecOf(name)
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
+    asEdges(edges)
       .write.mode(SaveMode.Append).format("parquet")
       .bucketBy(spec.numBuckets, "src").sortBy("src")
       .saveAsTable(tableName(name))
@@ -187,7 +198,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     validate(name)
     val next = (latestVersion(name).getOrElse(-1L) max
       listVersions(name).lastOption.getOrElse(-1L)) + 1
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
+    asEdges(edges)
       .write.mode(SaveMode.ErrorIfExists).parquet(versionDir(name, next).toString)
     val tmp = new org.apache.hadoop.fs.Path(s"$root/$name/_latest.tmp")
     val out = fs.create(tmp, true)
@@ -210,7 +221,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     validate(name)
     require(fs.exists(versionDir(name, v)) && versionComplete(name, v),
       s"graph $name has no complete version $v")
-    spark.read.parquet(versionDir(name, v).toString)
+    readEdges(versionDir(name, v).toString)
   }
 
   /** Read the latest committed version (resolved once, then stable for

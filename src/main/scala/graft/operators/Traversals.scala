@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.Bridge.notNull
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.storage.StorageLevel
 
@@ -80,12 +81,51 @@ object Traversals {
   def partitionEdges(edges: DataFrame, numPartitions: Int = 0): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
             else edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e = castEdges(edges)
     // tiny graphs (optimizer size estimate < 1 MiB): the repartition
     // shuffle costs more than it saves — cache as-is
     val tiny = e.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 20)
     (if (tiny) e else e.repartition(n, col("src")))
       .persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  private def castEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+
+  /** Every row of a cast `(src, dst)` edge table on the driver when it
+    * has at most `max` rows, else None: the one bounded collect behind
+    * each local-or-distributed choice below. A `limit(max + 1)` collect
+    * is one job on a one-partition input (a `count()` then `collect()`
+    * ran the plan twice), and the limit is the guard: at most `max + 1`
+    * rows are fetched whatever the table's size, so the check never
+    * follows an unbounded allocation. `limit` takes an Int; a bound at
+    * or past `Int.MaxValue` fetches up to `Int.MaxValue` rows, the most
+    * one driver array can hold. */
+  private def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val fetch = if (max >= Int.MaxValue) Int.MaxValue else (max max -1L).toInt + 1
+    val rows = edges.limit(fetch).as[(Long, Long)].collect()
+    if (rows.length <= max) Some(rows) else None
+  }
+
+  /** Driver-local twin of the level loop over a collected edge array:
+    * `(vertex, min-hop level)` for every vertex reachable from `starts`
+    * within `maxLevels` levels. */
+  private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long],
+                          maxLevels: Int): Seq[(Long, Int)] = {
+    val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
+    val lvl = scala.collection.mutable.LinkedHashMap[Long, Int](
+      starts.distinct.map(_ -> 0): _*)
+    var frontier = starts.distinct
+    var level = 0
+    while (frontier.nonEmpty && level < maxLevels) {
+      level += 1
+      frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
+        .distinct.filterNot(lvl.contains)
+      frontier.foreach(v => lvl(v) = level)
+    }
+    lvl.toSeq
   }
 
   /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
@@ -143,31 +183,28 @@ object Traversals {
     import spark.implicits._
     require(starts.nonEmpty, "at least one start vertex")
     // Tiny-graph fast path: identical (vertex, min-hop level) output,
-    // computed in one pass on the driver. The count also materialises
-    // the persisted edge cache, which the distributed loop's first
-    // superstep would otherwise pay.
-    if (e.count() <= localMaxEdges) {
-      val adj = e.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-      val lvl = scala.collection.mutable.LinkedHashMap[Long, Int](
-        starts.distinct.map(_ -> 0): _*)
-      var frontier = starts.distinct
-      var level = 0
-      while (frontier.nonEmpty && level < maxLevels) {
-        level += 1
-        frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-          .distinct.filterNot(lvl.contains)
-        frontier.foreach(v => lvl(v) = level)
-      }
-      return lvl.toSeq.toDF("vertex", "level")
+    // computed in one pass on the driver.
+    collectAtMost(castEdges(e), localMaxEdges) match {
+      case Some(raw) => localLevels(raw, starts, maxLevels).toDF("vertex", "level")
+      case None => levelLoop(e, starts, maxLevels)._1
     }
+  }
+
+  /** The distributed level loop over prepared edges: the `(vertex,
+    * level)` table, and the number of vertices on each level — level
+    * `l`'s count at index `l`, which the loop learns anyway to decide
+    * whether to go on. */
+  private def levelLoop(e: DataFrame, starts: Seq[Long],
+                        maxLevels: Int): (DataFrame, Seq[Long]) = {
+    val spark = e.sparkSession
+    import spark.implicits._
     var visited = starts.distinct.map((_, 0)).toDF("vertex", "level")
       .checkpointSized()
     var frontier = visited.select("vertex")
     var level = 0
     var sinceCompact = 0
     var frontierSize = starts.distinct.length.toLong
+    val levelSizes = scala.collection.mutable.ArrayBuffer(frontierSize)
     while (frontierSize > 0 && level < maxLevels) {
       level += 1
       // One BSP superstep: expand frontier along edges, drop already-seen.
@@ -180,6 +217,7 @@ object Traversals {
         .checkpointSized() // cut lineage growth per iteration
       frontierSize = next.count()
       if (frontierSize > 0) {
+        levelSizes += frontierSize
         // visited stays a lazy union of already-checkpointed frontiers —
         // no O(|visited|) copy per level; compact every 8 levels so deep
         // graphs keep bounded plan depth
@@ -198,7 +236,7 @@ object Traversals {
         dropCheckpoint(next) // empty expansion: nothing references it
       }
     }
-    visited
+    (visited, levelSizes.toSeq)
   }
 
   /** Per-root hop distances from a SET of root vertices — the
@@ -257,25 +295,43 @@ object Traversals {
 
   /** Reference op=4: BFS traversal sequence. Output
     * `(order: Long, level: Int, vertex: Long)`, order 0-based over
-    * (level asc, vertex asc).
+    * (level asc, vertex asc); no column is nullable.
     *
-    * The global (level, vertex) rank is computed as a TWO-PHASE scan,
-    * not one unpartitioned `Window.orderBy` (which funnels the whole
-    * reachable set through a single task): phase 1 ranks vertices
-    * WITHIN each level (parallel across levels), phase 2
-    * window-cumsums the per-level counts (one row per level — tiny)
-    * and broadcasts each level's starting offset back. */
-  def bfs(edges: DataFrame, start: Long): DataFrame = {
-    val lv = bfsLevels(edges, start)
-    val wInLevel = Window.partitionBy(col("level")).orderBy(col("vertex"))
-    val wLevels = Window.orderBy(col("level"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = lv.groupBy(col("level")).agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(wLevels), lit(0)))
-      .select(col("level"), col("off"))
-    lv.join(broadcast(offsets), Seq("level"))
-      .select((row_number().over(wInLevel) - 1 + col("off")).cast("long").as("order"),
-        col("level").cast("int").as("level"), col("vertex").cast("long").as("vertex"))
+    * One bounded collect of at most `localMaxEdges + 1` edges picks the
+    * path. When the whole edge list came back, the levels, the sort and
+    * the numbering all run on the driver and the result is a local
+    * relation, so the call costs that one job and collecting the result
+    * none. Otherwise the distributed level loop runs, and the rank is
+    * a row number WITHIN each level (a window partitioned by level,
+    * parallel across levels) plus the level's starting offset. The
+    * offsets are prefix sums of the per-level vertex counts the loop
+    * already took, applied as a literal map — no aggregation and no
+    * unpartitioned window, which would funnel the whole reachable set
+    * through one task. Both paths return identical rows and schema. */
+  def bfs(edges: DataFrame, start: Long,
+          localMaxEdges: Long = bfsLocalMaxEdges): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val maxLevels = 10000
+    collectAtMost(castEdges(edges), localMaxEdges) match {
+      case Some(raw) =>
+        localLevels(raw, Seq(start), maxLevels).sortBy { case (v, l) => (l, v) }
+          .zipWithIndex.map { case ((v, l), i) => (i.toLong, l, v) }
+          .toDF("order", "level", "vertex")
+      case None =>
+        val e = partitionEdges(edges)
+        val (lv, levelSizes) =
+          try levelLoop(e, Seq(start), maxLevels) finally e.unpersist(blocking = false)
+        val offsets = typedLit(levelSizes.indices.zip(levelSizes.scanLeft(0L)(_ + _)).toMap)
+        val inLevel = Window.partitionBy(col("level")).orderBy(col("vertex"))
+        // vertex ids come from the edge columns, which may be declared
+        // nullable; a null id fails here as it does in the local
+        // path's typed collect
+        lv.select(
+          notNull(element_at(offsets, col("level")) + row_number().over(inLevel) - 1)
+            .as("order"),
+          col("level"), notNull(col("vertex")).as("vertex"))
+    }
   }
 
   /** GraphX Pregel variant of [[bfsLevels]] (cross-check + the
@@ -308,21 +364,6 @@ object Traversals {
     else out
   }
 
-  /** Reference op=3: leaf nodes of the DFS tree from `start`
-    * (`secondary_server.c:142-176`). A vertex is a leaf iff its DFS
-    * expansion finds no unvisited neighbor (checked incrementally in
-    * ascending neighbor order, each child fully explored before the
-    * next check — the reference joins each child thread immediately,
-    * so its DFS is sequential and deterministic).
-    *
-    * Two phases: (1) distributed reachability (the part that scales —
-    * same machinery as BFS); (2) deterministic replay over the
-    * *reachable* adjacency only, collected to the driver. The replay is
-    * O(reachable edges); DFS-tree-with-order is inherently sequential
-    * (P-complete), so the collected-replay split is the honest design:
-    * phase 1 bounds phase 2's input to the component actually reached.
-    * Output: `(vertex: Long)` ascending.
-    */
   /** Replay inputs above this edge count abort with a clear error
     * instead of a driver OOM (the reference contract bounds graphs at
     * n=100; this guard is ~4 orders of magnitude above that). 5 M
@@ -356,61 +397,69 @@ object Traversals {
     raw.filter { case (s, d0) => s != d0 && d0 != start && reach(s) }.distinct
   }
 
+  /** Reference op=3: leaf nodes of the DFS tree from `start`
+    * (`secondary_server.c:142-176`). A vertex is a leaf iff its DFS
+    * expansion finds no unvisited neighbor (checked incrementally in
+    * ascending neighbor order, each child fully explored before the
+    * next check — the reference joins each child thread immediately,
+    * so its DFS is sequential and deterministic).
+    *
+    * Two phases: (1) reachability (the part that scales — same
+    * machinery as BFS); (2) deterministic replay over the *reachable*
+    * adjacency only, on the driver. The replay is O(reachable edges);
+    * DFS-tree-with-order is inherently sequential (P-complete), so the
+    * collected-replay split is the honest design: phase 1 bounds phase
+    * 2's input to the component actually reached.
+    *
+    * One bounded collect of at most `localMaxEdges + 1` edges picks the
+    * path: when the whole edge list came back, both phases run on it on
+    * the driver and the call is that one job. Otherwise reachability
+    * runs distributed and the reduced replay adjacency (below) is
+    * computed once, by one collect of at most `maxReplayEdges + 1`
+    * rows. On both paths more than `maxReplayEdges` reduced edges
+    * refuse the replay. Output: `(vertex: Long)` ascending, not
+    * nullable; both paths return identical rows and schema.
+    */
   def dfsLeaves(edges: DataFrame, start: Long,
                 maxReplayEdges: Long = dfsReplayMaxEdges,
                 localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // dense-small-graph fast path (r20): below the audited bounded-
-    // collect contract the reachability pass, the r13 reduction, and
-    // the (already driver-side) replay all run on one collected edge
-    // array — the distributed path paid ~8 jobs of pure barrier
-    // latency on the memoized mod-150 fixture (packed task time
-    // ~0.01 s under a ~1 s wall). The reduction classes are identical,
-    // so the replay — and therefore the leaf set — is bit-identical.
-    val eCast = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    if (eCast.count() <= localMaxEdges) {
-      val raw = eCast.as[(Long, Long)].collect()
-      val reduced = localReducedAdjacency(raw, start)
-      // the caller's driver-memory refusal contract is on the REDUCED
-      // adjacency — the local reduction produces the identical row
-      // set, so the guard fires exactly where the distributed path's
-      // require fires
-      require(reduced.length <= maxReplayEdges,
-        s"DFS-tree replay needs the reachable adjacency on the driver: " +
-          s"${reduced.length} reduced edges exceed dfsReplayMaxEdges=$maxReplayEdges " +
-          "(DFS order is inherently sequential; use dfsLeafClasses for a " +
-          "distributed any-scale leaf/internal classification, or " +
-          "bfsLevels/sssp for traversals that must scale past driver memory)")
-      return replayDfsLeaves(reduced, start).toSeq.sorted.toDF("vertex")
+    val eCast = castEdges(edges)
+    val reduced = collectAtMost(eCast, localMaxEdges) match {
+      // dense-small-graph fast path (r20): the reachability pass, the
+      // r13 reduction and the replay all run on one collected edge
+      // array. The reduction classes are identical, so the replay —
+      // and therefore the leaf set — is bit-identical, and the
+      // replay bound below applies to the same row set.
+      case Some(raw) => Some(localReducedAdjacency(raw, start)).filter(_.length <= maxReplayEdges)
+      case None =>
+        val reach = bfsLevels(edges, start).select("vertex")
+        // Replay-input REDUCTION (r13, exactness-preserving — spec-
+        // pinned): an edge whose target is always-already-visited when
+        // its source is expanded can never push a child, never
+        // increments childCount, and never extends reachability —
+        // dropping it leaves the replay's visit order, tree, and leaf
+        // set bit-identical. Three such classes are droppable
+        // DISTRIBUTIVELY before the collect: self-loops (v visited
+        // when v expands), edges into `start` (visited from step 0),
+        // and duplicate rows (the replay dedups per-vertex anyway —
+        // dedup on the cluster instead of the driver, which on a
+        // multigraph shrinks the collect by the multiplicity). The
+        // bound applies to the REDUCED adjacency: graphs over the raw
+        // bound still replay exactly when their reduced form fits.
+        collectAtMost(eCast
+          .where(col("src") =!= col("dst") && col("dst") =!= lit(start))
+          .join(reach, col("src") === reach("vertex"), "left_semi")
+          .distinct(), maxReplayEdges)
     }
-    val reach = bfsLevels(edges, start).select("vertex")
-    // Replay-input REDUCTION (r13, exactness-preserving — spec-pinned):
-    // an edge whose target is always-already-visited when its source
-    // is expanded can never push a child, never increments childCount,
-    // and never extends reachability — dropping it leaves the replay's
-    // visit order, tree, and leaf set bit-identical. Three such
-    // classes are droppable DISTRIBUTIVELY before the collect:
-    // self-loops (v visited when v expands), edges into `start`
-    // (visited from step 0), and duplicate rows (the replay dedups
-    // per-vertex anyway — dedup on the cluster instead of the driver,
-    // which on a multigraph shrinks the collect by the multiplicity).
-    // The 5M bound now applies to the REDUCED adjacency: graphs over
-    // the raw bound still replay exactly when their reduced form fits.
-    val reachableEdges = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst") && col("dst") =!= lit(start))
-      .join(reach, col("src") === reach("vertex"), "left_semi")
-      .distinct()
-    val nEdges = reachableEdges.count()
-    require(nEdges <= maxReplayEdges,
-      s"DFS-tree replay needs the reachable adjacency on the driver: " +
-        s"$nEdges reduced edges exceed dfsReplayMaxEdges=$maxReplayEdges " +
+    require(reduced.isDefined,
+      s"DFS-tree replay needs the reachable adjacency on the driver: its " +
+        s"reduced edges exceed dfsReplayMaxEdges=$maxReplayEdges " +
         "(DFS order is inherently sequential; use dfsLeafClasses for a " +
         "distributed any-scale leaf/internal classification, or " +
         "bfsLevels/sssp for traversals that must scale past driver memory)")
-    val adjRows = reachableEdges.as[(Long, Long)].collect()
-    replayDfsLeaves(adjRows, start).toSeq.sorted.toDF("vertex")
+    replayDfsLeaves(reduced.get, start).toSeq.sorted.toDF("vertex")
   }
 
   /** The sequential explicit-stack DFS replay (smallest-unvisited-

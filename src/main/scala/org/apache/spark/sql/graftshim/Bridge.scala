@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
@@ -10,6 +11,11 @@ import org.apache.spark.sql.classic
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `c` declared non-nullable; a null value fails the query (the
+    * check a typed collect into a primitive field makes). */
+  def notNull(c: Column): Column =
+    classic.ExpressionUtils.column(AssertNotNull(classic.ExpressionUtils.expression(c)))
 
   /** Replace an eagerly-localCheckpointed DataFrame's inherited size
     * ESTIMATE with the checkpoint's actual materialised block size.

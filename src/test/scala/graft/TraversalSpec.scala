@@ -2,6 +2,9 @@ package graft
 
 import graft.sources.MatrixIO
 import graft.operators.{GraphCatalog, Traversals}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 /** Golden traversal tests from FIXTURES.md — the reference's own
   * sample graphs (`/root/reference/G*.txt`), expectations hand-derived
@@ -76,6 +79,96 @@ class TraversalSpec extends SparkSpec {
         assert(fast === dist, s"paths diverged from start $start")
       } finally e.unpersist(blocking = false)
     }
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("local and forced-distributed bfs/dfsLeaves return identical rows and schema " +
+    "(goldens and random graphs)") {
+    import spark.implicits._
+    def bfsRows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
+    def check(e: DataFrame, start: Long, what: String): Unit = {
+      val (bLocal, bDist) = (Traversals.bfs(e, start), Traversals.bfs(e, start, localMaxEdges = 0L))
+      assert(bLocal.schema === bDist.schema, s"bfs schema, $what")
+      assert(bfsRows(bLocal) === bfsRows(bDist), s"bfs rows, $what")
+      val (dLocal, dDist) =
+        (Traversals.dfsLeaves(e, start), Traversals.dfsLeaves(e, start, localMaxEdges = 0L))
+      assert(dLocal.schema === dDist.schema, s"dfsLeaves schema, $what")
+      assert(dLocal.collect().toSeq === dDist.collect().toSeq, s"dfsLeaves rows, $what")
+    }
+    assert(Traversals.bfs(edges("G7"), 0).schema.forall(!_.nullable))
+    Seq("G1" -> 0L, "G2" -> 0L, "G5" -> 0L, "G6" -> 0L, "G6" -> 4L, "G7" -> 0L, "G7" -> 3L)
+      .foreach { case (g, start) => check(edges(g), start, s"$g from $start") }
+    val rnd = new scala.util.Random(7L)
+    (1 to 4).foreach { i =>
+      val n = 2 + rnd.nextInt(19)
+      val es = Seq.fill(n * (1 + rnd.nextInt(4)))((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      check(es.toDF("src", "dst"), 0L, s"random graph #$i: $es")
+    }
+  }
+
+  test("job-count pins: a catalog load runs no job, a G7 bfs or dfsLeaves collect runs one") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val cat = new GraphCatalog(spark, tmp)
+    cat.addGraph("g7", edges("G7"))
+    cat.commitVersion("g7v", edges("G7"))
+    assert(jobsOf(cat.load("g7"))._2 === 0, "load must not infer the schema")
+    assert(jobsOf(cat.loadLatest("g7v"))._2 === 0, "loadLatest must not infer the schema")
+    val (bfsRows, bfsJobs) = jobsOf(cat.bfs("g7", 0).collect())
+    assert(bfsRows.sortBy(_.getLong(0)).map(_.getLong(2)).toSeq === Seq(0L, 1L, 4L, 2L, 5L, 6L, 3L))
+    assert(bfsJobs === 1)
+    val (dfsRows, dfsJobs) = jobsOf(cat.dfsLeaves("g7", 0).collect())
+    assert(dfsRows.map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L))
+    assert(dfsJobs === 1)
+    // the distributed rank: a window partitioned by level, never one
+    // unpartitioned window over the whole reachable set
+    val windows = Traversals.bfs(cat.load("g7"), 0, localMaxEdges = 0L)
+      .queryExecution.sparkPlan.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }
+    assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty), windows.mkString("\n"))
+  }
+
+  test("replay bound is exact on both paths; an unbounded replay runs; an absent graph fails to load") {
+    // G7 from 0 reduces to 10 replay edges: its 12 minus the 2 into the start
+    Seq(graft.operators.GraphAlgos.denseLocalMaxEdges, 0L).foreach { local =>
+      assert(Traversals.dfsLeaves(edges("G7"), 0, maxReplayEdges = 10L, localMaxEdges = local)
+        .collect().map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L), s"localMaxEdges=$local")
+      val e = intercept[IllegalArgumentException] {
+        Traversals.dfsLeaves(edges("G7"), 0, maxReplayEdges = 9L, localMaxEdges = local)
+      }
+      assert(e.getMessage.contains("exceed dfsReplayMaxEdges=9"), s"localMaxEdges=$local")
+      // Long.MaxValue + 1 overflows; the bounded collect clamps it
+      assert(Traversals.dfsLeaves(edges("G7"), 0, maxReplayEdges = Long.MaxValue,
+        localMaxEdges = local).collect().map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L))
+    }
+    assert(Traversals.bfs(edges("G7"), 0, localMaxEdges = Long.MaxValue)
+      .collect().map(_.getLong(2)).toSeq === Seq(0L, 1L, 4L, 2L, 5L, 6L, 3L))
+    val cat = new GraphCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-absent").toString)
+    val e = intercept[Exception] { cat.load("absent") }
+    assert(e.getMessage.contains("absent"), e.getMessage)
   }
 
   test("Pregel BFS agrees with driver-loop BFS on G7") {
