@@ -155,73 +155,27 @@ object GraphAlgos {
     * long-typed, checkpointed). The input's checkpoint blocks are
     * never dropped here — a memoized caller keeps serving them. */
   def trianglesByMinVertexCanon(und: DataFrame,
-      localMaxEdges: Long = denseLocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = denseLocalMaxEdges): DataFrame =
     // dense-small-graph fast path: count each triangle once at its
-    // min vertex from driver-local adjacency sets — same bounded-
-    // collect contract and rationale as [[jaccardPerEdge]]
-    if (und.count() <= localMaxEdges) {
-      import und.sparkSession.implicits._
-      val e = und.select(col("a"), col("b")).as[(Long, Long)].collect()
-      val counts = scala.collection.mutable.HashMap.empty[Long, Long]
-      // r20: dense fixtures run against packed bitmaps ("common
-      // neighbour above b" is a masked popcount — see the jaccard
-      // local path for the cost argument); sparse id-spaces keep the
-      // HashSet form
-      if (e.flatMap(p => Seq(p._1, p._2)).distinct.length <= denseLocalMaxVerts) {
-        val (_, idx, adj) = denseAdjacency(e)
-        e.foreach { case (a, b) => // a < b canonical; count at min(a,b,c)
-          val common = intersectCountAbove(adj(idx(a)), adj(idx(b)), idx(b))
-          if (common > 0) counts(a) = counts.getOrElse(a, 0L) + common
-        }
-      } else {
-        val adj = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.HashSet[Long]]
+    // min vertex, from its min edge (a < b canonical, third vertex
+    // above b) — same bounded-collect contract and rationale as
+    // [[jaccardPerEdge]]
+    Traversals.collectAtMost(und, localMaxEdges) match {
+      case Some(e) =>
+        import und.sparkSession.implicits._
+        val common = commonNeighbours(e)
+        val counts = scala.collection.mutable.HashMap.empty[Long, Long]
         e.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, scala.collection.mutable.HashSet.empty) += b
-          adj.getOrElseUpdate(b, scala.collection.mutable.HashSet.empty) += a
+          val c = common(a, b, true)
+          if (c > 0) counts(a) = counts.getOrElse(a, 0L) + c
         }
-        e.foreach { case (a, b) => // a < b canonical; count at min(a,b,c)
-          val sa = adj(a); val sb = adj(b)
-          val (small, big) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
-          small.foreach { c =>
-            if (c > b && big.contains(c)) // each triangle from its min edge only
-              counts(a) = counts.getOrElse(a, 0L) + 1L
-          }
-        }
-      }
-      return counts.toSeq.toDF("vertex", "triangles")
+        counts.toSeq.toDF("vertex", "triangles")
+      case None =>
+        closedTriangles(und, canonicalDegrees(und))
+          .groupBy(least(col("u"), col("a")).as("vertex"))
+          .agg(count(lit(1)).as("triangles"))
     }
-    val deg = und.select(col("a").as("v")).union(und.select(col("b")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    val lower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val oriented = und
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(when(lower, col("a")).otherwise(col("b")).as("u"),
-        when(lower, col("b")).otherwise(col("a")).as("w"))
-      .localCheckpoint(true)
-    val wedges = oriented.select(col("u"), col("w").as("w1"))
-      .join(oriented.select(col("u"), col("w").as("w2")), "u")
-      .where(col("w1") < col("w2")) // (w1, w2) is already canonical a < b
-      .select(col("u"), col("w1").as("a"), col("w2").as("b"))
-    wedges.join(und, Seq("a", "b"))
-      .groupBy(least(col("u"), col("a")).as("vertex"))
-      .agg(count(lit(1)).as("triangles"))
-  }
 
-  /** Per-edge neighborhood Jaccard similarity — the classic
-    * link-prediction / graph-cleaning feature: for every undirected
-    * edge {a,b}, |N(a) ∩ N(b)| / |N(a) ∪ N(b)|, where
-    * |N(a) ∩ N(b)| is exactly the edge's TRIANGLE SUPPORT — so the
-    * common-neighbor counts come from the same degree-ordered-
-    * orientation wedge machinery as [[trianglesByMinVertex]] (every
-    * vertex's oriented out-degree is O(√m), so a celebrity hub
-    * generates O(m) wedges instead of O(deg²)), with each closed
-    * triangle crediting all three of its edges. Union size is
-    * deg(a) + deg(b) − common (degrees over the deduplicated
-    * undirected edge set). Output: (src, dst, jac) per canonical
-    * src < dst edge with at least one common neighbor. */
   /** Shared edge bound for the driver-local DENSE-small-graph fast
     * paths (per-edge Jaccard AND min-vertex triangles — both consume
     * the same oriented-wedge machinery, so the cutoff rationale is one
@@ -233,10 +187,6 @@ object GraphAlgos {
     * shuffles cost multiples of the whole local computation. */
   val denseLocalMaxEdges: Long = 65536L
 
-  /** Per-operator alias of [[denseLocalMaxEdges]] (kept for source
-    * compatibility; the neutral name is the contract). */
-  val jaccardLocalMaxEdges: Long = denseLocalMaxEdges
-
   /** Vertex-count guard for the BITSET dense-local paths (r20): the
     * pairwise operators (link prediction, square counting) enumerate
     * vertex PAIRS against packed adjacency bitmaps, so their local
@@ -244,7 +194,7 @@ object GraphAlgos {
     * 4096 that is ≤ 8.4M pairs over 64-word rows (~0.3 s, 2 MB), past
     * it the distributed wedge machinery runs. Both guards must hold:
     * [[denseLocalMaxEdges]] bounds the collect, this bounds the
-    * quadratic. */
+    * quadratic ([[denseAdjacency]] applies it). */
   val denseLocalMaxVerts: Int = 4096
 
   /** Driver-side md5 hex — byte-identical to Spark's `md5()` (UTF-8
@@ -261,11 +211,18 @@ object GraphAlgos {
 
   /** Packed adjacency bitmaps over dense vertex indices for a
     * collected canonical edge array: (sorted distinct vertices,
-    * id → dense index, per-vertex bit rows). Shared by the bitset
-    * dense-local paths. */
-  private def denseAdjacency(e: Array[(Long, Long)])
-      : (Array[Long], Map[Long, Int], Array[Array[Long]]) = {
-    val verts = e.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    * id → dense index, per-vertex bit rows), or None when the edges
+    * span more than `maxVerts` vertices. This is the one vertex-count
+    * guard of the bitset dense-local paths, and it runs before any
+    * bitmap is allocated: a sparse graph within the edge bound can
+    * carry ~131k vertices, whose O(verts²/8)-byte bitmaps would cost
+    * ~2 GB of driver heap just to discover the guard fails (r20
+    * ADVICE). */
+  private def denseAdjacency(e: Array[(Long, Long)], maxVerts: Int)
+      : Option[(Array[Long], Map[Long, Int], Array[Array[Long]])] = {
+    val distinct = e.flatMap(p => Seq(p._1, p._2)).distinct
+    if (distinct.length > maxVerts) return None
+    val verts = distinct.sorted
     val idx = verts.zipWithIndex.toMap
     val nw = (verts.length + 63) >> 6
     val adj = Array.fill(verts.length)(new Array[Long](nw))
@@ -274,8 +231,34 @@ object GraphAlgos {
       adj(ia)(ib >> 6) |= 1L << (ib & 63)
       adj(ib)(ia >> 6) |= 1L << (ia & 63)
     }
-    (verts, idx, adj)
+    Some((verts, idx, adj))
   }
+
+  /** Common-neighbour counts over a collected canonical edge array:
+    * `(a, b, aboveB)` is |N(a) ∩ N(b)|, or with `aboveB` only the
+    * common neighbours whose id is above b. r20: graphs within
+    * [[denseLocalMaxVerts]] count against packed bitmaps — a masked
+    * popcount, Σ_e nv/64 word ops instead of Σ_e min(deg) boxed
+    * HashSet lookups (the saturated mod-300 fixture paid ~13M of
+    * those); sparse id-spaces keep the HashSet form. */
+  private def commonNeighbours(e: Array[(Long, Long)]): (Long, Long, Boolean) => Int =
+    denseAdjacency(e, denseLocalMaxVerts) match {
+      case Some((_, idx, adj)) => (a, b, aboveB) =>
+        if (aboveB) intersectCountAbove(adj(idx(a)), adj(idx(b)), idx(b))
+        else intersectCount(adj(idx(a)), adj(idx(b)))
+      case None =>
+        val adj = scala.collection.mutable.HashMap
+          .empty[Long, scala.collection.mutable.HashSet[Long]]
+        e.foreach { case (a, b) =>
+          adj.getOrElseUpdate(a, scala.collection.mutable.HashSet.empty) += b
+          adj.getOrElseUpdate(b, scala.collection.mutable.HashSet.empty) += a
+        }
+        (a, b, aboveB) => {
+          val sa = adj(a); val sb = adj(b)
+          val (small, big) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
+          small.count(c => (!aboveB || c > b) && big.contains(c))
+        }
+    }
 
   private def intersectCount(x: Array[Long], y: Array[Long]): Int = {
     var i = 0; var c = 0
@@ -302,6 +285,18 @@ object GraphAlgos {
   private def bitTest(row: Array[Long], i: Int): Boolean =
     (row(i >> 6) & (1L << (i & 63))) != 0L
 
+  /** Per-edge neighborhood Jaccard similarity — the classic
+    * link-prediction / graph-cleaning feature: for every undirected
+    * edge {a,b}, |N(a) ∩ N(b)| / |N(a) ∪ N(b)|, where
+    * |N(a) ∩ N(b)| is exactly the edge's TRIANGLE SUPPORT — so the
+    * common-neighbor counts come from the same degree-ordered-
+    * orientation wedge machinery as [[trianglesByMinVertex]] (every
+    * vertex's oriented out-degree is O(√m), so a celebrity hub
+    * generates O(m) wedges instead of O(deg²)), with each closed
+    * triangle crediting all three of its edges. Union size is
+    * deg(a) + deg(b) − common (degrees over the deduplicated
+    * undirected edge set). Output: (src, dst, jac) per canonical
+    * src < dst edge with at least one common neighbor. */
   def jaccardPerEdge(edges: DataFrame): DataFrame =
     jaccardPerEdge(edges, denseLocalMaxEdges)
 
@@ -313,60 +308,32 @@ object GraphAlgos {
   /** [[jaccardPerEdge]] over an ALREADY canonical pinned edge table
     * ([[canonicalUndirected]] contract; blocks never dropped here). */
   def jaccardPerEdgeCanon(und: DataFrame,
-      localMaxEdges: Long = denseLocalMaxEdges): DataFrame = {
-    if (und.count() <= localMaxEdges) {
-      import und.sparkSession.implicits._
-      val e = und.select(col("a"), col("b")).as[(Long, Long)].collect()
-      // |N(a) ∩ N(b)| never counts a or b themselves (no self-loops,
-      // so a ∉ N(a)); edges in no triangle are ABSENT, matching the
-      // distributed support inner-join. Spark's round() is HALF_UP on
-      // the double — mirror it exactly for hash parity. r20: on dense
-      // small graphs (≤ denseLocalMaxVerts) intersections run against
-      // packed bitmaps — Σ_e nv/64 word ops instead of Σ_e min(deg)
-      // boxed HashSet lookups (the saturated mod-300 fixture paid
-      // ~13M of those); the HashSet form remains for sparse id-spaces.
-      def jac(common: Int, da: Int, db: Int): Option[Double] =
-        if (common == 0) None
-        else Some(java.math.BigDecimal.valueOf(
-          common.toDouble / (da + db - common))
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
-      val nvSmall = e.flatMap(p => Seq(p._1, p._2)).distinct.length <=
-        denseLocalMaxVerts
-      val rows =
-        if (nvSmall) {
-          val (_, idx, adj) = denseAdjacency(e)
-          val deg = adj.map(_.map(java.lang.Long.bitCount).sum)
-          e.flatMap { case (a, b) =>
-            val ia = idx(a); val ib = idx(b)
-            jac(intersectCount(adj(ia), adj(ib)), deg(ia), deg(ib))
-              .map((a, b, _))
-          }
-        } else {
-          val adj = scala.collection.mutable.HashMap
-            .empty[Long, scala.collection.mutable.HashSet[Long]]
-          e.foreach { case (a, b) =>
-            adj.getOrElseUpdate(a, scala.collection.mutable.HashSet.empty) += b
-            adj.getOrElseUpdate(b, scala.collection.mutable.HashSet.empty) += a
-          }
-          e.flatMap { case (a, b) =>
-            val sa = adj(a); val sb = adj(b)
-            val (small, big) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
-            jac(small.count(big.contains), sa.size, sb.size).map((a, b, _))
-          }
-        }
-      return rows.toSeq.toDF("src", "dst", "jac")
+      localMaxEdges: Long = denseLocalMaxEdges): DataFrame =
+    Traversals.collectAtMost(und, localMaxEdges) match {
+      case Some(e) =>
+        import und.sparkSession.implicits._
+        // |N(a) ∩ N(b)| never counts a or b themselves (no self-loops,
+        // so a ∉ N(a)); edges in no triangle are ABSENT, matching the
+        // distributed support inner-join. Spark's round() is HALF_UP on
+        // the double — mirror it exactly for hash parity.
+        val common = commonNeighbours(e)
+        val deg = e.flatMap(p => Seq(p._1, p._2)).groupMapReduce(identity)(_ => 1)(_ + _)
+        e.flatMap { case (a, b) =>
+          val c = common(a, b, false)
+          Option.when(c > 0)((a, b, java.math.BigDecimal.valueOf(
+              c.toDouble / (deg(a) + deg(b) - c))
+            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()))
+        }.toSeq.toDF("src", "dst", "jac")
+      case None =>
+        val deg = canonicalDegrees(und)
+        orientedSupport(und, deg)
+          .join(und, Seq("a", "b")) // support keys are always real edges; keeps partition keys aligned
+          .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
+          .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
+          .select(col("a").as("src"), col("b").as("dst"),
+            round(col("common").cast("double")
+              / (col("da") + col("db") - col("common")), 4).as("jac"))
     }
-    val deg = und.select(col("a").as("v")).union(und.select(col("b")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    val support = orientedSupport(und, deg)
-    support
-      .join(und, Seq("a", "b")) // support keys are always real edges; keeps partition keys aligned
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(col("a").as("src"), col("b").as("dst"),
-        round(col("common").cast("double")
-          / (col("da") + col("db") - col("common")), 4).as("jac"))
-  }
 
   /** Triangle support per canonical undirected edge {a<b}:
     * |N(a) ∩ N(b)| over the given edge set, via the degree-ordered
@@ -375,7 +342,30 @@ object GraphAlgos {
     * O(deg²)). Input `und` must already be canonicalised (a<b),
     * deduped, and pinned; `deg` is its degree table. Edges in no
     * triangle are ABSENT from the output (inner closing join). */
-  private def orientedSupport(und: DataFrame, deg: DataFrame): DataFrame = {
+  private def orientedSupport(und: DataFrame, deg: DataFrame): DataFrame =
+    // every unordered pair inside a closed triangle (u, a, b) is an
+    // edge; explode the three canonical edges, count support per edge
+    closedTriangles(und, deg)
+      .select(explode(array(
+        struct(col("a"), col("b")),
+        struct(least(col("u"), col("a")).as("a"), greatest(col("u"), col("a")).as("b")),
+        struct(least(col("u"), col("b")).as("a"), greatest(col("u"), col("b")).as("b")))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("common"))
+
+  /** `(v, deg)` over a canonical edge table — each undirected edge
+    * counts once at both endpoints. */
+  private def canonicalDegrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("v")).union(und.select(col("b")))
+      .groupBy("v").agg(count(lit(1)).as("deg"))
+
+  /** Every triangle of a canonical edge table exactly once, as
+    * `(a, b, u)`: each edge is oriented from its lower-(degree, id)
+    * endpoint `u` to the higher one (pinned, since the wedge step
+    * self-joins it), two oriented edges sharing `u` form a wedge
+    * `(u, a < b)`, and a wedge closes when {a, b} is an edge. `deg` is
+    * [[canonicalDegrees]] of `und`. */
+  private def closedTriangles(und: DataFrame, deg: DataFrame): DataFrame = {
     val lower = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     val oriented = und
@@ -386,17 +376,23 @@ object GraphAlgos {
       .localCheckpoint(true)
     val wedges = oriented.select(col("u"), col("w").as("w1"))
       .join(oriented.select(col("u"), col("w").as("w2")), "u")
-      .where(col("w1") < col("w2"))
+      .where(col("w1") < col("w2")) // (w1, w2) is already canonical a < b
       .select(col("u"), col("w1").as("a"), col("w2").as("b"))
-    // closed triangles (u, a, b): every unordered pair inside is an
-    // edge; explode the three canonical edges, count support per edge
     wedges.join(und, Seq("a", "b"))
-      .select(explode(array(
-        struct(col("a"), col("b")),
-        struct(least(col("u"), col("a")).as("a"), greatest(col("u"), col("a")).as("b")),
-        struct(least(col("u"), col("b")).as("a"), greatest(col("u"), col("b")).as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("common"))
+  }
+
+  /** Codegree `(a, b, cn)` of every vertex pair {a<b} with ≥ 1 common
+    * neighbour in a canonical edge table: the wedge self-join of its
+    * mirrored form on the shared neighbour. */
+  private def codegrees(und: DataFrame): DataFrame = {
+    val sym = und.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("p"))
+      .select(col("p.src").as("src"), col("p.dst").as("dst"))
+    sym.as("p").join(sym.as("q"),
+        col("p.src") === col("q.src") && col("p.dst") < col("q.dst"))
+      .groupBy(col("p.dst").as("a"), col("q.dst").as("b"))
+      .agg(count(lit(1)).as("cn"))
   }
 
   /** Common-neighbour link prediction over an ALREADY canonical
@@ -417,14 +413,9 @@ object GraphAlgos {
       localMaxEdges: Long = denseLocalMaxEdges,
       localMaxVerts: Int = denseLocalMaxVerts): DataFrame = {
     import und.sparkSession.implicits._
-    if (und.count() <= localMaxEdges) {
-      val e = und.select(col("a"), col("b")).as[(Long, Long)].collect()
-      // vertex-count guard BEFORE the O(verts²/8)-byte bitmap build: a
-      // sparse in-gate graph can carry ~131k vertices, whose bitmaps
-      // would cost ~2 GB of driver heap just to discover the guard
-      // fails (r20 ADVICE)
-      if (e.flatMap(p => Seq(p._1, p._2)).distinct.length <= localMaxVerts) {
-        val (verts, _, adj) = denseAdjacency(e)
+    Traversals.collectAtMost(und, localMaxEdges)
+        .flatMap(denseAdjacency(_, localMaxVerts)) match {
+      case Some((verts, _, adj)) =>
         val deg = adj.map(_.map(java.lang.Long.bitCount(_).toLong).sum)
         val rows = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Long, Long, Long)]
@@ -441,26 +432,18 @@ object GraphAlgos {
           }
           ia += 1
         }
-        return rows.sortBy { case (a, b, cn, pa) => (-cn, -pa, a, b) }
+        rows.sortBy { case (a, b, cn, pa) => (-cn, -pa, a, b) }
           .take(topN).toSeq.toDF("a", "b", "cn", "pa")
-      }
+      case None =>
+        val deg = canonicalDegrees(und)
+        codegrees(und).join(und, Seq("a", "b"), "left_anti")
+          .join(broadcast(deg).as("da"), col("a") === col("da.v"))
+          .join(broadcast(deg).as("db"), col("b") === col("db.v"))
+          .select(col("a"), col("b"), col("cn"),
+            (col("da.deg") * col("db.deg")).as("pa"))
+          .orderBy(col("cn").desc, col("pa").desc, col("a"), col("b"))
+          .limit(topN)
     }
-    val sym = und.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-    val cn = sym.as("p").join(sym.as("q"),
-        col("p.src") === col("q.src") && col("p.dst") < col("q.dst"))
-      .groupBy(col("p.dst").as("a"), col("q.dst").as("b"))
-      .agg(count(lit(1)).as("cn"))
-    val deg = sym.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-    cn.join(und, Seq("a", "b"), "left_anti")
-      .join(broadcast(deg).as("da"), col("a") === col("da.v"))
-      .join(broadcast(deg).as("db"), col("b") === col("db.v"))
-      .select(col("a"), col("b"), col("cn"),
-        (col("da.deg") * col("db.deg")).as("pa"))
-      .orderBy(col("cn").desc, col("pa").desc, col("a"), col("b"))
-      .limit(topN)
   }
 
   /** Diagonal-pair square (4-cycle) counting over an ALREADY
@@ -476,11 +459,9 @@ object GraphAlgos {
       localMaxEdges: Long = denseLocalMaxEdges,
       localMaxVerts: Int = denseLocalMaxVerts): DataFrame = {
     import und.sparkSession.implicits._
-    if (und.count() <= localMaxEdges) {
-      val e = und.select(col("a"), col("b")).as[(Long, Long)].collect()
-      // same guard-before-allocation ordering as linkPredictionCanon
-      if (e.flatMap(p => Seq(p._1, p._2)).distinct.length <= localMaxVerts) {
-        val (verts, _, adj) = denseAdjacency(e)
+    Traversals.collectAtMost(und, localMaxEdges)
+        .flatMap(denseAdjacency(_, localMaxVerts)) match {
+      case Some((verts, _, adj)) =>
         val pairs = scala.collection.mutable.ArrayBuffer
           .empty[(Long, Long, Long, Long)]
         var ia = 0
@@ -495,26 +476,19 @@ object GraphAlgos {
           ia += 1
         }
         val total = pairs.map(_._4).sum / 2
-        return pairs.sortBy { case (a, b, _, nsq) => (-nsq, a, b) }
+        pairs.sortBy { case (a, b, _, nsq) => (-nsq, a, b) }
           .take(topN).toSeq
           .map { case (a, b, cn, nsq) => (a, b, cn, nsq, total) }
           .toDF("a", "b", "cn", "nsq", "total_squares")
-      }
+      case None =>
+        val sq = codegrees(und)
+          .withColumn("nsq", expr("cn * (cn - 1) DIV 2"))
+          .where(col("nsq") > 0)
+        val total = sq.agg(expr("sum(nsq) DIV 2").as("total_squares"))
+        sq.crossJoin(broadcast(total))
+          .orderBy(col("nsq").desc, col("a"), col("b")).limit(topN)
+          .select(col("a"), col("b"), col("cn"), col("nsq"), col("total_squares"))
     }
-    val sym = und.select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("p"))
-      .select(col("p.src").as("src"), col("p.dst").as("dst"))
-    val sq = sym.as("p").join(sym.as("q"),
-        col("p.src") === col("q.src") && col("p.dst") < col("q.dst"))
-      .groupBy(col("p.dst").as("a"), col("q.dst").as("b"))
-      .agg(count(lit(1)).as("cn"))
-      .withColumn("nsq", expr("cn * (cn - 1) DIV 2"))
-      .where(col("nsq") > 0)
-    val total = sq.agg(expr("sum(nsq) DIV 2").as("total_squares"))
-    sq.crossJoin(broadcast(total))
-      .orderBy(col("nsq").desc, col("a"), col("b")).limit(topN)
-      .select(col("a"), col("b"), col("cn"), col("nsq"), col("total_squares"))
   }
 
   /** Bounded k-truss peel (graph-mining edge analogue of k-core):
@@ -544,80 +518,60 @@ object GraphAlgos {
     // dense-small-graph fast path (r20): the same bounded-collect
     // contract as [[jaccardPerEdgeCanon]]/[[trianglesByMinVertexCanon]]
     // — per round, support is |N(a) ∩ N(b)| over the CURRENT edge set
-    // from driver-local adjacency sets, edges below k−2 peel by
-    // omission, survivors keep their last-round support. The measured
+    // ([[commonNeighbours]]), edges below k−2 peel by omission,
+    // survivors keep their last-round support. The measured
     // motivation: the headline 2-round peel's task time packs to
     // ~0.2 s while its wall read 3–7 s — per-round shuffle/barrier
-    // latency on a ≤ 45k-edge graph, not data work.
-    if (canonical.count() <= localMaxEdges) {
-      import canonical.sparkSession.implicits._
-      var e = canonical.select(col("a"), col("b")).as[(Long, Long)].collect()
-      if (ownsInput) Traversals.dropCheckpoint(canonical)
-      val sup = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-      val useBits = e.flatMap(p => Seq(p._1, p._2)).distinct.length <=
-        denseLocalMaxVerts
-      (1 to rounds).foreach { _ =>
-        sup.clear()
-        if (useBits) {
-          // packed-bitmap support: per edge, popcount of the
-          // endpoint rows' AND — the dense-fixture hot path (a
-          // saturated 300-vertex graph costs Σ_e nv/64 word ops per
-          // round; the HashSet form paid Σ_e min(deg) boxed lookups,
-          // ~13M/round on the mod-300 fixture — measured ~1 s of
-          // driver time this peel exists to remove)
-          val (_, idx, adj) = denseAdjacency(e)
+    // latency on a ≤ 45k-edge graph, not data work; and the packed
+    // bitmaps are its hot path (the HashSet form paid ~13M boxed
+    // lookups per round on the mod-300 fixture, ~1 s of driver time).
+    Traversals.collectAtMost(canonical, localMaxEdges) match {
+      case Some(collected) =>
+        import canonical.sparkSession.implicits._
+        if (ownsInput) Traversals.dropCheckpoint(canonical)
+        var e = collected
+        val sup = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        (1 to rounds).foreach { _ =>
+          sup.clear()
+          val common = commonNeighbours(e)
           e.foreach { case (a, b) =>
-            val common = intersectCount(adj(idx(a)), adj(idx(b))).toLong
-            if (common >= k - 2) sup((a, b)) = common
+            val c = common(a, b, false).toLong
+            if (c >= k - 2) sup((a, b)) = c
           }
-        } else {
-          val adj = scala.collection.mutable.HashMap
-            .empty[Long, scala.collection.mutable.HashSet[Long]]
-          e.foreach { case (a, b) =>
-            adj.getOrElseUpdate(a, scala.collection.mutable.HashSet.empty) += b
-            adj.getOrElseUpdate(b, scala.collection.mutable.HashSet.empty) += a
-          }
-          e.foreach { case (a, b) =>
-            val sa = adj(a); val sb = adj(b)
-            val (small, big) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
-            val common = small.count(big.contains).toLong
-            if (common >= k - 2) sup((a, b)) = common
-          }
+          e = e.filter(sup.contains)
         }
-        e = e.filter(sup.contains)
-      }
-      return e.toSeq.map { case (a, b) => (a, b, sup((a, b))) }
-        .toDF("src", "dst", "support")
+        e.toSeq.map { case (a, b) => (a, b, sup((a, b))) }
+          .toDF("src", "dst", "support")
+      case None =>
+        var und = canonical
+        var owned = ownsInput
+        var survivors: DataFrame = null
+        (1 to rounds).foreach { _ =>
+          // orientedSupport's keys are exactly the edges in >= 1
+          // triangle, so the threshold filter alone implements the peel:
+          // an edge ABSENT from the support table has support 0 < k-2
+          // (k >= 3 is required above) and is peeled by omission — no
+          // zero-fill left-join needed. ONE checkpoint per round
+          // materialises the surviving (edge, support) rows; the next
+          // round's edge set is a plain projection of it, and the final
+          // round IS the result.
+          val surv = orientedSupport(und, canonicalDegrees(und))
+            .where(col("common") >= k - 2)
+            .select(col("a"), col("b"), col("common").as("support"))
+            .localCheckpoint(true)
+          val prev = und
+          survivors = surv
+          und = surv.select("a", "b")
+          // prev's blocks are superseded (surv is materialised); drop
+          // them eagerly rather than waiting on the ContextCleaner — but
+          // never drop a caller-owned (memoized) input table
+          if (owned)
+            Traversals.dropCheckpoint(prev,
+              keep = Traversals.checkpointRddIds(surv))
+          owned = true
+        }
+        survivors.select(col("a").as("src"), col("b").as("dst"), col("support"))
     }
-    var und = canonical
-    var owned = ownsInput
-    var survivors: DataFrame = null
-    (1 to rounds).foreach { _ =>
-      val deg = und.select(col("a").as("v")).union(und.select(col("b")))
-        .groupBy("v").agg(count(lit(1)).as("deg"))
-      // orientedSupport's keys are exactly the edges in >= 1 triangle,
-      // so the threshold filter alone implements the peel: an edge
-      // ABSENT from the support table has support 0 < k-2 (k >= 3 is
-      // required above) and is peeled by omission — no zero-fill
-      // left-join needed. ONE checkpoint per round materialises the
-      // surviving (edge, support) rows; the next round's edge set is a
-      // plain projection of it, and the final round IS the result.
-      val surv = orientedSupport(und, deg)
-        .where(col("common") >= k - 2)
-        .select(col("a"), col("b"), col("common").as("support"))
-        .localCheckpoint(true)
-      val prev = und
-      survivors = surv
-      und = surv.select("a", "b")
-      // prev's blocks are superseded (surv is materialised); drop them
-      // eagerly rather than waiting on the ContextCleaner — but never
-      // drop a caller-owned (memoized) input table
-      if (owned)
-        Traversals.dropCheckpoint(prev,
-          keep = Traversals.checkpointRddIds(surv))
-      owned = true
-    }
-    survivors.select(col("a").as("src"), col("b").as("dst"), col("support"))
   }
 
   /** Bounded greedy maximal-matching rounds — the edge-side sibling of
@@ -644,55 +598,57 @@ object GraphAlgos {
     // the identical "match|a|b" strings, compared as the same
     // lowercase-hex lexicographic order Spark and DuckDB compare —
     // round-for-round equal winner sets.
-    if (canonical.count() <= localMaxEdges) {
-      import canonical.sparkSession.implicits._
-      var e = canonical.select(col("a"), col("b")).as[(Long, Long)].collect()
-      val h = e.map(p => p -> md5Hex(s"match|${p._1}|${p._2}")).toMap
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      (1 to rounds).foreach { r =>
-        val vmin = scala.collection.mutable.HashMap.empty[Long, String]
-        e.foreach { p =>
-          val hp = h(p)
-          if (vmin.get(p._1).forall(hp < _)) vmin(p._1) = hp
-          if (vmin.get(p._2).forall(hp < _)) vmin(p._2) = hp
+    Traversals.collectAtMost(canonical, localMaxEdges) match {
+      case Some(collected) =>
+        import canonical.sparkSession.implicits._
+        var e = collected
+        val h = e.map(p => p -> md5Hex(s"match|${p._1}|${p._2}")).toMap
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+        (1 to rounds).foreach { r =>
+          val vmin = scala.collection.mutable.HashMap.empty[Long, String]
+          e.foreach { p =>
+            val hp = h(p)
+            if (vmin.get(p._1).forall(hp < _)) vmin(p._1) = hp
+            if (vmin.get(p._2).forall(hp < _)) vmin(p._2) = hp
+          }
+          val win = e.filter(p => h(p) == vmin(p._1) && h(p) == vmin(p._2))
+          win.foreach(p => out += ((p._1, p._2, r.toLong)))
+          val matched = win.flatMap(p => Seq(p._1, p._2)).toSet
+          e = e.filter(p => !matched(p._1) && !matched(p._2))
         }
-        val win = e.filter(p => h(p) == vmin(p._1) && h(p) == vmin(p._2))
-        win.foreach(p => out += ((p._1, p._2, r.toLong)))
-        val matched = win.flatMap(p => Seq(p._1, p._2)).toSet
-        e = e.filter(p => !matched(p._1) && !matched(p._2))
-      }
-      return out.toSeq.toDF("a", "b", "round")
+        out.toSeq.toDF("a", "b", "round")
+      case None =>
+        var und = canonical
+        var owned = false
+        var out: DataFrame = null
+        (1 to rounds).foreach { r =>
+          val withH = und.withColumn("h",
+            md5(concat(lit("match|"), col("a").cast("string"),
+              lit("|"), col("b").cast("string"))))
+          val vmin = withH.select(col("a").as("v"), col("h"))
+            .union(withH.select(col("b"), col("h")))
+            .groupBy("v").agg(min(col("h")).as("vmin"))
+          val win = withH
+            .join(vmin.select(col("v").as("va"), col("vmin").as("mina")), col("a") === col("va"))
+            .join(vmin.select(col("v").as("vb"), col("vmin").as("minb")), col("b") === col("vb"))
+            .where(col("h") === col("mina") && col("h") === col("minb"))
+            .select(col("a"), col("b"), lit(r.toLong).as("round"))
+            .localCheckpoint(true)
+          out = if (out == null) win else out.union(win)
+          val matched = win.select(col("a").as("v"))
+            .union(win.select(col("b"))).distinct()
+          val prev = und
+          und = prev
+            .join(matched.select(col("v").as("ma")), prev("a") === col("ma"), "left_anti")
+            .join(matched.select(col("v").as("mb")), prev("b") === col("mb"), "left_anti")
+            .select(prev("a"), prev("b")).localCheckpoint(true)
+          if (owned)
+            Traversals.dropCheckpoint(prev,
+              keep = Traversals.checkpointRddIds(und) ++ Traversals.checkpointRddIds(win))
+          owned = true
+        }
+        out
     }
-    var und = canonical
-    var owned = false
-    var out: DataFrame = null
-    (1 to rounds).foreach { r =>
-      val withH = und.withColumn("h",
-        md5(concat(lit("match|"), col("a").cast("string"),
-          lit("|"), col("b").cast("string"))))
-      val vmin = withH.select(col("a").as("v"), col("h"))
-        .union(withH.select(col("b"), col("h")))
-        .groupBy("v").agg(min(col("h")).as("vmin"))
-      val win = withH
-        .join(vmin.select(col("v").as("va"), col("vmin").as("mina")), col("a") === col("va"))
-        .join(vmin.select(col("v").as("vb"), col("vmin").as("minb")), col("b") === col("vb"))
-        .where(col("h") === col("mina") && col("h") === col("minb"))
-        .select(col("a"), col("b"), lit(r.toLong).as("round"))
-        .localCheckpoint(true)
-      out = if (out == null) win else out.union(win)
-      val matched = win.select(col("a").as("v"))
-        .union(win.select(col("b"))).distinct()
-      val prev = und
-      und = prev
-        .join(matched.select(col("v").as("ma")), prev("a") === col("ma"), "left_anti")
-        .join(matched.select(col("v").as("mb")), prev("b") === col("mb"), "left_anti")
-        .select(prev("a"), prev("b")).localCheckpoint(true)
-      if (owned)
-        Traversals.dropCheckpoint(prev,
-          keep = Traversals.checkpointRddIds(und) ++ Traversals.checkpointRddIds(win))
-      owned = true
-    }
-    out
   }
 
   /** In/out degree per vertex. */

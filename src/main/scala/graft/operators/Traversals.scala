@@ -92,16 +92,23 @@ object Traversals {
   private def castEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long"), col("dst").cast("long"))
 
-  /** Every row of a cast `(src, dst)` edge table on the driver when it
-    * has at most `max` rows, else None: the one bounded collect behind
-    * each local-or-distributed choice below. A `limit(max + 1)` collect
-    * is one job on a one-partition input (a `count()` then `collect()`
-    * ran the plan twice), and the limit is the guard: at most `max + 1`
-    * rows are fetched whatever the table's size, so the check never
-    * follows an unbounded allocation. `limit` takes an Int; a bound at
-    * or past `Int.MaxValue` fetches up to `Int.MaxValue` rows, the most
-    * one driver array can hold. */
-  private def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] = {
+  /** Every row of a two-column Long edge table (`(src, dst)`, or a
+    * canonical `(a, b)`) on the driver when it has at most `max` rows,
+    * else None: the one bounded collect behind the local-or-distributed
+    * choice of every dual-path graph operator here and in
+    * [[GraphAlgos]]. The limit is the guard: at most `max + 1` rows are
+    * fetched whatever the table's size, so the check never follows an
+    * unbounded allocation. A `count()` then `collect()` ran the plan
+    * twice, and the count's aggregate is itself a shuffle; the
+    * `limit(max + 1)` collect is one job on a one-partition input (a
+    * checkpoint, or a shuffle output that adaptive execution coalesced).
+    * It scans partitions incrementally, so without that coalescing a
+    * many-partition input can cost more jobs than the count did
+    * (adaptive execution is Spark's default, and no session in this
+    * project turns it off). `limit` takes an Int; a bound at or past
+    * `Int.MaxValue` fetches up to `Int.MaxValue` rows, the most one
+    * driver array can hold. */
+  private[operators] def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] = {
     val spark = edges.sparkSession
     import spark.implicits._
     val fetch = if (max >= Int.MaxValue) Int.MaxValue else (max max -1L).toInt + 1
@@ -128,10 +135,6 @@ object Traversals {
     lvl.toSeq
   }
 
-  /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
-    * reachable from `start` (start itself at level 0). Level = shortest
-    * hop distance, because a vertex joins the visited set the first
-    * level it is reached. */
   /** Frontier rows below this bound are broadcast to the edge side;
     * above it the superstep falls back to a shuffle hash join against
     * the (persisted, src-partitioned) edges — force-broadcasting an
@@ -139,6 +142,10 @@ object Traversals {
     * executor. */
   val broadcastFrontierMax: Long = 500000L
 
+  /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
+    * reachable from `start` (start itself at level 0). Level = shortest
+    * hop distance, because a vertex joins the visited set the first
+    * level it is reached. */
   def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = 10000): DataFrame = {
     // Materialise the (possibly derived/unioned) edge table ONCE,
     // hash-partitioned by src so non-broadcast supersteps reuse the
@@ -673,22 +680,22 @@ object Traversals {
     // bit-identical. Measured motivation: packed task time ~0.05 s
     // under a 3.3-3.5 s wall — ~30 reduction-round barriers on a
     // ≤ 22k-edge memoized fixture.
-    val eCastL = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    if (eCastL.count() <= localMaxEdges) {
-      val raw = eCastL.as[(Long, Long)].collect()
-      val reduced = localReducedAdjacency(raw, start)
-      // honour the refusal contract: the distributed path decides on
-      // the adjacency AFTER its certain-parent/ancestor reductions, so
-      // when the r13-reduced set alone exceeds the cap, fall through
-      // (the deeper reductions may still fit it; a local refusal here
-      // would fire where the old path succeeded)
-      if (reduced.length <= maxResidualEdges) {
-        val classes = localLeafClasses(raw, start)
-        val leaves = replayDfsLeaves(reduced, start).toSet
-        return classes.map { case (v, cls) =>
-          (v, cls, if (leaves(v)) "leaf" else "internal")
-        }.toDF("vertex", "cls_rule", "cls_final")
-      }
+    collectAtMost(castEdges(edges), localMaxEdges) match {
+      case Some(raw) =>
+        val reduced = localReducedAdjacency(raw, start)
+        // honour the refusal contract: the distributed path decides on
+        // the adjacency AFTER its certain-parent/ancestor reductions, so
+        // when the r13-reduced set alone exceeds the cap, fall through
+        // (the deeper reductions may still fit it; a local refusal here
+        // would fire where the old path succeeded)
+        if (reduced.length <= maxResidualEdges) {
+          val classes = localLeafClasses(raw, start)
+          val leaves = replayDfsLeaves(reduced, start).toSet
+          return classes.map { case (v, cls) =>
+            (v, cls, if (leaves(v)) "leaf" else "internal")
+          }.toDF("vertex", "cls_rule", "cls_final")
+        }
+      case None =>
     }
     val classes = dfsLeafClasses(edges, start)
     val nUndecided = classes.where(col("cls") === "undecided").count()
@@ -1301,6 +1308,11 @@ object Traversals {
     r
   }
 
+  /** `2 * n`, saturated at `Long.MaxValue`: the symmetric-row bound of
+    * the operators whose `localMaxEdges` counts undirected edges. */
+  private def doubled(n: Long): Long =
+    if (n > Long.MaxValue / 2) Long.MaxValue else (n max -1L) * 2
+
   /** Symmetrize a directed edge list in ONE pass over the (possibly
     * derived) source: explode each row into both directions, then
     * dedup. union(e, e.reversed) would execute the upstream plan once
@@ -1313,15 +1325,6 @@ object Traversals {
         struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst")).distinct()
 
-  /** k-core decomposition by iterative peeling: repeatedly drop
-    * vertices whose (undirected) degree is below `k` until the edge set
-    * is stable; returns the vertices of the k-core — the maximal
-    * subgraph where every vertex keeps degree ≥ k. Each peel round is
-    * one degree hash-agg plus two semi-join-shaped filters, all keyed
-    * on vertex id (same partitioning reused), so a round costs O(|E|)
-    * shuffled once; rounds = peel depth (bounded by the degeneracy
-    * ordering, usually shallow on real graphs). Input `(src, dst)`
-    * directed pairs, treated as undirected. Output `(vertex: Long)`. */
   /** Bounded Luby maximal-independent-set rounds (Luby 1986) — the
     * classic symmetry-breaking primitive distributed graph systems are
     * built on (coloring, scheduling, parallel matching all reduce to
@@ -1352,39 +1355,38 @@ object Traversals {
     // GraphAlgos.md5Hex ≡ Spark md5() byte-for-byte; the early break
     // matches the distributed early exit (later rounds emit no rows).
     val e0 = symmetrize(edges.where(col("src") =!= col("dst"))).checkpointSized()
-    // gate on the CANONICAL edge count (symmetric rows / 2) and
-    // collect only the src < dst half, mirroring locally — the
-    // 64k × 16 B bounded-collect contract holds while a saturated
-    // modulus fixture (~90k symmetric rows at sf0.1) still qualifies
-    if (e0.count() <= 2 * localMaxEdges) {
-      import e0.sparkSession.implicits._
-      var eL = e0.where(col("src") < col("dst"))
-        .select(col("src"), col("dst")).as[(Long, Long)].collect()
-        .flatMap(p => Array(p, (p._2, p._1)))
-      dropCheckpoint(e0)
-      val priL = scala.collection.mutable.HashMap.empty[Long, String]
-      def p(v: Long): String =
-        priL.getOrElseUpdate(v, GraphAlgos.md5Hex(s"mis|$v"))
-      var live = eL.map(_._1).toSet
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      var r = 1
-      while (r <= rounds && (live.nonEmpty || eL.nonEmpty)) {
-        val nmin = scala.collection.mutable.HashMap.empty[Long, String]
-        eL.foreach { case (s0, d0) =>
-          val pd = p(d0)
-          if (nmin.get(s0).forall(pd < _)) nmin(s0) = pd
+    // bound the CANONICAL edge count (symmetric rows / 2) by
+    // localMaxEdges — a saturated modulus fixture (~90k symmetric rows
+    // at sf0.1) still qualifies
+    collectAtMost(e0, doubled(localMaxEdges)) match {
+      case Some(sym) =>
+        import e0.sparkSession.implicits._
+        dropCheckpoint(e0)
+        var eL = sym
+        val priL = scala.collection.mutable.HashMap.empty[Long, String]
+        def p(v: Long): String =
+          priL.getOrElseUpdate(v, GraphAlgos.md5Hex(s"mis|$v"))
+        var live = eL.map(_._1).toSet
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        var r = 1
+        while (r <= rounds && (live.nonEmpty || eL.nonEmpty)) {
+          val nmin = scala.collection.mutable.HashMap.empty[Long, String]
+          eL.foreach { case (s0, d0) =>
+            val pd = p(d0)
+            if (nmin.get(s0).forall(pd < _)) nmin(s0) = pd
+          }
+          val winE = nmin.collect { case (v, nm) if p(v) < nm => v }.toSet
+          val srcs = eL.map(_._1).toSet
+          val winI = live.filterNot(srcs.contains)
+          val win = winE ++ winI
+          win.foreach(v => out += ((v, r.toLong)))
+          val dead = win ++ eL.collect { case (s0, d0) if winE(s0) => d0 }
+          eL = eL.filter(pr => !dead(pr._1) && !dead(pr._2))
+          live = live -- dead
+          r += 1
         }
-        val winE = nmin.collect { case (v, nm) if p(v) < nm => v }.toSet
-        val srcs = eL.map(_._1).toSet
-        val winI = live.filterNot(srcs.contains)
-        val win = winE ++ winI
-        win.foreach(v => out += ((v, r.toLong)))
-        val dead = win ++ eL.collect { case (s0, d0) if winE(s0) => d0 }
-        eL = eL.filter(pr => !dead(pr._1) && !dead(pr._2))
-        live = live -- dead
-        r += 1
-      }
-      return out.toSeq.toDF("vertex", "round")
+        return out.toSeq.toDF("vertex", "round")
+      case None =>
     }
     var e = e0
     var lv = e.select(col("src").as("vertex")).distinct().checkpointSized()
@@ -1420,6 +1422,15 @@ object Traversals {
     out
   }
 
+  /** k-core decomposition by iterative peeling: repeatedly drop
+    * vertices whose (undirected) degree is below `k` until the edge set
+    * is stable; returns the vertices of the k-core — the maximal
+    * subgraph where every vertex keeps degree ≥ k. Each peel round is
+    * one degree hash-agg plus two semi-join-shaped filters, all keyed
+    * on vertex id (same partitioning reused), so a round costs O(|E|)
+    * shuffled once; rounds = peel depth (bounded by the degeneracy
+    * ordering, usually shallow on real graphs). Input `(src, dst)`
+    * directed pairs, treated as undirected. Output `(vertex: Long)`. */
   def kcore(edges: DataFrame, k: Int, maxIters: Int = 10000): DataFrame = {
     // self-loops don't count toward coreness
     var cur = symmetrize(edges.where(col("src") =!= col("dst")))
@@ -1455,7 +1466,7 @@ object Traversals {
     * component = min vertex id; edges treated as undirected. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 10000,
                           jumps: Int = 2,
-                          localMaxEdges: Long = 65536L): DataFrame = {
+                          localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     val sym = symmetrize(edges)
       .persist(StorageLevel.MEMORY_AND_DISK) // reused every round
     // Small-graph fast path (same bounded-collect contract as
@@ -1463,22 +1474,19 @@ object Traversals {
     // superstep BARRIERS, which dominate data work by 100x on
     // fixture-sized graphs (q_graph_cc's 20-edge chains measured
     // ~1.5 s of pure scheduling). Union-find on the driver emits the
-    // identical (vertex, min-id component) labels. The count also
-    // materialises the persisted edge cache the distributed first
-    // round would otherwise pay. CC's own bound is 64k (vs BFS's 16k
-    // reference-envelope bound): union-find's collect is a flat edge
-    // array (64k x 16 B = 1 MB, trivially driver-safe), and r13's
-    // q_er_cluster measured the cliff directly — its 30.7k-edge match
-    // graph paid 6.4 s of pointer-jump barriers for work union-find
-    // does in microseconds. Graphs that GROW with the data (cc_big's
-    // 600k+, any 100 TB input) stay on the distributed loop.
-    if (sym.count() <= localMaxEdges) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = sym.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-      sym.unpersist(blocking = false)
-      return unionFindComponents(spark, es)
+    // identical (vertex, min-id component) labels. CC's own bound is
+    // 64k (vs BFS's 16k reference-envelope bound): union-find's
+    // collect is a flat edge array (64k x 16 B = 1 MB, trivially
+    // driver-safe), and r13's q_er_cluster measured the cliff directly
+    // — its 30.7k-edge match graph paid 6.4 s of pointer-jump barriers
+    // for work union-find does in microseconds. Graphs that GROW with
+    // the data (cc_big's 600k+, any 100 TB input) stay on the
+    // distributed loop.
+    collectAtMost(sym, localMaxEdges) match {
+      case Some(es) =>
+        sym.unpersist(blocking = false)
+        return unionFindComponents(edges.sparkSession, es)
+      case None =>
     }
     // Fused first round: with identity labels, round 1's neighbour-min
     // join degenerates to component := min(v, min of in-neighbours) —
@@ -1579,7 +1587,7 @@ object Traversals {
     * density regime DBSCAN core graphs live in. */
   def contractedComponents(edges: DataFrame, rounds: Int = 2,
                            maxIters: Int = 10000, jumps: Int = 2,
-                           localMaxEdges: Long = 65536L): DataFrame = {
+                           localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     var cur = symmetrize(edges).checkpointSized() // (src, dst), both orders
     // below the union-find collect bound, contraction is pure overhead
     // (two agg+join rounds to shrink a graph union-find already eats
@@ -1587,13 +1595,11 @@ object Traversals {
     // fixture); collect the already-materialized checkpoint straight
     // into the shared union-find — same cost profile as the plain
     // loop's small path, not a re-symmetrizing delegation
-    if (cur.count() <= localMaxEdges) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val es = cur.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-      dropCheckpoint(cur)
-      return unionFindComponents(spark, es)
+    collectAtMost(cur, localMaxEdges) match {
+      case Some(es) =>
+        dropCheckpoint(cur)
+        return unionFindComponents(edges.sparkSession, es)
+      case None =>
     }
     // vertex -> current quotient label, composed across rounds
     var map: DataFrame = null
@@ -1711,22 +1717,13 @@ object Traversals {
       // per-superstep scheduling latency dwarfs the work, and the
       // seed set is bounded by the vertex count, so both collects are
       // trivially bounded. Identical output set.
-      if (e.count() <= bfsLocalMaxEdges) {
-        val spark = e.sparkSession
-        import spark.implicits._
-        val adj = e.select(col("src").cast("long"), col("dst").cast("long"))
-          .as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (a, xs) => a -> xs.map(_._2) }
-        val sd = seeds.select(col("vertex").cast("long")).as[Long]
-          .collect().distinct
-        val seen = scala.collection.mutable.LinkedHashSet[Long](sd: _*)
-        var frontier: Seq[Long] = sd.toSeq
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-            .distinct.filterNot(seen.contains)
-          seen ++= frontier
-        }
-        return seen.toSeq.toDF("vertex")
+      collectAtMost(e, bfsLocalMaxEdges) match {
+        case Some(raw) =>
+          val spark = e.sparkSession
+          import spark.implicits._
+          val sd = seeds.select(col("vertex").cast("long")).as[Long].collect()
+          return localLevels(raw, sd.toSeq, Int.MaxValue).map(_._1).toDF("vertex")
+        case None =>
       }
       var visited = seeds.select(col("vertex").cast("long").as("vertex"))
         .distinct().checkpointSized()
@@ -1842,12 +1839,14 @@ object Traversals {
       col("dst").cast("long").as("dst"))
     // Tiny-graph fast path (the BFS/CC localMaxEdges contract): below
     // the bound, each FW-BW peel round's fixed job latency dwarfs the
-    // work. Identical output (vertex, min-member component).
-    if (localMaxEdges > 0 && e0.count() <= localMaxEdges) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return localTarjanScc(e0.as[(Long, Long)].collect())
-        .toDF("vertex", "component")
+    // work. Identical output (vertex, min-member component). A bound
+    // of 0 forces the peel even on an empty graph.
+    if (localMaxEdges > 0) collectAtMost(e0, localMaxEdges) match {
+      case Some(raw) =>
+        val spark = edges.sparkSession
+        import spark.implicits._
+        return localTarjanScc(raw).toDF("vertex", "component")
+      case None =>
     }
     var e = e0.where(col("src") =!= col("dst")).distinct()
       .checkpointSized()
@@ -1921,29 +1920,28 @@ object Traversals {
       localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     val sym = symmetrize(edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // dense-small-graph fast path (r20, the lubyMis gate shape:
-    // canonical-half collect within the 64k × 16 B contract, local
-    // mirror): synchronous rounds of "most-frequent neighbour label,
-    // ties to the smallest" are exact integer counting — identical
-    // label tables to the fused DataFrame rounds.
-    if (sym.count() <= 2 * localMaxEdges) {
-      val spark = sym.sparkSession
-      import spark.implicits._
-      val eL = sym.where(col("src") <= col("dst"))
-        .select(col("src"), col("dst")).as[(Long, Long)].collect()
-        .flatMap(p => if (p._1 == p._2) Array(p) else Array(p, (p._2, p._1)))
-      sym.unpersist(blocking = false)
-      val inc = eL.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-      var lab: Map[Long, Long] = eL.map(_._1).distinct.map(v => v -> v).toMap
-      (1 to iters).foreach { _ =>
-        lab = inc.map { case (v, srcs) =>
-          val cnt = srcs.groupBy(lab).view.mapValues(_.length)
-          v -> cnt.toSeq.sortWith { case ((l1, c1), (l2, c2)) =>
-            if (c1 != c2) c1 > c2 else l1 < l2
-          }.head._1
+    // dense-small-graph fast path (r20, the lubyMis bound: at most
+    // 2 × localMaxEdges symmetric rows): synchronous rounds of
+    // "most-frequent neighbour label, ties to the smallest" are exact
+    // integer counting — identical label tables to the fused
+    // DataFrame rounds.
+    collectAtMost(sym, doubled(localMaxEdges)) match {
+      case Some(eL) =>
+        val spark = sym.sparkSession
+        import spark.implicits._
+        sym.unpersist(blocking = false)
+        val inc = eL.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+        var lab: Map[Long, Long] = eL.map(_._1).distinct.map(v => v -> v).toMap
+        (1 to iters).foreach { _ =>
+          lab = inc.map { case (v, srcs) =>
+            val cnt = srcs.groupBy(lab).view.mapValues(_.length)
+            v -> cnt.toSeq.sortWith { case ((l1, c1), (l2, c2)) =>
+              if (c1 != c2) c1 > c2 else l1 < l2
+            }.head._1
+          }
         }
-      }
-      return lab.toSeq.toDF("vertex", "label")
+        return lab.toSeq.toDF("vertex", "label")
+      case None =>
     }
     var labels = sym.select(col("src").as("vertex")).distinct()
       .withColumn("label", col("vertex"))

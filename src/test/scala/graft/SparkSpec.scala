@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.core.Filter
+import org.apache.logging.log4j.core.filter.RegexFilter
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +19,18 @@ object TestSpark {
       .config("spark.graphx.pregel.checkpointInterval", "25")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // every dropCheckpoint unpersists a localCheckpoint on purpose, and
+    // RDD.unpersist warns each time that its lineage is truncated
+    // (hundreds of lines a run); deny exactly that message so the
+    // warnings that matter stay visible
+    val logs = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+    val lineageWarning = RegexFilter.createFilter(
+      ".*was locally checkpointed, its lineage has been truncated.*", null, false,
+      Filter.Result.DENY, Filter.Result.NEUTRAL)
+    lineageWarning.start()
+    logs.getConfiguration.addFilter(lineageWarning)
+    logs.updateLoggers()
     s
   }
   val sfDir = "/root/testdata/sf0.001"

@@ -150,6 +150,100 @@ class TraversalSpec extends SparkSpec {
     assert(windows.nonEmpty && windows.forall(_.partitionSpec.nonEmpty), windows.mkString("\n"))
   }
 
+  /** The triangle-rich fixture of GraphAlgosSpec: every a < b below
+    * 30 with (a + b) % 3 == 0, 145 edges. */
+  def triangleRich: DataFrame = {
+    import spark.implicits._
+    (for {
+      a <- 0L until 30L; b <- (a + 1) until 30L if (a + b) % 3 == 0
+    } yield (a, b)).toDF("src", "dst")
+  }
+
+  test("job-count pins: each dual-path graph operator's local path on a 30-vertex graph") {
+    import spark.implicits._
+    import graft.operators.GraphAlgos
+    // checkpointed as a derived edge table is, and its canonical form
+    // for the *Canon operators
+    val e = triangleRich.localCheckpoint(true)
+    val und = GraphAlgos.canonicalUndirected(e)
+    val seeds = Seq(0L).toDF("vertex")
+    // the jobs of one call plus a collect of its result: the one
+    // bounded collect, plus the staging an operator does before it
+    // (lubyMis and contractedComponents checkpoint the symmetrised
+    // edges, connectedComponents and labelPropagation cache them,
+    // reachableFrom caches the cast edges). The collect is one job on
+    // a one-partition input (the canonical table, a coalesced shuffle
+    // output) and two on the 4-partition fixture (the limit scans one
+    // partition, then the rest).
+    val pins: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("trianglesByMinVertexCanon", () => GraphAlgos.trianglesByMinVertexCanon(und), 1),
+      ("jaccardPerEdgeCanon", () => GraphAlgos.jaccardPerEdgeCanon(und), 1),
+      ("linkPredictionCanon", () => GraphAlgos.linkPredictionCanon(und, topN = 10), 1),
+      ("squareDiagTop", () => GraphAlgos.squareDiagTop(und, topN = 10), 1),
+      ("trussPeelCanon", () => GraphAlgos.trussPeelCanon(und, k = 3, rounds = 2), 1),
+      ("greedyMatchingCanon", () => GraphAlgos.greedyMatchingCanon(und, rounds = 2), 1),
+      ("dfsLeafResidual", () => Traversals.dfsLeafResidual(e, 0L), 2),
+      ("lubyMis", () => Traversals.lubyMis(e, rounds = 2), 3),
+      ("connectedComponents", () => Traversals.connectedComponents(e), 3),
+      ("contractedComponents", () => Traversals.contractedComponents(e), 3),
+      ("reachableFrom", () => Traversals.reachableFrom(e, seeds), 2),
+      ("stronglyConnectedComponents", () => Traversals.stronglyConnectedComponents(e), 2),
+      ("labelPropagation", () => Traversals.labelPropagation(e), 3))
+    val got = pins.map { case (name, op, _) =>
+      val (rows, jobs) = jobsOf(op().collect())
+      assert(rows.nonEmpty, name)
+      name -> jobs
+    }
+    assert(got === pins.map { case (name, _, jobs) => name -> jobs })
+  }
+
+  test("a Long.MaxValue bound takes the local path of lubyMis and labelPropagation") {
+    // the bound doubles to count symmetric rows; doubling Long.MaxValue
+    // must saturate, not wrap negative and force the distributed path
+    val e = triangleRich
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSet
+    val (mis, misJobs) = jobsOf(rows(Traversals.lubyMis(e, rounds = 3)))
+    val (misMax, misMaxJobs) = jobsOf(rows(Traversals.lubyMis(e, rounds = 3,
+      localMaxEdges = Long.MaxValue)))
+    assert(misMax === mis && misMaxJobs === misJobs)
+    val (lpa, lpaJobs) = jobsOf(rows(Traversals.labelPropagation(e, iters = 2)))
+    val (lpaMax, lpaMaxJobs) = jobsOf(rows(Traversals.labelPropagation(e, iters = 2,
+      localMaxEdges = Long.MaxValue)))
+    assert(lpaMax === lpa && lpaMaxJobs === lpaJobs)
+  }
+
+  test("reachableFrom: distributed just above bfsLocalMaxEdges, local just below, " +
+    "both equal plain reachability") {
+    import spark.implicits._
+    // a dense random digraph (a few supersteps deep) plus a component
+    // the seeds never reach
+    val rnd = new scala.util.Random(11L)
+    val bound = Traversals.bfsLocalMaxEdges.toInt
+    val above = Seq.fill(bound + 16)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong)) ++
+      Seq((5000L, 5001L), (5001L, 5002L), (5002L, 5000L), (5002L, 7L))
+    val below = above.drop(32)
+    val seeds = Seq(0L, 1L).toDF("vertex")
+    def reference(es: Seq[(Long, Long)]): Set[Long] = {
+      val adj = es.groupMap(_._1)(_._2)
+      var seen = Set(0L, 1L)
+      var frontier = seen
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+        seen ++= frontier
+      }
+      seen
+    }
+    def reach(es: Seq[(Long, Long)]) = jobsOf(
+      Traversals.reachableFrom(es.toDF("src", "dst"), seeds)
+        .collect().map(_.getLong(0)).toSet)
+    val (dist, distJobs) = reach(above)
+    val (local, localJobs) = reach(below)
+    assert(above.length > bound && below.length < bound)
+    assert(dist === reference(above) && !dist.contains(5000L))
+    assert(local === reference(below) && !local.contains(5000L))
+    assert(distJobs > localJobs, s"distributed $distJobs jobs, local $localJobs")
+  }
+
   test("replay bound is exact on both paths; an unbounded replay runs; an absent graph fails to load") {
     // G7 from 0 reduces to 10 replay edges: its 12 minus the 2 into the start
     Seq(graft.operators.GraphAlgos.denseLocalMaxEdges, 0L).foreach { local =>
