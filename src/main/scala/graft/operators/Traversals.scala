@@ -38,20 +38,6 @@ object Traversals {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }.toSet
 
-  /** Drop the storage blocks behind a SUPERSEDED eager
-    * `localCheckpoint`. Every iterative operator here re-checkpoints
-    * its state table per superstep; without an explicit drop the
-    * superseded blocks linger until the ContextCleaner's next GC
-    * cycle, so a k-superstep run holds k copies of the state table in
-    * block storage — harmless at test SF, but at 100 TB (or in a
-    * long bench/verify session on a small heap) that accumulation
-    * evicts useful blocks and forces execution-memory spills. Only
-    * call on checkpoints wholly replaced by an already-materialised
-    * successor (`eager = true`): unpersisting a localCheckpoint a
-    * live plan still reads would be unrecoverable (lineage is
-    * truncated). `keep` exempts blocks shared with a still-live
-    * DataFrame (e.g. BFS's current frontier inside the old visited
-    * union). */
   /** Eager localCheckpoint + stats reset ([[graftshim.Bridge
     * .resetCheckpointStats]]): `Dataset.localCheckpoint` inherits the
     * pre-checkpoint size ESTIMATE, and the size-only estimator
@@ -67,6 +53,20 @@ object Traversals {
         df.localCheckpoint(eager = true))
   }
 
+  /** Drop the storage blocks behind a SUPERSEDED eager
+    * `localCheckpoint`. Every iterative operator here re-checkpoints
+    * its state table per superstep; without an explicit drop the
+    * superseded blocks linger until the ContextCleaner's next GC
+    * cycle, so a k-superstep run holds k copies of the state table in
+    * block storage — harmless at test SF, but at 100 TB (or in a
+    * long bench/verify session on a small heap) that accumulation
+    * evicts useful blocks and forces execution-memory spills. Only
+    * call on checkpoints wholly replaced by an already-materialised
+    * successor (`eager = true`): unpersisting a localCheckpoint a
+    * live plan still reads would be unrecoverable (lineage is
+    * truncated). `keep` exempts blocks shared with a still-live
+    * DataFrame (e.g. BFS's current frontier inside the old visited
+    * union). */
   private[graft] def dropCheckpoint(df: DataFrame, keep: Set[Int] = Set.empty): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD
@@ -118,7 +118,9 @@ object Traversals {
 
   /** Driver-local twin of the level loop over a collected edge array:
     * `(vertex, min-hop level)` for every vertex reachable from `starts`
-    * within `maxLevels` levels. */
+    * within `maxLevels` levels. The local path of BFS, `reachableFrom`
+    * and the DFS operators, which run it to its fixpoint
+    * (`Int.MaxValue` levels) for the reachable set. */
   private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long],
                           maxLevels: Int): Seq[(Long, Int)] = {
     val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
@@ -151,7 +153,7 @@ object Traversals {
     // hash-partitioned by src so non-broadcast supersteps reuse the
     // partitioning instead of reshuffling edges every level.
     val e = partitionEdges(edges)
-    try bfsLevelsPrepared(e, start, maxLevels)
+    try bfsLevelsPrepared(e, Seq(start), maxLevels)
     finally e.unpersist(blocking = false)
   }
 
@@ -164,13 +166,6 @@ object Traversals {
     finally e.unpersist(blocking = false)
   }
 
-  /** [[bfsLevels]] over an edge table the CALLER already normalised and
-    * persisted via [[partitionEdges]] — for running many traversals
-    * over one graph without re-shuffling/re-caching per call (the
-    * shared table is NOT unpersisted here). */
-  def bfsLevelsPrepared(e: DataFrame, start: Long, maxLevels: Int): DataFrame =
-    bfsLevelsPrepared(e, Seq(start), maxLevels)
-
   /** Edge-count bound for the driver-local BFS fast path: covers the
     * reference's whole graph envelope (≤100 vertices, dense adjacency
     * ⇒ ≤10 000 edges, `client.c:11`) with headroom, while staying a
@@ -181,11 +176,14 @@ object Traversals {
     * the distributed level loop runs unchanged. */
   val bfsLocalMaxEdges: Long = 16384L
 
-  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int): DataFrame =
-    bfsLevelsPrepared(e, starts, maxLevels, bfsLocalMaxEdges)
-
-  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int,
-                        localMaxEdges: Long): DataFrame = {
+  /** [[bfsLevelsMulti]] over an edge table the CALLER already
+    * normalised and persisted via [[partitionEdges]] — for running
+    * many traversals over one graph without re-shuffling/re-caching
+    * per call (the shared table is NOT unpersisted here). At most
+    * `localMaxEdges` edges run on the driver ([[localLevels]]); 0
+    * forces the distributed level loop. */
+  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int = 10000,
+                        localMaxEdges: Long = bfsLocalMaxEdges): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     require(starts.nonEmpty, "at least one start vertex")
@@ -193,42 +191,55 @@ object Traversals {
     // computed in one pass on the driver.
     collectAtMost(castEdges(e), localMaxEdges) match {
       case Some(raw) => localLevels(raw, starts, maxLevels).toDF("vertex", "level")
-      case None => levelLoop(e, starts, maxLevels)._1
+      case None =>
+        val seeds = starts.distinct
+        levelLoop(e, seeds.toDF("vertex"), Nil, maxLevels, Some(seeds.length.toLong))._1
     }
   }
 
-  /** The distributed level loop over prepared edges: the `(vertex,
-    * level)` table, and the number of vertices on each level — level
-    * `l`'s count at index `l`, which the loop learns anyway to decide
-    * whether to go on. */
-  private def levelLoop(e: DataFrame, starts: Seq[Long],
-                        maxLevels: Int): (DataFrame, Seq[Long]) = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    var visited = starts.distinct.map((_, 0)).toDF("vertex", "level")
+  /** One BSP superstep of every frontier operator: expand the
+    * frontier `(keys…, vertex)` along `e`'s edges and drop the
+    * `(keys…, vertex)` pairs already in `visited`, checkpointed so
+    * lineage stays O(1) per superstep. A frontier of at most
+    * [[broadcastFrontierMax]] rows is broadcast to the edge side. */
+  private def expand(frontier: DataFrame, frontierSize: Long, e: DataFrame,
+                     visited: DataFrame, keys: Seq[String]): DataFrame = {
+    val f = if (frontierSize <= broadcastFrontierMax) frontier.hint("broadcast")
+            else frontier
+    f.join(e, f("vertex") === e("src"))
+      .select(keys.map(f(_)) :+ e("dst").as("vertex"): _*).distinct()
+      .join(visited, keys :+ "vertex", "left_anti")
       .checkpointSized()
-    var frontier = visited.select("vertex")
+  }
+
+  /** The distributed level loop over prepared edges, from a DISTINCT
+    * seed table `(keys…, vertex)` whose row count the caller passes
+    * when the driver already knows it. Returns the visited table
+    * `(keys…, vertex, level)` — one row per reached `(keys…, vertex)`
+    * at its min-hop level — and the number of rows on each level:
+    * level `l`'s count at index `l`, which the loop learns anyway to
+    * decide whether to go on. With `keys` (say a `root` column) k
+    * searches run as ONE loop with k-fold state, each superstep a
+    * single join however many are in flight. */
+  private def levelLoop(e: DataFrame, seeds: DataFrame, keys: Seq[String], maxLevels: Int,
+                        seedCount: Option[Long] = None): (DataFrame, Seq[Long]) = {
+    val frontierCols = (keys :+ "vertex").map(col)
+    var visited = seeds.withColumn("level", lit(0)).checkpointSized()
+    var frontier = visited.select(frontierCols: _*)
     var level = 0
     var sinceCompact = 0
-    var frontierSize = starts.distinct.length.toLong
+    var frontierSize = seedCount.getOrElse(frontier.count())
     val levelSizes = scala.collection.mutable.ArrayBuffer(frontierSize)
     while (frontierSize > 0 && level < maxLevels) {
       level += 1
-      // One BSP superstep: expand frontier along edges, drop already-seen.
-      val f = if (frontierSize <= broadcastFrontierMax) frontier.hint("broadcast")
-              else frontier
-      val next = f
-        .join(e, f("vertex") === e("src"))
-        .select(e("dst").as("vertex")).distinct()
-        .join(visited, Seq("vertex"), "left_anti")
-        .checkpointSized() // cut lineage growth per iteration
+      val next = expand(frontier, frontierSize, e, visited, keys)
       frontierSize = next.count()
       if (frontierSize > 0) {
         levelSizes += frontierSize
         // visited stays a lazy union of already-checkpointed frontiers —
         // no O(|visited|) copy per level; compact every 8 levels so deep
         // graphs keep bounded plan depth
-        visited = visited.union(next.select(col("vertex"), lit(level).as("level")))
+        visited = visited.union(next.select(frontierCols :+ lit(level).as("level"): _*))
         sinceCompact += 1
         if (sinceCompact >= 8) {
           val old = visited
@@ -263,41 +274,10 @@ object Traversals {
   def multiSourceDistances(edges: DataFrame, roots: DataFrame,
                            maxLevels: Int = 10000): DataFrame = {
     val e = partitionEdges(edges)
-    try {
-      var visited = roots.select(col("root").cast("long"))
-        .distinct()
-        .select(col("root"), col("root").as("vertex"), lit(0).as("level"))
-        .checkpointSized()
-      var frontier = visited.select("root", "vertex")
-      var level = 0
-      var sinceCompact = 0
-      var frontierSize = frontier.count()
-      while (frontierSize > 0 && level < maxLevels) {
-        level += 1
-        val f = if (frontierSize <= broadcastFrontierMax) frontier.hint("broadcast")
-                else frontier
-        val next = f
-          .join(e, f("vertex") === e("src"))
-          .select(f("root"), e("dst").as("vertex")).distinct()
-          .join(visited, Seq("root", "vertex"), "left_anti")
-          .checkpointSized()
-        frontierSize = next.count()
-        if (frontierSize > 0) {
-          visited = visited.union(
-            next.select(col("root"), col("vertex"), lit(level).as("level")))
-          sinceCompact += 1
-          if (sinceCompact >= 8) {
-            val old = visited
-            visited = visited.checkpointSized(); sinceCompact = 0
-            dropCheckpoint(old, keep = checkpointRddIds(next))
-          }
-          frontier = next
-        } else {
-          dropCheckpoint(next)
-        }
-      }
-      visited
-    } finally e.unpersist(blocking = false)
+    val seeds = roots.select(col("root").cast("long")).distinct()
+      .select(col("root"), col("root").as("vertex"))
+    try levelLoop(e, seeds, Seq("root"), maxLevels)._1
+    finally e.unpersist(blocking = false)
   }
 
   /** Reference op=4: BFS traversal sequence. Output
@@ -328,7 +308,8 @@ object Traversals {
       case None =>
         val e = partitionEdges(edges)
         val (lv, levelSizes) =
-          try levelLoop(e, Seq(start), maxLevels) finally e.unpersist(blocking = false)
+          try levelLoop(e, Seq(start).toDF("vertex"), Nil, maxLevels, Some(1L))
+          finally e.unpersist(blocking = false)
         val offsets = typedLit(levelSizes.indices.zip(levelSizes.scanLeft(0L)(_ + _)).toMap)
         val inLevel = Window.partitionBy(col("level")).orderBy(col("vertex"))
         // vertex ids come from the edge columns, which may be declared
@@ -380,27 +361,12 @@ object Traversals {
     * a big driver opt in per call via `maxReplayEdges`. */
   val dfsReplayMaxEdges: Long = 5000000L
 
-  /** Driver-local reachability (directed BFS vertex set) over a
-    * collected edge array — the dense-local twin of [[bfsLevels]]'
-    * fast path, shared by the DFS local paths below. */
-  private def localReach(raw: Array[(Long, Long)], start: Long): Set[Long] = {
-    val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    val seen = scala.collection.mutable.Set(start)
-    var frontier = Seq(start)
-    while (frontier.nonEmpty) {
-      frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-        .distinct.filterNot(seen.contains)
-      seen ++= frontier
-    }
-    seen.toSet
-  }
-
   /** The [[dfsLeaves]] r13 replay-input reduction on a collected edge
     * array: reachable-src, self-loop-free, not-into-start, deduped —
     * exactly the distributed reduction's row set. */
   private def localReducedAdjacency(raw: Array[(Long, Long)],
       start: Long): Array[(Long, Long)] = {
-    val reach = localReach(raw, start)
+    val reach = localLevels(raw, Seq(start), Int.MaxValue).map(_._1).toSet
     raw.filter { case (s, d0) => s != d0 && d0 != start && reach(s) }.distinct
   }
 
@@ -441,7 +407,11 @@ object Traversals {
       // replay bound below applies to the same row set.
       case Some(raw) => Some(localReducedAdjacency(raw, start)).filter(_.length <= maxReplayEdges)
       case None =>
-        val reach = bfsLevels(edges, start).select("vertex")
+        // the collect above already ruled the local path out, so the
+        // reachability pass goes straight to the distributed loop
+        val e = partitionEdges(edges)
+        val reach = try levelLoop(e, Seq(start).toDF("vertex"), Nil, 10000, Some(1L))._1
+          .select("vertex") finally e.unpersist(blocking = false)
         // Replay-input REDUCTION (r13, exactness-preserving — spec-
         // pinned): an edge whose target is always-already-visited when
         // its source is expanded can never push a child, never
@@ -567,7 +537,7 @@ object Traversals {
     dfsLeafClassesOn(ePart, start)
 
   private def dfsLeafClassesOn(ePart: DataFrame, start: Long): DataFrame = {
-    val reach = bfsLevelsPrepared(ePart, start, 10000)
+    val reach = bfsLevelsPrepared(ePart, Seq(start))
       .select("vertex").checkpointSized()
     // reachable-src, deduped edge set (self-loops already dropped by
     // the caller); every dst is then reachable too (one BFS step from
@@ -603,6 +573,29 @@ object Traversals {
     dropCheckpoint(reach)
     dropCheckpoint(e)
     pinned
+  }
+
+  /** The [[dfsLeafClasses]] order-invariant rules on a collected edge
+    * array — (vertex, cls) for every reachable vertex, identical
+    * labels to the distributed aggregation. */
+  private def localLeafClasses(raw: Array[(Long, Long)],
+      start: Long): Seq[(Long, String)] = {
+    val reach = localLevels(raw, Seq(start), Int.MaxValue).map(_._1).toSet
+    val e = raw.filter { case (s, d0) => s != d0 && reach(s) }.distinct
+    val ex = e.filter(_._2 != start)
+    val hasOut = ex.map(_._1).toSet
+    val onlyParents = ex.groupBy(_._2).collect {
+      case (_, ins) if ins.length == 1 => ins.head._1
+    }.toSet
+    val internals =
+      onlyParents ++ (if (hasOut(start)) Set(start) else Set.empty[Long])
+    reach.toSeq.sorted.map { v =>
+      val cls =
+        if (!hasOut(v)) "leaf"
+        else if (internals(v)) "internal"
+        else "undecided"
+      (v, cls)
+    }
   }
 
   /** [[dfsLeafClasses]] with the `undecided` residue SETTLED exactly
@@ -641,29 +634,6 @@ object Traversals {
     * callers keep the rule classes (with `undecided` as the measured
     * residue) via [[dfsLeafClasses]]. When no vertex is undecided the
     * replay is skipped outright. */
-  /** The [[dfsLeafClasses]] order-invariant rules on a collected edge
-    * array — (vertex, cls) for every reachable vertex, identical
-    * labels to the distributed aggregation. */
-  private def localLeafClasses(raw: Array[(Long, Long)],
-      start: Long): Seq[(Long, String)] = {
-    val reach = localReach(raw, start)
-    val e = raw.filter { case (s, d0) => s != d0 && reach(s) }.distinct
-    val ex = e.filter(_._2 != start)
-    val hasOut = ex.map(_._1).toSet
-    val onlyParents = ex.groupBy(_._2).collect {
-      case (_, ins) if ins.length == 1 => ins.head._1
-    }.toSet
-    val internals =
-      onlyParents ++ (if (hasOut(start)) Set(start) else Set.empty[Long])
-    reach.toSeq.sorted.map { v =>
-      val cls =
-        if (!hasOut(v)) "leaf"
-        else if (internals(v)) "internal"
-        else "undecided"
-      (v, cls)
-    }
-  }
-
   def dfsLeafResidual(edges: DataFrame, start: Long,
                       maxResidualEdges: Long = dfsReplayMaxEdges,
                       maxReduceRounds: Int = 30,
@@ -961,6 +931,16 @@ object Traversals {
     dists
   }
 
+  /** Phase wall-times of the most recent [[pageRankDeterministic]] run
+    * in this JVM: (phase name, seconds) for the edge/vertex staging
+    * pass and each fused-superstep segment's materialization. Written
+    * on every run; read by Bench so the artifact records WHERE a slow
+    * pagerank execution spent its time (staging scan vs superstep
+    * barriers) — the in-artifact evidence that separates host CPU
+    * steal from a plan regression (r11 VERDICT item 2). */
+  private[graft] val lastPageRankPhases =
+    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
+
   /** Deterministic PageRank (fixed iteration count): the standard
     * recurrence rank' = reset + (1-reset)·Σ rank(u)/outdeg(u), with
     * each edge contribution converted to an exact fixed-point long at
@@ -973,16 +953,6 @@ object Traversals {
     * iteration: one vertex-keyed join + one hash agg; lineage cut by
     * localCheckpoint. Input directed `(src, dst)`; every edge endpoint
     * is a vertex. */
-  /** Phase wall-times of the most recent [[pageRankDeterministic]] run
-    * in this JVM: (phase name, seconds) for the edge/vertex staging
-    * pass and each fused-superstep segment's materialization. Written
-    * on every run; read by Bench so the artifact records WHERE a slow
-    * pagerank execution spent its time (staging scan vs superstep
-    * barriers) — the in-artifact evidence that separates host CPU
-    * steal from a plan regression (r11 VERDICT item 2). */
-  private[graft] val lastPageRankPhases =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
-
   def pageRankDeterministic(edges: DataFrame, iters: Int = 10,
                             reset: Double = 0.15): DataFrame = {
     val eo = pageRankEdgeTable(edges)
@@ -1161,21 +1131,13 @@ object Traversals {
       while (best > dF + dB && nf > 0 && nb > 0 && dF + dB < 2L * maxLevels) {
         if (nf <= nb) {
           dF += 1
-          val f = if (nf <= broadcastFrontierMax) ff.hint("broadcast") else ff
-          val next = f.join(e, f("vertex") === e("src"))
-            .select(e("dst").as("vertex")).distinct()
-            .join(vf, Seq("vertex"), "left_anti")
-            .checkpointSized()
+          val next = expand(ff, nf, e, vf, Nil)
           nf = next.count()
           if (nf > 0) { vf = vf.union(next.select(col("vertex"), lit(dF).as("df"))); ff = next }
           else dropCheckpoint(next)
         } else {
           dB += 1
-          val f = if (nb <= broadcastFrontierMax) fb.hint("broadcast") else fb
-          val next = f.join(er, f("vertex") === er("src"))
-            .select(er("dst").as("vertex")).distinct()
-            .join(vb, Seq("vertex"), "left_anti")
-            .checkpointSized()
+          val next = expand(fb, nb, er, vb, Nil)
           nb = next.count()
           if (nb > 0) { vb = vb.union(next.select(col("vertex"), lit(dB).as("db"))); fb = next }
           else dropCheckpoint(next)
@@ -1702,10 +1664,8 @@ object Traversals {
     * as a DataFrame — the set-source sibling of [[bfsLevels]] for
     * callers whose seeds are themselves a distributed result (e.g.
     * the bow-tie decomposition's core SCC) and must never transit the
-    * driver. Level-synchronous frontier loop: each superstep is one
-    * src-keyed equi-join + left-anti against the visited set, both
-    * checkpoint-reaped, so state per superstep is (frontier ∪
-    * visited) and the edge cache is shared across supersteps via
+    * driver: the BFS level loop seeded with the whole set, levels
+    * dropped. The edge cache is shared across supersteps via
     * [[partitionEdges]]. Output: one `vertex` column, seeds included.
     * Reverse the edge columns at the call site for reaches-TO-set. */
   def reachableFrom(edges: DataFrame, seeds: DataFrame,
@@ -1717,34 +1677,16 @@ object Traversals {
       // per-superstep scheduling latency dwarfs the work, and the
       // seed set is bounded by the vertex count, so both collects are
       // trivially bounded. Identical output set.
+      val seedVerts = seeds.select(col("vertex").cast("long").as("vertex"))
       collectAtMost(e, bfsLocalMaxEdges) match {
         case Some(raw) =>
           val spark = e.sparkSession
           import spark.implicits._
-          val sd = seeds.select(col("vertex").cast("long")).as[Long].collect()
-          return localLevels(raw, sd.toSeq, Int.MaxValue).map(_._1).toDF("vertex")
+          localLevels(raw, seedVerts.as[Long].collect().toSeq, Int.MaxValue)
+            .map(_._1).toDF("vertex")
         case None =>
+          levelLoop(e, seedVerts.distinct(), Nil, maxIters)._1.select("vertex")
       }
-      var visited = seeds.select(col("vertex").cast("long").as("vertex"))
-        .distinct().checkpointSized()
-      var frontier = visited
-      var n = frontier.count()
-      var it = 0
-      while (n > 0 && it < maxIters) {
-        it += 1
-        val next = e.join(frontier.select(col("vertex").as("src")), "src")
-          .select(col("dst").as("vertex")).distinct()
-          .join(visited, Seq("vertex"), "left_anti")
-          .checkpointSized()
-        val prevVisited = visited
-        visited = visited.union(next).checkpointSized()
-        if (it > 1) dropCheckpoint(frontier)
-        dropCheckpoint(prevVisited)
-        frontier = next
-        n = next.count()
-      }
-      if (it > 0) dropCheckpoint(frontier)
-      visited
     } finally e.unpersist(blocking = false)
   }
 

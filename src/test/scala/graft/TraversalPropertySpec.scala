@@ -80,8 +80,13 @@ class TraversalPropertySpec extends SparkSpec {
       val (n, edges) = sample(400 + i)
       val e = edges.toSeq.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
       val starts = Seq(0L, (n / 2).toLong)
-      val multi = Traversals.bfsLevelsMulti(e, starts).collect()
-        .map(r => r.getAs[Long]("vertex") -> r.getAs[Int]("level")).toMap
+      def levels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getAs[Long]("vertex") -> r.getAs[Int]("level")).toMap
+      val multi = levels(Traversals.bfsLevelsMulti(e, starts))
+      val ep = Traversals.partitionEdges(e)
+      val forced =
+        try levels(Traversals.bfsLevelsPrepared(ep, starts, 10000, localMaxEdges = 0L))
+        finally ep.unpersist(blocking = false)
       val expected = starts.map(s => refBfsLevels(edges, s.toInt)
           .map { case (v, l) => v.toLong -> l })
         .reduce { (a, b) =>
@@ -89,7 +94,37 @@ class TraversalPropertySpec extends SparkSpec {
             v -> math.min(a.getOrElse(v, Int.MaxValue), b.getOrElse(v, Int.MaxValue))).toMap
         }
       assert(multi === expected, s"graph #$i: $edges")
+      assert(forced === expected, s"forced-distributed, graph #$i: $edges")
     }
+  }
+
+  test("multiSourceDistances: every root's slice equals its own BFS levels") {
+    (0 until 4).foreach { i =>
+      val (n, edges) = sample(500 + i)
+      val e = edges.toSeq.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
+      // every vertex id below n is a root, isolated ones included
+      val got = Traversals.multiSourceDistances(e, (0L until n.toLong).toDF("root")).collect()
+        .map(r => (r.getAs[Long]("root").toInt, r.getAs[Long]("vertex").toInt, r.getAs[Int]("level")))
+      val expected = (0 until n).flatMap(root =>
+        refBfsLevels(edges, root).map { case (v, l) => (root, v, l) })
+      assert(got.sorted.toSeq === expected.sorted, s"graph #$i: $edges")
+    }
+  }
+
+  test("bfsBidirectional equals the BFS hop distance on sampled pairs, disconnected ones included") {
+    var disconnected = 0
+    (0 until 4).foreach { i =>
+      val (n, edges) = sample(600 + i)
+      val e = edges.toSeq.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
+      val pairs = for (s <- Seq(0, n / 2); t <- Seq(n - 1, n / 3, s)) yield (s, t)
+      pairs.distinct.foreach { case (s, t) =>
+        val want = refBfsLevels(edges, s).get(t).map(_.toLong)
+        if (want.isEmpty) disconnected += 1
+        assert(Traversals.bfsBidirectional(e, s.toLong, t.toLong) === want,
+          s"pair ($s, $t), graph #$i: $edges")
+      }
+    }
+    assert(disconnected > 0, "no sampled pair was disconnected")
   }
 
   test("sssp agrees with a reference Dijkstra on random weighted digraphs") {

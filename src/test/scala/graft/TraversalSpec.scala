@@ -244,6 +244,51 @@ class TraversalSpec extends SparkSpec {
     assert(distJobs > localJobs, s"distributed $distJobs jobs, local $localJobs")
   }
 
+  test("job-count pin: bfs, per-root distances and reachability pay the same jobs per level") {
+    import spark.implicits._
+    // a path 0 → 1 → … → k plus padding edges vertex 0 never reaches,
+    // more than bfsLocalMaxEdges of them, so every call runs the
+    // distributed level loop
+    val padding = (0L until 16400L).map(i => (1000000L + i, 1000001L + i))
+    def graph(k: Int) = ((0L until k.toLong).map(i => (i, i + 1)) ++ padding).toDF("src", "dst")
+    val roots = Seq(0L).toDF("root")
+    val seeds = Seq(0L).toDF("vertex")
+    val calls: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "bfsLevelsPrepared" ->
+        (e => Traversals.bfsLevelsPrepared(e, Seq(0L), 10000, localMaxEdges = 0L)),
+      "multiSourceDistances" -> (e => Traversals.multiSourceDistances(e, roots)),
+      "reachableFrom" -> (e => Traversals.reachableFrom(e, seeds)))
+    // jobs(k = 17) − jobs(k = 9): eight supersteps and one compaction
+    // of the visited set
+    def eightLevels(call: DataFrame => DataFrame): Int = {
+      val Seq(j9, j17) = Seq(9, 17).map { k =>
+        val (rows, jobs) = jobsOf(call(graph(k)).collect())
+        assert(rows.length === k + 1, s"k = $k")
+        jobs
+      }
+      j17 - j9
+    }
+    // The frontier is broadcast by hint; whether the anti-join also
+    // broadcasts the visited side follows its size estimate, which a
+    // checkpoint takes from the block sizes the status store has heard
+    // of so far. That read can miss and leave a much larger estimate,
+    // so with size-based broadcast on, the count depends on listener
+    // timing. Off, every superstep plans the same way.
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // 49 is what bfsLevelsPrepared paid before the three
+      // operators shared one loop
+      assert(calls.map { case (name, call) => name -> eightLevels(call) } ===
+        calls.map { case (name, _) => name -> 49 })
+      // a forced-distributed single-source bfs on G7 starts as many
+      // jobs as before
+      val g7 = Seq(0L, 3L).map(s => s ->
+        jobsOf(Traversals.bfs(edges("G7"), s, localMaxEdges = 0L).collect())._2)
+      assert(g7 === Seq(0L -> 30, 3L -> 42))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("replay bound is exact on both paths; an unbounded replay runs; an absent graph fails to load") {
     // G7 from 0 reduces to 10 replay edges: its 12 minus the 2 into the start
     Seq(graft.operators.GraphAlgos.denseLocalMaxEdges, 0L).foreach { local =>
