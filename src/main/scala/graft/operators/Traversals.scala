@@ -20,14 +20,18 @@ import org.apache.spark.storage.StorageLevel
   * the same BSP structure as the reference's thread-per-frontier-node +
   * per-level join barrier (`secondary_server.c:219-234`), and the
   * superstep-on-a-dataflow-engine mapping described by Pregelix
-  * (VLDB 2014, see PAPERS.md) — where each level is one distributed
-  * `frontier ⋈ edges` hash join. The frontier
-  * is re-checkpointed per level (`localCheckpoint`) so lineage stays
-  * O(1) per iteration, and the visited set stays a DataFrame (never
-  * collected). On a 1000-executor cluster the per-level join shuffles
-  * only the frontier (small) against edges partitioned by `src`;
-  * pre-partitioning `edges` by `src` once makes every level's join
-  * shuffle-free on the edge side.
+  * (VLDB 2014, see PAPERS.md) — where each level is one pass over the
+  * edges. While the reached set has at most [[broadcastFrontierMax]]
+  * vertices, the frontier and the visited set are held on the driver
+  * and each level is ONE Spark job over the cached edge table, which
+  * stays where it lives (no shuffle). Past that bound the traversal
+  * restarts on DataFrame state: each level is a `frontier ⋈ edges`
+  * hash join, the frontier is re-checkpointed per level
+  * (`localCheckpoint`) so lineage stays O(1) per iteration, and the
+  * visited set stays a DataFrame (never collected). On a 1000-executor
+  * cluster that join shuffles only the frontier against edges
+  * partitioned by `src`; pre-partitioning `edges` by `src` once makes
+  * every level's join shuffle-free on the edge side.
   */
 object Traversals {
 
@@ -48,9 +52,18 @@ object Traversals {
     * driver-side BigInteger math). Every iterative operator here
     * checkpoints through this instead. */
   private implicit class SizedCheckpoint(df: DataFrame) {
-    def checkpointSized(): DataFrame =
-      org.apache.spark.sql.graftshim.Bridge.resetCheckpointStats(
-        df.localCheckpoint(eager = true))
+    def checkpointSized(): DataFrame = checkpointCounted()._1
+
+    /** The checkpoint and its row count, from the one job that
+      * materialises it: Spark's eager path runs the same single pass
+      * over the checkpoint's RDD and throws the count away. */
+    def checkpointCounted(): (DataFrame, Long) = {
+      val cp = df.localCheckpoint(eager = false)
+      val rows = cp.queryExecution.analyzed match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
+      }
+      (org.apache.spark.sql.graftshim.Bridge.resetCheckpointStats(cp), rows)
+    }
   }
 
   /** Drop the storage blocks behind a SUPERSEDED eager
@@ -76,8 +89,8 @@ object Traversals {
 
   /** Normalise + cache edges hash-partitioned by `src`, so every BFS
     * level's join reuses the same partitioning instead of reshuffling
-    * edges (used by [[bfsLevels]]; callers running many traversals
-    * over one graph can pre-partition once and share). */
+    * edges (used by the DataFrame-state [[levelLoop]]; callers running
+    * many traversals over one graph can pre-partition once and share). */
   def partitionEdges(edges: DataFrame, numPartitions: Int = 0): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
             else edges.sparkSession.sessionState.conf.numShufflePartitions
@@ -116,55 +129,172 @@ object Traversals {
     if (rows.length <= max) Some(rows) else None
   }
 
-  /** Driver-local twin of the level loop over a collected edge array:
-    * `(vertex, min-hop level)` for every vertex reachable from `starts`
-    * within `maxLevels` levels. The local path of BFS, `reachableFrom`
-    * and the DFS operators, which run it to its fixpoint
-    * (`Int.MaxValue` levels) for the reachable set. */
-  private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long],
-                          maxLevels: Int): Seq[(Long, Int)] = {
-    val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    val lvl = scala.collection.mutable.LinkedHashMap[Long, Int](
-      starts.distinct.map(_ -> 0): _*)
-    var frontier = starts.distinct
+  /** The level loop on driver-held state: every level's vertices
+    * reachable from `starts` within `maxLevels` levels, ascending, level
+    * `l` at index `l`. `expand(frontier, visited, room)` gets both sets
+    * ascending and returns the vertices one hop from `frontier`
+    * (duplicates and visited ones allowed), or None to abort the loop;
+    * `room` is how many new vertices still fit. None when aborted or
+    * when the reached set passes `maxHeld` vertices. Two expanders
+    * serve it: an adjacency lookup ([[localLevels]]) and one Spark job
+    * per level ([[heldLevels]]). */
+  private def driverLevels(starts: Seq[Long], maxLevels: Int, maxHeld: Long)(
+      expand: (Array[Long], Array[Long], Long) => Option[Array[Long]]): Option[Seq[Array[Long]]] = {
+    var frontier = newVertices(starts.toArray, Array.emptyLongArray)
+    var visited = frontier
+    val levels = scala.collection.mutable.ArrayBuffer(frontier)
     var level = 0
-    while (frontier.nonEmpty && level < maxLevels) {
+    var held = visited.length <= maxHeld
+    while (held && frontier.nonEmpty && level < maxLevels) {
       level += 1
-      frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-        .distinct.filterNot(lvl.contains)
-      frontier.foreach(v => lvl(v) = level)
+      expand(frontier, visited, maxHeld - visited.length) match {
+        case Some(found) =>
+          frontier = newVertices(found, visited)
+          if (frontier.nonEmpty) {
+            levels += frontier
+            visited = visited ++ frontier
+            java.util.Arrays.sort(visited) // two ascending runs: a merge
+          }
+          held = visited.length <= maxHeld
+        case None => held = false
+      }
     }
-    lvl.toSeq
+    if (held) Some(levels.toSeq) else None
   }
 
-  /** Frontier rows below this bound are broadcast to the edge side;
-    * above it the superstep falls back to a shuffle hash join against
-    * the (persisted, src-partitioned) edges — force-broadcasting an
-    * O(V) mid-BFS frontier would ship the whole frontier to every
-    * executor. */
+  /** The distinct values of `found` missing from the ascending
+    * `visited`, ascending. */
+  private def newVertices(found: Array[Long], visited: Array[Long]): Array[Long] =
+    found.distinct.filter(java.util.Arrays.binarySearch(visited, _) < 0).sorted
+
+  /** `(vertex, level)` rows of per-level vertex arrays, in (level,
+    * vertex) order. */
+  private def levelRows(levels: Seq[Array[Long]]): Seq[(Long, Int)] =
+    levels.zipWithIndex.flatMap { case (vs, l) => vs.toSeq.map(_ -> l) }
+
+  /** [[driverLevels]] over a collected edge array, expanding by
+    * adjacency lookup: the local path of BFS, `reachableFrom` and the
+    * DFS operators, which run it to its fixpoint (`Int.MaxValue`
+    * levels) for the reachable set. */
+  private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long],
+                          maxLevels: Int): Seq[Array[Long]] = {
+    val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
+    driverLevels(starts, maxLevels, Long.MaxValue)((frontier, _, _) =>
+      Some(frontier.flatMap(v => adj.getOrElse(v, Array.emptyLongArray)))).get
+  }
+
+  /** [[dfsLeaves]]' reduced replay adjacency, gathered by the
+    * driver-held supersteps one frontier at a time: the edges out of
+    * the frontier minus self-loops and edges into `start`,
+    * deduplicated. Every reached vertex is in exactly one frontier, so
+    * their union is the whole reduced set, and holding more than `max`
+    * edges refuses the replay exactly. */
+  private final class ReplayEdges(val start: Long, val max: Long) {
+    val edges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    def room: Long = max - edges.length
+    def refused: Boolean = room < 0
+  }
+
+  /** At most `room + 1` rows, clamped to one array's reach. */
+  private def capOf(room: Long): Int = ((room max -1L) min (Int.MaxValue - 1L)).toInt + 1
+
+  /** [[driverLevels]] with each level ONE Spark job over the edge
+    * table `e`, scanned where it lives (cache it first; nothing is
+    * shuffled). The frontier and the visited set are broadcast; each
+    * partition keeps the edges whose `src` is in the frontier and whose
+    * `dst` is not visited, and emits its distinct new vertices, at most
+    * the remaining room + 1, so no fetch exceeds partitions × (room + 1)
+    * vertices and passing `maxHeld` is seen exactly. With `replay`, each
+    * partition also emits its reduced edges out of the frontier, at
+    * most the replay's room + 1, and a refused replay aborts the loop. A
+    * null vertex id fails the job, as the local path's typed collect
+    * fails on one. */
+  private def heldLevels(e: DataFrame, starts: Seq[Long], maxLevels: Int, maxHeld: Long,
+                         replay: Option[ReplayEdges] = None): Option[Seq[Array[Long]]] = {
+    val rows = castEdges(e).queryExecution.toRdd
+    val keepEdges = replay.isDefined
+    val start = replay.fold(0L)(_.start)
+    driverLevels(starts, maxLevels, maxHeld) { (frontier, visited, room) =>
+      val state = rows.sparkContext.broadcast((frontier, visited))
+      val cap = capOf(room)
+      val edgeCap = replay.fold(Int.MaxValue)(r => capOf(r.room))
+      val parts = try rows.mapPartitions { it =>
+        val (f, seen) = state.value
+        val found = scala.collection.mutable.HashSet[Long]()
+        val out = scala.collection.mutable.HashSet[(Long, Long)]()
+        while (it.hasNext && found.size < cap && out.size < edgeCap) {
+          val r = it.next()
+          if (r.isNullAt(0) || r.isNullAt(1))
+            throw new NullPointerException("null vertex id in the edge table")
+          val s = r.getLong(0)
+          val d = r.getLong(1)
+          if (java.util.Arrays.binarySearch(f, s) >= 0) {
+            if (java.util.Arrays.binarySearch(seen, d) < 0) found += d
+            if (keepEdges && s != d && d != start) out += ((s, d))
+          }
+        }
+        Iterator((found.toArray, out.toArray))
+      }.collect() finally state.destroy()
+      replay.foreach(_.edges ++= parts.iterator.flatMap(_._2).distinct)
+      if (replay.exists(_.refused)) None else Some(parts.flatMap(_._1))
+    }
+  }
+
+  /** The bound on driver-held traversal state, and on the frontier
+    * rows broadcast to the edge side. While at most this many vertices
+    * are reached, BFS and the reachability pass of [[dfsLeaves]] keep
+    * the frontier and the visited set on the driver, one Spark job per
+    * level ([[heldLevels]]); a traversal whose reached set would pass it
+    * restarts on the DataFrame-state [[levelLoop]]. There, a frontier
+    * over it is not broadcast: the superstep falls back to a shuffle
+    * hash join against the (persisted, src-partitioned) edges —
+    * force-broadcasting an O(V) mid-BFS frontier would ship the whole
+    * frontier to every executor. */
   val broadcastFrontierMax: Long = 500000L
 
   /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
     * reachable from `start` (start itself at level 0). Level = shortest
     * hop distance, because a vertex joins the visited set the first
     * level it is reached. */
-  def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = 10000): DataFrame = {
-    // Materialise the (possibly derived/unioned) edge table ONCE,
-    // hash-partitioned by src so non-broadcast supersteps reuse the
-    // partitioning instead of reshuffling edges every level.
-    val e = partitionEdges(edges)
-    try bfsLevelsPrepared(e, Seq(start), maxLevels)
-    finally e.unpersist(blocking = false)
-  }
+  def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = 10000): DataFrame =
+    bfsLevelsMulti(edges, Seq(start), maxLevels)
 
   /** Multi-source BFS: level(v) = min hop distance from ANY start
     * (landmark-distance shape). Same superstep loop, seeded with the
-    * whole start set at level 0. */
+    * whole start set at level 0; the paths of [[bfsLevelsPrepared]],
+    * with the edges cached as they are while the levels are
+    * driver-held ([[driverHeldLevels]]). */
   def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long], maxLevels: Int = 10000): DataFrame = {
-    val e = partitionEdges(edges)
-    try bfsLevelsPrepared(e, starts, maxLevels)
-    finally e.unpersist(blocking = false)
+    val spark = edges.sparkSession
+    import spark.implicits._
+    require(starts.nonEmpty, "at least one start vertex")
+    driverHeldLevels(edges, starts, maxLevels, bfsLocalMaxEdges, broadcastFrontierMax) match {
+      case Some(ls) => levelRows(ls).toDF("vertex", "level")
+      case None =>
+        // Materialise the (possibly derived/unioned) edge table ONCE,
+        // hash-partitioned by src so non-broadcast supersteps reuse the
+        // partitioning instead of reshuffling edges every level.
+        val e = partitionEdges(edges)
+        try levelLoop(e, starts.distinct.toDF("vertex"), Nil, maxLevels)._1
+        finally e.unpersist(blocking = false)
+    }
   }
+
+  /** The levels from `starts` over an unprepared edge table on
+    * driver-held state: the local path when at most `localMaxEdges`
+    * edges come back, else [[heldLevels]] over the edges cached as they
+    * are (no repartition, so no shuffle), dropped after. None when the
+    * reached set passes `maxHeld`; the caller then restarts on the
+    * DataFrame-state [[levelLoop]]. */
+  private def driverHeldLevels(edges: DataFrame, starts: Seq[Long], maxLevels: Int,
+                               localMaxEdges: Long, maxHeld: Long): Option[Seq[Array[Long]]] =
+    collectAtMost(castEdges(edges), localMaxEdges) match {
+      case Some(raw) => Some(localLevels(raw, starts, maxLevels))
+      case None =>
+        val held = castEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+        try heldLevels(held, starts, maxLevels, maxHeld)
+        finally held.unpersist(blocking = false)
+    }
 
   /** Edge-count bound for the driver-local BFS fast path: covers the
     * reference's whole graph envelope (≤100 vertices, dense adjacency
@@ -172,8 +302,9 @@ object Traversals {
     * trivially-bounded collect (≤16k × 16 B) — the same bounded-
     * collect contract as the DFS replay (`dfsReplayMaxEdges`). Below
     * it, each BSP superstep's fixed job-scheduling latency (~0.3 s ×
-    * depth on a contended host) dwarfs the actual work; at/above it
-    * the distributed level loop runs unchanged. */
+    * depth on a contended host) dwarfs the actual work; above it each
+    * level is a Spark job ([[heldLevels]], or [[levelLoop]] past
+    * [[broadcastFrontierMax]]). */
   val bfsLocalMaxEdges: Long = 16384L
 
   /** [[bfsLevelsMulti]] over an edge table the CALLER already
@@ -181,59 +312,74 @@ object Traversals {
     * many traversals over one graph without re-shuffling/re-caching
     * per call (the shared table is NOT unpersisted here). At most
     * `localMaxEdges` edges run on the driver ([[localLevels]]); 0
-    * forces the distributed level loop. */
+    * skips that path. Above it the levels are driver-held while at most
+    * [[broadcastFrontierMax]] vertices are reached, one Spark job per
+    * level over `e` ([[heldLevels]]), and the result is a local
+    * relation; past the bound the traversal restarts on the
+    * DataFrame-state [[levelLoop]]. All paths return identical rows. */
   def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int = 10000,
-                        localMaxEdges: Long = bfsLocalMaxEdges): DataFrame = {
+                        localMaxEdges: Long = bfsLocalMaxEdges): DataFrame =
+    bfsLevelsPrepared(e, starts, maxLevels, localMaxEdges, broadcastFrontierMax)
+
+  /** [[bfsLevelsPrepared]] with the driver-held bound `maxHeld` as an
+    * argument; 0 runs the DataFrame-state loop from the start. */
+  private[graft] def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int,
+                                       localMaxEdges: Long, maxHeld: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     require(starts.nonEmpty, "at least one start vertex")
     // Tiny-graph fast path: identical (vertex, min-hop level) output,
     // computed in one pass on the driver.
-    collectAtMost(castEdges(e), localMaxEdges) match {
-      case Some(raw) => localLevels(raw, starts, maxLevels).toDF("vertex", "level")
-      case None =>
-        val seeds = starts.distinct
-        levelLoop(e, seeds.toDF("vertex"), Nil, maxLevels, Some(seeds.length.toLong))._1
+    val levels = collectAtMost(castEdges(e), localMaxEdges) match {
+      case Some(raw) => Some(localLevels(raw, starts, maxLevels))
+      case None => heldLevels(e, starts, maxLevels, maxHeld)
+    }
+    levels match {
+      case Some(ls) => levelRows(ls).toDF("vertex", "level")
+      case None => levelLoop(e, starts.distinct.toDF("vertex"), Nil, maxLevels)._1
     }
   }
 
-  /** One BSP superstep of every frontier operator: expand the
-    * frontier `(keys…, vertex)` along `e`'s edges and drop the
-    * `(keys…, vertex)` pairs already in `visited`, checkpointed so
-    * lineage stays O(1) per superstep. A frontier of at most
-    * [[broadcastFrontierMax]] rows is broadcast to the edge side. */
+  /** One BSP superstep of every DataFrame-state frontier operator:
+    * expand the frontier `(keys…, vertex)` along `e`'s edges and drop
+    * the `(keys…, vertex)` pairs already in `visited`, checkpointed so
+    * lineage stays O(1) per superstep. Returns the checkpoint and its
+    * row count, taken by the job that materialises it. A frontier of
+    * at most [[broadcastFrontierMax]] rows is broadcast to the edge
+    * side. */
   private def expand(frontier: DataFrame, frontierSize: Long, e: DataFrame,
-                     visited: DataFrame, keys: Seq[String]): DataFrame = {
+                     visited: DataFrame, keys: Seq[String]): (DataFrame, Long) = {
     val f = if (frontierSize <= broadcastFrontierMax) frontier.hint("broadcast")
             else frontier
     f.join(e, f("vertex") === e("src"))
       .select(keys.map(f(_)) :+ e("dst").as("vertex"): _*).distinct()
       .join(visited, keys :+ "vertex", "left_anti")
-      .checkpointSized()
+      .checkpointCounted()
   }
 
-  /** The distributed level loop over prepared edges, from a DISTINCT
-    * seed table `(keys…, vertex)` whose row count the caller passes
-    * when the driver already knows it. Returns the visited table
-    * `(keys…, vertex, level)` — one row per reached `(keys…, vertex)`
-    * at its min-hop level — and the number of rows on each level:
-    * level `l`'s count at index `l`, which the loop learns anyway to
-    * decide whether to go on. With `keys` (say a `root` column) k
-    * searches run as ONE loop with k-fold state, each superstep a
-    * single join however many are in flight. */
-  private def levelLoop(e: DataFrame, seeds: DataFrame, keys: Seq[String], maxLevels: Int,
-                        seedCount: Option[Long] = None): (DataFrame, Seq[Long]) = {
+  /** The level loop on DataFrame state, over prepared edges, from a
+    * DISTINCT seed table `(keys…, vertex)`: the path of
+    * [[multiSourceDistances]], [[reachableFrom]] and every traversal
+    * whose reached set passes [[broadcastFrontierMax]]. Returns the
+    * visited table `(keys…, vertex, level)` — one row per reached
+    * `(keys…, vertex)` at its min-hop level — and the number of rows on
+    * each level: level `l`'s count at index `l`, taken by the job that
+    * checkpoints the level, so no level pays a separate count. With
+    * `keys` (say a `root` column) k searches run as ONE loop with
+    * k-fold state, each superstep a single join however many are in
+    * flight. */
+  private def levelLoop(e: DataFrame, seeds: DataFrame, keys: Seq[String],
+                        maxLevels: Int): (DataFrame, Seq[Long]) = {
     val frontierCols = (keys :+ "vertex").map(col)
-    var visited = seeds.withColumn("level", lit(0)).checkpointSized()
+    var (visited, frontierSize) = seeds.withColumn("level", lit(0)).checkpointCounted()
     var frontier = visited.select(frontierCols: _*)
     var level = 0
     var sinceCompact = 0
-    var frontierSize = seedCount.getOrElse(frontier.count())
     val levelSizes = scala.collection.mutable.ArrayBuffer(frontierSize)
     while (frontierSize > 0 && level < maxLevels) {
       level += 1
-      val next = expand(frontier, frontierSize, e, visited, keys)
-      frontierSize = next.count()
+      val (next, nextSize) = expand(frontier, frontierSize, e, visited, keys)
+      frontierSize = nextSize
       if (frontierSize > 0) {
         levelSizes += frontierSize
         // visited stays a lazy union of already-checkpointed frontiers —
@@ -288,37 +434,46 @@ object Traversals {
     * path. When the whole edge list came back, the levels, the sort and
     * the numbering all run on the driver and the result is a local
     * relation, so the call costs that one job and collecting the result
-    * none. Otherwise the distributed level loop runs, and the rank is
-    * a row number WITHIN each level (a window partitioned by level,
-    * parallel across levels) plus the level's starting offset. The
-    * offsets are prefix sums of the per-level vertex counts the loop
-    * already took, applied as a literal map — no aggregation and no
-    * unpartitioned window, which would funnel the whole reachable set
-    * through one task. Both paths return identical rows and schema. */
+    * none. Otherwise the edges are cached as they are and the levels
+    * are driver-held while at most [[broadcastFrontierMax]] vertices
+    * are reached: one Spark job per level ([[heldLevels]]), then the
+    * same driver-side sort and numbering into a local relation. A
+    * traversal whose reached set passes the bound restarts on the
+    * DataFrame-state [[levelLoop]], and the rank is a row number WITHIN
+    * each level (a window partitioned by level, parallel across levels)
+    * plus the level's starting offset. The offsets are prefix sums of
+    * the per-level vertex counts the loop already took, applied as a
+    * literal map — no aggregation and no unpartitioned window, which
+    * would funnel the whole reachable set through one task. All paths
+    * return identical rows and schema. */
   def bfs(edges: DataFrame, start: Long,
-          localMaxEdges: Long = bfsLocalMaxEdges): DataFrame = {
+          localMaxEdges: Long = bfsLocalMaxEdges): DataFrame =
+    bfs(edges, start, localMaxEdges, broadcastFrontierMax)
+
+  /** [[bfs]] with the driver-held bound `maxHeld` as an argument; 0
+    * runs the DataFrame-state loop from the start. */
+  private[graft] def bfs(edges: DataFrame, start: Long, localMaxEdges: Long,
+                         maxHeld: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val maxLevels = 10000
-    collectAtMost(castEdges(edges), localMaxEdges) match {
-      case Some(raw) =>
-        localLevels(raw, Seq(start), maxLevels).sortBy { case (v, l) => (l, v) }
-          .zipWithIndex.map { case ((v, l), i) => (i.toLong, l, v) }
-          .toDF("order", "level", "vertex")
-      case None =>
-        val e = partitionEdges(edges)
-        val (lv, levelSizes) =
-          try levelLoop(e, Seq(start).toDF("vertex"), Nil, maxLevels, Some(1L))
-          finally e.unpersist(blocking = false)
-        val offsets = typedLit(levelSizes.indices.zip(levelSizes.scanLeft(0L)(_ + _)).toMap)
-        val inLevel = Window.partitionBy(col("level")).orderBy(col("vertex"))
-        // vertex ids come from the edge columns, which may be declared
-        // nullable; a null id fails here as it does in the local
-        // path's typed collect
-        lv.select(
-          notNull(element_at(offsets, col("level")) + row_number().over(inLevel) - 1)
-            .as("order"),
-          col("level"), notNull(col("vertex")).as("vertex"))
+    def numbered(levels: Seq[Array[Long]]): DataFrame =
+      levelRows(levels).zipWithIndex.map { case ((v, l), i) => (i.toLong, l, v) }
+        .toDF("order", "level", "vertex")
+    driverHeldLevels(edges, Seq(start), maxLevels, localMaxEdges, maxHeld).map(numbered).getOrElse {
+      val e = partitionEdges(edges)
+      val (lv, levelSizes) =
+        try levelLoop(e, Seq(start).toDF("vertex"), Nil, maxLevels)
+        finally e.unpersist(blocking = false)
+      val offsets = typedLit(levelSizes.indices.zip(levelSizes.scanLeft(0L)(_ + _)).toMap)
+      val inLevel = Window.partitionBy(col("level")).orderBy(col("vertex"))
+      // vertex ids come from the edge columns, which may be declared
+      // nullable; a null id fails here as it does in the local
+      // path's typed collect
+      lv.select(
+        notNull(element_at(offsets, col("level")) + row_number().over(inLevel) - 1)
+          .as("order"),
+        col("level"), notNull(col("vertex")).as("vertex"))
     }
   }
 
@@ -366,7 +521,7 @@ object Traversals {
     * exactly the distributed reduction's row set. */
   private def localReducedAdjacency(raw: Array[(Long, Long)],
       start: Long): Array[(Long, Long)] = {
-    val reach = localLevels(raw, Seq(start), Int.MaxValue).map(_._1).toSet
+    val reach = localLevels(raw, Seq(start), Int.MaxValue).flatten.toSet
     raw.filter { case (s, d0) => s != d0 && d0 != start && reach(s) }.distinct
   }
 
@@ -386,16 +541,28 @@ object Traversals {
     *
     * One bounded collect of at most `localMaxEdges + 1` edges picks the
     * path: when the whole edge list came back, both phases run on it on
-    * the driver and the call is that one job. Otherwise reachability
-    * runs distributed and the reduced replay adjacency (below) is
-    * computed once, by one collect of at most `maxReplayEdges + 1`
-    * rows. On both paths more than `maxReplayEdges` reduced edges
-    * refuse the replay. Output: `(vertex: Long)` ascending, not
-    * nullable; both paths return identical rows and schema.
+    * the driver and the call is that one job. Otherwise the edges are
+    * cached as they are and reachability runs driver-held while at most
+    * [[broadcastFrontierMax]] vertices are reached, one Spark job per
+    * level ([[heldLevels]]); the same jobs gather the reduced replay
+    * adjacency (below) one frontier at a time ([[ReplayEdges]]), so no
+    * other job runs. A reached set past the bound restarts
+    * reachability on the DataFrame-state [[levelLoop]], and the reduced
+    * adjacency is then computed once, by one collect of at most
+    * `maxReplayEdges + 1` rows. On every path reachability runs to its
+    * fixpoint and more than `maxReplayEdges` reduced edges refuse the
+    * replay. Output: `(vertex: Long)` ascending, not nullable; all
+    * paths return identical rows and schema.
     */
   def dfsLeaves(edges: DataFrame, start: Long,
                 maxReplayEdges: Long = dfsReplayMaxEdges,
-                localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
+                localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame =
+    dfsLeaves(edges, start, maxReplayEdges, localMaxEdges, broadcastFrontierMax)
+
+  /** [[dfsLeaves]] with the driver-held bound `maxHeld` as an argument;
+    * 0 runs the DataFrame-state reachability from the start. */
+  private[graft] def dfsLeaves(edges: DataFrame, start: Long, maxReplayEdges: Long,
+                               localMaxEdges: Long, maxHeld: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val eCast = castEdges(edges)
@@ -407,28 +574,34 @@ object Traversals {
       // replay bound below applies to the same row set.
       case Some(raw) => Some(localReducedAdjacency(raw, start)).filter(_.length <= maxReplayEdges)
       case None =>
-        // the collect above already ruled the local path out, so the
-        // reachability pass goes straight to the distributed loop
-        val e = partitionEdges(edges)
-        val reach = try levelLoop(e, Seq(start).toDF("vertex"), Nil, 10000, Some(1L))._1
-          .select("vertex") finally e.unpersist(blocking = false)
-        // Replay-input REDUCTION (r13, exactness-preserving — spec-
-        // pinned): an edge whose target is always-already-visited when
-        // its source is expanded can never push a child, never
-        // increments childCount, and never extends reachability —
-        // dropping it leaves the replay's visit order, tree, and leaf
-        // set bit-identical. Three such classes are droppable
-        // DISTRIBUTIVELY before the collect: self-loops (v visited
-        // when v expands), edges into `start` (visited from step 0),
-        // and duplicate rows (the replay dedups per-vertex anyway —
-        // dedup on the cluster instead of the driver, which on a
-        // multigraph shrinks the collect by the multiplicity). The
-        // bound applies to the REDUCED adjacency: graphs over the raw
-        // bound still replay exactly when their reduced form fits.
-        collectAtMost(eCast
-          .where(col("src") =!= col("dst") && col("dst") =!= lit(start))
-          .join(reach, col("src") === reach("vertex"), "left_semi")
-          .distinct(), maxReplayEdges)
+        val replay = new ReplayEdges(start, maxReplayEdges)
+        val held = eCast.persist(StorageLevel.MEMORY_AND_DISK)
+        val reached = try heldLevels(held, Seq(start), Int.MaxValue, maxHeld, Some(replay))
+                      finally held.unpersist(blocking = false)
+        if (replay.refused) None
+        else if (reached.isDefined) Some(replay.edges.toArray)
+        else {
+          val e = partitionEdges(edges)
+          val reach = try levelLoop(e, Seq(start).toDF("vertex"), Nil, Int.MaxValue)._1
+            .select("vertex") finally e.unpersist(blocking = false)
+          // Replay-input REDUCTION (r13, exactness-preserving — spec-
+          // pinned): an edge whose target is always-already-visited when
+          // its source is expanded can never push a child, never
+          // increments childCount, and never extends reachability —
+          // dropping it leaves the replay's visit order, tree, and leaf
+          // set bit-identical. Three such classes are droppable
+          // DISTRIBUTIVELY before the collect: self-loops (v visited
+          // when v expands), edges into `start` (visited from step 0),
+          // and duplicate rows (the replay dedups per-vertex anyway —
+          // dedup on the cluster instead of the driver, which on a
+          // multigraph shrinks the collect by the multiplicity). The
+          // bound applies to the REDUCED adjacency: graphs over the raw
+          // bound still replay exactly when their reduced form fits.
+          collectAtMost(eCast
+            .where(col("src") =!= col("dst") && col("dst") =!= lit(start))
+            .join(reach, col("src") === reach("vertex"), "left_semi")
+            .distinct(), maxReplayEdges)
+        }
     }
     require(reduced.isDefined,
       s"DFS-tree replay needs the reachable adjacency on the driver: its " +
@@ -580,7 +753,7 @@ object Traversals {
     * labels to the distributed aggregation. */
   private def localLeafClasses(raw: Array[(Long, Long)],
       start: Long): Seq[(Long, String)] = {
-    val reach = localLevels(raw, Seq(start), Int.MaxValue).map(_._1).toSet
+    val reach = localLevels(raw, Seq(start), Int.MaxValue).flatten.toSet
     val e = raw.filter { case (s, d0) => s != d0 && reach(s) }.distinct
     val ex = e.filter(_._2 != start)
     val hasOut = ex.map(_._1).toSet
@@ -1131,14 +1304,14 @@ object Traversals {
       while (best > dF + dB && nf > 0 && nb > 0 && dF + dB < 2L * maxLevels) {
         if (nf <= nb) {
           dF += 1
-          val next = expand(ff, nf, e, vf, Nil)
-          nf = next.count()
+          val (next, n) = expand(ff, nf, e, vf, Nil)
+          nf = n
           if (nf > 0) { vf = vf.union(next.select(col("vertex"), lit(dF).as("df"))); ff = next }
           else dropCheckpoint(next)
         } else {
           dB += 1
-          val next = expand(fb, nb, er, vb, Nil)
-          nb = next.count()
+          val (next, n) = expand(fb, nb, er, vb, Nil)
+          nb = n
           if (nb > 0) { vb = vb.union(next.select(col("vertex"), lit(dB).as("db"))); fb = next }
           else dropCheckpoint(next)
         }
@@ -1683,7 +1856,7 @@ object Traversals {
           val spark = e.sparkSession
           import spark.implicits._
           localLevels(raw, seedVerts.as[Long].collect().toSeq, Int.MaxValue)
-            .map(_._1).toDF("vertex")
+            .flatten.toDF("vertex")
         case None =>
           levelLoop(e, seedVerts.distinct(), Nil, maxIters)._1.select("vertex")
       }

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.storage.RDDBlockId
 
 /** Minimal `private[sql]` bridge (the standard extension-library
   * pattern, cf. Delta/Iceberg shims): exposes Dataset.ofRows so graft
@@ -17,8 +19,8 @@ object Bridge {
   def notNull(c: Column): Column =
     classic.ExpressionUtils.column(AssertNotNull(classic.ExpressionUtils.expression(c)))
 
-  /** Replace an eagerly-localCheckpointed DataFrame's inherited size
-    * ESTIMATE with the checkpoint's actual materialised block size.
+  /** Replace a materialised localCheckpoint's inherited size ESTIMATE
+    * with the checkpoint's actual block size.
     * `Dataset.localCheckpoint` copies the pre-checkpoint plan's
     * estimated Statistics into `LogicalRDD.originStats`; Catalyst's
     * size-only estimator multiplies child sizes at every join, so in
@@ -27,30 +29,33 @@ object Bridge {
     * BigInt has millions of digits and the driver burns minutes in
     * BigInteger multiplication inside stats estimation. The actual
     * block size also gives the optimizer truthful broadcast decisions
-    * for subsequent joins over the checkpoint. No-op on frames that
-    * are not LogicalRDD-backed. */
+    * for subsequent joins over the checkpoint. The sizes come from the
+    * block-manager master, which records every block before the job
+    * that stored it returns (the UI status store behind
+    * `SparkContext.getRDDStorageInfo` is fed asynchronously by the
+    * listener bus, so a read there can miss blocks and leave the
+    * broadcast choice to event timing). No-op on frames that are not
+    * LogicalRDD-backed. */
   def resetCheckpointStats(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val sc = df.sparkSession.sparkContext
-        sc.getRDDStorageInfo.find(_.id == lr.rdd.id)
-          .map(i => BigInt(i.memSize + i.diskSize)).filter(_ > 0) match {
-          case Some(actual) =>
-            ofRows(df.sparkSession, new org.apache.spark.sql.execution.LogicalRDD(
-              lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-              lr.isStreaming, lr.stream)(
-              df.sparkSession.asInstanceOf[classic.SparkSession],
-              Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
-                sizeInBytes = actual)),
-              None))
-          // block status not visible yet (the master update is async)
-          // or blocks evicted: keep the inherited estimate rather than
-          // stamping a small constant — an under-estimate would flip
-          // the planner into BROADCASTING an arbitrarily large state
-          // table, which is far worse than one round of a compounding
-          // (always upward) estimate
-          case None => df
-        }
+        val actual = SparkEnv.get.blockManager.master.getStorageStatus.iterator
+          .flatMap(_.rddBlocks).collect {
+            case (RDDBlockId(id, _), s) if id == lr.rdd.id => s.memSize + s.diskSize
+          }.sum
+        // no blocks (evicted, or an empty checkpoint): keep the
+        // inherited estimate rather than stamping a small constant — an
+        // under-estimate would flip the planner into BROADCASTING an
+        // arbitrarily large state table, which is far worse than one
+        // round of a compounding (always upward) estimate
+        if (actual <= 0) df
+        else ofRows(df.sparkSession, new org.apache.spark.sql.execution.LogicalRDD(
+          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
+          lr.isStreaming, lr.stream)(
+          df.sparkSession.asInstanceOf[classic.SparkSession],
+          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+            sizeInBytes = BigInt(actual))),
+          None))
       case _ => df
     }
 }

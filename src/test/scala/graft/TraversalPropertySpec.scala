@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.operators.Traversals
+import graft.operators.{GraphAlgos, Traversals}
 
 /** ScalaCheck-generated property tests from SURVEY.md §5.2, over random
   * digraphs (n ≤ 20, deterministic seeds to keep Spark-job count sane):
@@ -125,6 +125,82 @@ class TraversalPropertySpec extends SparkSpec {
       }
     }
     assert(disconnected > 0, "no sampled pair was disconnected")
+  }
+
+  /** A seeded random digraph on `0 until n` with self-loops and
+    * duplicate edges, a path 0 → 1 → 2 so the set reached from 0 spans
+    * at least three levels, and a 3-cycle on `n, n + 1, n + 2` that 0
+    * never reaches but that points into the rest. */
+  def messyGraph(i: Int): (Int, Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(900L + i)
+    val n = 6 + rnd.nextInt(15)
+    val base = Seq.fill(n * (1 + rnd.nextInt(3)))((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val m = n.toLong
+    val apart = Seq((m, m + 1), (m + 1, m + 2), (m + 2, m), (m, 0L), (m + 1, 1L))
+    (n, base ++ base.take(4) ++ Seq((0L, 1L), (1L, 2L), (0L, 0L), (2L, 2L), (1L, 2L)) ++ apart)
+  }
+
+  /** The paths of a dual-path traversal as `(localMaxEdges, maxHeld)`:
+    * local, driver-held, DataFrame-state, and driver-held with a bound
+    * the reached set crosses mid-run, so it restarts on DataFrame
+    * state. */
+  def paths(restartAt: Long): Seq[(String, Long, Long)] = Seq(
+    ("local", Traversals.bfsLocalMaxEdges, Traversals.broadcastFrontierMax),
+    ("driver-held", 0L, Traversals.broadcastFrontierMax),
+    ("DataFrame-state", 0L, 0L),
+    (s"restart past $restartAt", 0L, restartAt))
+
+  test("bfs, bfsLevelsPrepared and dfsLeaves: local, driver-held, DataFrame-state and " +
+    "restarted paths return identical rows and schema") {
+    (0 until 4).foreach { i =>
+      val (n, es) = messyGraph(i)
+      val e = es.toDF("src", "dst")
+      val ref = refBfsLevels(es.map { case (a, b) => (a.toInt, b.toInt) }.toSet, 0)
+      // one vertex short of the reached set: the bound is crossed by the
+      // last level, after at least one driver-held superstep
+      val restartAt = (ref.size - 1).toLong
+      assert(restartAt >= 2, s"graph #$i: $es")
+      val starts = Seq(0L, (n / 2).toLong, 0L)
+      val runs = paths(restartAt).map { case (name, local, held) =>
+        val bfs = Traversals.bfs(e, 0L, local, held)
+        val leveled = Traversals.bfsLevelsPrepared(e, starts, 10000, local, held)
+        val cut = Traversals.bfsLevelsPrepared(e, starts, 1, local, held)
+        val leaves = Traversals.dfsLeaves(e, 0L, Traversals.dfsReplayMaxEdges,
+          if (local > 0) GraphAlgos.denseLocalMaxEdges else 0L, held)
+        name -> Seq(
+          bfs.schema -> bfs.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
+          leveled.schema -> leveled.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
+          cut.schema -> cut.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
+          leaves.schema -> leaves.collect().map(_.toSeq).toSeq)
+      }
+      val (_, local) = runs.head
+      val bfsLevels = local.head._2.map(r => r(2).asInstanceOf[Long].toInt -> r(1).asInstanceOf[Int])
+      assert(bfsLevels.toMap === ref, s"graph #$i: $es")
+      assert(local.head._2.map(_.head) === (0 until ref.size).map(_.toLong), s"graph #$i: $es")
+      runs.tail.foreach { case (name, got) =>
+        Seq("bfs", "bfsLevelsPrepared", "bfsLevelsPrepared, maxLevels = 1", "dfsLeaves")
+          .zip(got.zip(local)).foreach { case (op, (g, l)) =>
+            assert(g._1 === l._1, s"$op schema, $name path, graph #$i: $es")
+            assert(g._2 === l._2, s"$op rows, $name path, graph #$i: $es")
+          }
+      }
+    }
+  }
+
+  test("a null vertex id fails on the driver-held path as on the local path") {
+    val e = Seq((0L, Some(1L)), (1L, Some(2L)), (2L, None)).toDF("src", "dst")
+    def failure(run: => Any): String = {
+      val err = intercept[Exception](run)
+      Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+    }
+    Seq("local" -> Traversals.bfsLocalMaxEdges, "driver-held" -> 0L).foreach { case (path, local) =>
+      val msgs = Seq(
+        failure(Traversals.bfs(e, 0L, localMaxEdges = local).collect()),
+        failure(Traversals.bfsLevelsPrepared(e, Seq(0L), 10000, local).collect()),
+        failure(Traversals.dfsLeaves(e, 0L, localMaxEdges = local).collect()))
+      msgs.foreach(m => assert(m.toLowerCase.contains("null"), s"$path path: $m"))
+    }
   }
 
   test("sssp agrees with a reference Dijkstra on random weighted digraphs") {

@@ -141,9 +141,9 @@ class TraversalSpec extends SparkSpec {
     val (dfsRows, dfsJobs) = jobsOf(cat.dfsLeaves("g7", 0).collect())
     assert(dfsRows.map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L))
     assert(dfsJobs === 1)
-    // the distributed rank: a window partitioned by level, never one
-    // unpartitioned window over the whole reachable set
-    val windows = Traversals.bfs(cat.load("g7"), 0, localMaxEdges = 0L)
+    // the DataFrame-state rank: a window partitioned by level, never
+    // one unpartitioned window over the whole reachable set
+    val windows = Traversals.bfs(cat.load("g7"), 0, localMaxEdges = 0L, maxHeld = 0L)
       .queryExecution.sparkPlan.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }
@@ -244,63 +244,83 @@ class TraversalSpec extends SparkSpec {
     assert(distJobs > localJobs, s"distributed $distJobs jobs, local $localJobs")
   }
 
-  test("job-count pin: bfs, per-root distances and reachability pay the same jobs per level") {
+  /** A path 0 → 1 → … → k plus padding edges vertex 0 never reaches,
+    * more than bfsLocalMaxEdges of them, so no call takes a local path. */
+  def paddedPath(k: Int): DataFrame = {
     import spark.implicits._
-    // a path 0 → 1 → … → k plus padding edges vertex 0 never reaches,
-    // more than bfsLocalMaxEdges of them, so every call runs the
-    // distributed level loop
     val padding = (0L until 16400L).map(i => (1000000L + i, 1000001L + i))
-    def graph(k: Int) = ((0L until k.toLong).map(i => (i, i + 1)) ++ padding).toDF("src", "dst")
+    ((0L until k.toLong).map(i => (i, i + 1)) ++ padding).toDF("src", "dst")
+  }
+
+  /** jobs(k = 17) − jobs(k = 9) of `call` on [[paddedPath]]: the jobs
+    * of eight more levels. */
+  def eightLevels(call: DataFrame => DataFrame, rowsAt: Int => Int = _ + 1): Int = {
+    val Seq(j9, j17) = Seq(9, 17).map { k =>
+      val (rows, jobs) = jobsOf(call(paddedPath(k)).collect())
+      assert(rows.length === rowsAt(k), s"k = $k")
+      jobs
+    }
+    j17 - j9
+  }
+
+  test("job-count pin: bfs, per-root distances and reachability pay the same jobs per level") {
+    // on DataFrame state; the driver-held supersteps are pinned below
+    import spark.implicits._
     val roots = Seq(0L).toDF("root")
     val seeds = Seq(0L).toDF("vertex")
     val calls: Seq[(String, DataFrame => DataFrame)] = Seq(
       "bfsLevelsPrepared" ->
-        (e => Traversals.bfsLevelsPrepared(e, Seq(0L), 10000, localMaxEdges = 0L)),
+        (e => Traversals.bfsLevelsPrepared(e, Seq(0L), 10000, localMaxEdges = 0L, maxHeld = 0L)),
       "multiSourceDistances" -> (e => Traversals.multiSourceDistances(e, roots)),
       "reachableFrom" -> (e => Traversals.reachableFrom(e, seeds)))
-    // jobs(k = 17) − jobs(k = 9): eight supersteps and one compaction
-    // of the visited set
-    def eightLevels(call: DataFrame => DataFrame): Int = {
-      val Seq(j9, j17) = Seq(9, 17).map { k =>
-        val (rows, jobs) = jobsOf(call(graph(k)).collect())
-        assert(rows.length === k + 1, s"k = $k")
-        jobs
-      }
-      j17 - j9
+    // eight supersteps and one compaction of the visited set, each
+    // level's row count taken by the job that checkpoints it; then a
+    // DataFrame-state single-source bfs on G7 from 0 and from 3
+    def pins(g7Jobs: Seq[Int]): Unit = {
+      assert(calls.map { case (name, call) => name -> eightLevels(call) } ===
+        calls.map { case (name, _) => name -> 33 })
+      val g7 = Seq(0L, 3L).map(s => s -> jobsOf(
+        Traversals.bfs(edges("G7"), s, localMaxEdges = 0L, maxHeld = 0L).collect())._2)
+      assert(g7 === Seq(0L, 3L).zip(g7Jobs))
     }
-    // The frontier is broadcast by hint; whether the anti-join also
-    // broadcasts the visited side follows its size estimate, which a
-    // checkpoint takes from the block sizes the status store has heard
-    // of so far. That read can miss and leave a much larger estimate,
-    // so with size-based broadcast on, the count depends on listener
-    // timing. Off, every superstep plans the same way.
+    // Checkpoints are sized from the block-manager master, so whether
+    // the anti-join broadcasts the visited side no longer follows
+    // listener timing: the pins hold with size-based broadcast on, and
+    // with it off, where every superstep plans the same way.
+    pins(Seq(21, 29))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // 49 is what bfsLevelsPrepared paid before the three
-      // operators shared one loop
-      assert(calls.map { case (name, call) => name -> eightLevels(call) } ===
-        calls.map { case (name, _) => name -> 49 })
-      // a forced-distributed single-source bfs on G7 starts as many
-      // jobs as before
-      val g7 = Seq(0L, 3L).map(s => s ->
-        jobsOf(Traversals.bfs(edges("G7"), s, localMaxEdges = 0L).collect())._2)
-      assert(g7 === Seq(0L -> 30, 3L -> 42))
+      pins(Seq(22, 30))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("job-count pin: a driver-held superstep is one job; dfsLeaves pays none beyond them") {
+    assert(eightLevels(e => Traversals.bfs(e, 0L)) === 8)
+    assert(eightLevels(e => Traversals.bfsLevelsPrepared(e, Seq(0L))) === 8)
+    // the replay adjacency comes from the reachability supersteps: the
+    // call costs what a bfs with the same bounded collect costs
+    assert(eightLevels(e => Traversals.dfsLeaves(e, 0L, localMaxEdges = 0L), rowsAt = _ => 1) === 8)
+    val e = paddedPath(9)
+    assert(jobsOf(Traversals.dfsLeaves(e, 0L, localMaxEdges = 0L).collect())._2 ===
+      jobsOf(Traversals.bfs(e, 0L, localMaxEdges = 0L).collect())._2)
+  }
+
   test("replay bound is exact on both paths; an unbounded replay runs; an absent graph fails to load") {
-    // G7 from 0 reduces to 10 replay edges: its 12 minus the 2 into the start
-    Seq(graft.operators.GraphAlgos.denseLocalMaxEdges, 0L).foreach { local =>
-      assert(Traversals.dfsLeaves(edges("G7"), 0, maxReplayEdges = 10L, localMaxEdges = local)
-        .collect().map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L), s"localMaxEdges=$local")
-      val e = intercept[IllegalArgumentException] {
-        Traversals.dfsLeaves(edges("G7"), 0, maxReplayEdges = 9L, localMaxEdges = local)
-      }
-      assert(e.getMessage.contains("exceed dfsReplayMaxEdges=9"), s"localMaxEdges=$local")
-      // Long.MaxValue + 1 overflows; the bounded collect clamps it
-      assert(Traversals.dfsLeaves(edges("G7"), 0, maxReplayEdges = Long.MaxValue,
-        localMaxEdges = local).collect().map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L))
+    // G7 from 0 reduces to 10 replay edges: its 12 minus the 2 into the
+    // start. Both paths: local, and distributed with driver-held or
+    // DataFrame state.
+    val held = Traversals.broadcastFrontierMax
+    Seq(graft.operators.GraphAlgos.denseLocalMaxEdges -> held, 0L -> held, 0L -> 0L).foreach {
+      case (local, maxHeld) =>
+        val path = s"localMaxEdges=$local, maxHeld=$maxHeld"
+        def leaves(maxReplay: Long) = Traversals.dfsLeaves(edges("G7"), 0, maxReplay, local, maxHeld)
+          .collect().map(_.getLong(0)).toSeq
+        assert(leaves(10L) === Seq(3L, 5L, 6L), path)
+        val e = intercept[IllegalArgumentException](leaves(9L))
+        assert(e.getMessage.contains("exceed dfsReplayMaxEdges=9"), path)
+        // Long.MaxValue + 1 overflows; the bounded collect clamps it
+        assert(leaves(Long.MaxValue) === Seq(3L, 5L, 6L), path)
     }
     assert(Traversals.bfs(edges("G7"), 0, localMaxEdges = Long.MaxValue)
       .collect().map(_.getLong(2)).toSeq === Seq(0L, 1L, 4L, 2L, 5L, 6L, 3L))
