@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.Bridge.notNull
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import scala.reflect.ClassTag
 
 /** Distributed graph traversals re-expressing the reference's two read
   * queries (ops 3/4, `secondary_server.c:117-248`) Spark-first.
@@ -172,6 +174,21 @@ object Traversals {
   private def levelRows(levels: Seq[Array[Long]]): Seq[(Long, Int)] =
     levels.zipWithIndex.flatMap { case (vs, l) => vs.toSeq.map(_ -> l) }
 
+  /** [[levelRows]] as a table whose rows are built where they are read:
+    * each level travels as at most one array slice per core, so up to
+    * [[broadcastFrontierMax]] rows cost no row-by-row encoding on the
+    * driver and no per-row serialization into the tasks (a local
+    * relation of q_graph_bfs_big's 148k rows took ~250 ms to aggregate,
+    * this table ~60 ms). */
+  private def levelTable(spark: SparkSession, levels: Seq[Array[Long]]): DataFrame = {
+    import spark.implicits._
+    val slices = spark.sparkContext.defaultParallelism max 1
+    levels.zipWithIndex.flatMap { case (vs, l) =>
+        vs.grouped((vs.length + slices - 1) / slices max 1).map(_ -> l)
+      }.toDS().flatMap { case (vs, l) => vs.iterator.map(_ -> l) }
+      .toDF("vertex", "level")
+  }
+
   /** [[driverLevels]] over a collected edge array, expanding by
     * adjacency lookup: the local path of BFS, `reachableFrom` and the
     * DFS operators, which run it to its fixpoint (`Int.MaxValue`
@@ -198,43 +215,58 @@ object Traversals {
   /** At most `room + 1` rows, clamped to one array's reach. */
   private def capOf(room: Long): Int = ((room max -1L) min (Int.MaxValue - 1L)).toInt + 1
 
-  /** [[driverLevels]] with each level ONE Spark job over the edge
-    * table `e`, scanned where it lives (cache it first; nothing is
-    * shuffled). The frontier and the visited set are broadcast; each
-    * partition keeps the edges whose `src` is in the frontier and whose
-    * `dst` is not visited, and emits its distinct new vertices, at most
-    * the remaining room + 1, so no fetch exceeds partitions × (room + 1)
-    * vertices and passing `maxHeld` is seen exactly. With `replay`, each
-    * partition also emits its reduced edges out of the frontier, at
-    * most the replay's room + 1, and a refused replay aborts the loop. A
-    * null vertex id fails the job, as the local path's typed collect
-    * fails on one. */
+  /** ONE Spark job over the rows of a [[castEdges]] table, scanned
+    * where they live (the scan itself shuffles nothing; plan the rows
+    * once for many scans): `state` is broadcast, and `part` turns each
+    * partition's rows, read with [[vertexAt]], into what that partition
+    * sends back. `part` caps its own output, so the fetch is bounded by
+    * partitions × cap whatever the table's size. The scan behind the
+    * driver-held supersteps ([[heldLevels]]) and the driver-held
+    * components ([[heldComponents]]). */
+  private def scanEdges[S: ClassTag, T: ClassTag](rows: RDD[InternalRow], state: S)(
+      part: (S, Iterator[InternalRow]) => T): Array[T] = {
+    val shared = rows.sparkContext.broadcast(state)
+    try rows.mapPartitions(it => Iterator(part(shared.value, it))).collect()
+    finally shared.destroy()
+  }
+
+  /** Column `i` of a [[castEdges]] row. A null vertex id fails the
+    * job, as the local path's typed collect fails on one. */
+  private def vertexAt(r: InternalRow, i: Int): Long = {
+    if (r.isNullAt(i)) throw new NullPointerException("null vertex id in the edge table")
+    r.getLong(i)
+  }
+
+  /** [[driverLevels]] with each level one [[scanEdges]] job over the
+    * edge table `e` (cache it first). The frontier and the visited set
+    * are broadcast; each partition keeps the edges whose `src` is in the
+    * frontier and whose `dst` is not visited, and emits its distinct new
+    * vertices, at most the remaining room + 1, so passing `maxHeld` is
+    * seen exactly. With `replay`, each partition also emits its reduced
+    * edges out of the frontier, at most the replay's room + 1, and a
+    * refused replay aborts the loop. */
   private def heldLevels(e: DataFrame, starts: Seq[Long], maxLevels: Int, maxHeld: Long,
                          replay: Option[ReplayEdges] = None): Option[Seq[Array[Long]]] = {
     val rows = castEdges(e).queryExecution.toRdd
     val keepEdges = replay.isDefined
     val start = replay.fold(0L)(_.start)
     driverLevels(starts, maxLevels, maxHeld) { (frontier, visited, room) =>
-      val state = rows.sparkContext.broadcast((frontier, visited))
       val cap = capOf(room)
       val edgeCap = replay.fold(Int.MaxValue)(r => capOf(r.room))
-      val parts = try rows.mapPartitions { it =>
-        val (f, seen) = state.value
+      val parts = scanEdges(rows, (frontier, visited)) { case ((f, seen), edges) =>
         val found = scala.collection.mutable.HashSet[Long]()
         val out = scala.collection.mutable.HashSet[(Long, Long)]()
-        while (it.hasNext && found.size < cap && out.size < edgeCap) {
-          val r = it.next()
-          if (r.isNullAt(0) || r.isNullAt(1))
-            throw new NullPointerException("null vertex id in the edge table")
-          val s = r.getLong(0)
-          val d = r.getLong(1)
+        while (edges.hasNext && found.size < cap && out.size < edgeCap) {
+          val r = edges.next()
+          val s = vertexAt(r, 0)
+          val d = vertexAt(r, 1)
           if (java.util.Arrays.binarySearch(f, s) >= 0) {
             if (java.util.Arrays.binarySearch(seen, d) < 0) found += d
             if (keepEdges && s != d && d != start) out += ((s, d))
           }
         }
-        Iterator((found.toArray, out.toArray))
-      }.collect() finally state.destroy()
+        (found.toArray, out.toArray)
+      }
       replay.foreach(_.edges ++= parts.iterator.flatMap(_._2).distinct)
       if (replay.exists(_.refused)) None else Some(parts.flatMap(_._1))
     }
@@ -249,7 +281,9 @@ object Traversals {
     * over it is not broadcast: the superstep falls back to a shuffle
     * hash join against the (persisted, src-partitioned) edges —
     * force-broadcasting an O(V) mid-BFS frontier would ship the whole
-    * frontier to every executor. */
+    * frontier to every executor. The same bound decides whether
+    * [[connectedComponents]] and [[contractedComponents]] hold their
+    * union-find on the driver ([[heldComponents]]). */
   val broadcastFrontierMax: Long = 500000L
 
   /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
@@ -261,15 +295,26 @@ object Traversals {
 
   /** Multi-source BFS: level(v) = min hop distance from ANY start
     * (landmark-distance shape). Same superstep loop, seeded with the
-    * whole start set at level 0; the paths of [[bfsLevelsPrepared]],
-    * with the edges cached as they are while the levels are
-    * driver-held ([[driverHeldLevels]]). */
-  def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long], maxLevels: Int = 10000): DataFrame = {
+    * whole start set at level 0. At most [[bfsLocalMaxEdges]] edges run
+    * on the driver ([[localLevels]]); above that the levels are
+    * driver-held while at most [[broadcastFrontierMax]] vertices are
+    * reached, one Spark job per level over the edges cached as they are
+    * ([[driverHeldLevels]]), and the result is a local relation; past
+    * the bound the traversal restarts on the DataFrame-state
+    * [[levelLoop]]. All paths return identical rows. */
+  def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long], maxLevels: Int = 10000): DataFrame =
+    bfsLevelsMulti(edges, starts, maxLevels, bfsLocalMaxEdges, broadcastFrontierMax)
+
+  /** [[bfsLevelsMulti]] with both bounds as arguments: `localMaxEdges`
+    * 0 skips the local path, `maxHeld` 0 runs the DataFrame-state loop
+    * from the start. */
+  private[graft] def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long], maxLevels: Int,
+                                    localMaxEdges: Long, maxHeld: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     require(starts.nonEmpty, "at least one start vertex")
-    driverHeldLevels(edges, starts, maxLevels, bfsLocalMaxEdges, broadcastFrontierMax) match {
-      case Some(ls) => levelRows(ls).toDF("vertex", "level")
+    driverHeldLevels(edges, starts, maxLevels, localMaxEdges, maxHeld) match {
+      case Some(ls) => levelTable(spark, ls)
       case None =>
         // Materialise the (possibly derived/unioned) edge table ONCE,
         // hash-partitioned by src so non-broadcast supersteps reuse the
@@ -290,10 +335,20 @@ object Traversals {
                                localMaxEdges: Long, maxHeld: Long): Option[Seq[Array[Long]]] =
     collectAtMost(castEdges(edges), localMaxEdges) match {
       case Some(raw) => Some(localLevels(raw, starts, maxLevels))
-      case None =>
-        val held = castEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-        try heldLevels(held, starts, maxLevels, maxHeld)
-        finally held.unpersist(blocking = false)
+      case None => onCachedEdges(edges)(heldLevels(_, starts, maxLevels, maxHeld))
+    }
+
+  /** `scans` over `edges` cached as they are (no repartition, so no
+    * shuffle). A table Spark already holds — persisted, say by
+    * [[partitionEdges]], or a checkpoint — is read in place; any other
+    * is persisted for the scans and dropped after. */
+  private def onCachedEdges[T](edges: DataFrame)(scans: DataFrame => T): T =
+    if (edges.storageLevel != StorageLevel.NONE ||
+        edges.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      scans(edges)
+    else {
+      val held = castEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      try scans(held) finally held.unpersist(blocking = false)
     }
 
   /** Edge-count bound for the driver-local BFS fast path: covers the
@@ -306,39 +361,6 @@ object Traversals {
     * level is a Spark job ([[heldLevels]], or [[levelLoop]] past
     * [[broadcastFrontierMax]]). */
   val bfsLocalMaxEdges: Long = 16384L
-
-  /** [[bfsLevelsMulti]] over an edge table the CALLER already
-    * normalised and persisted via [[partitionEdges]] — for running
-    * many traversals over one graph without re-shuffling/re-caching
-    * per call (the shared table is NOT unpersisted here). At most
-    * `localMaxEdges` edges run on the driver ([[localLevels]]); 0
-    * skips that path. Above it the levels are driver-held while at most
-    * [[broadcastFrontierMax]] vertices are reached, one Spark job per
-    * level over `e` ([[heldLevels]]), and the result is a local
-    * relation; past the bound the traversal restarts on the
-    * DataFrame-state [[levelLoop]]. All paths return identical rows. */
-  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int = 10000,
-                        localMaxEdges: Long = bfsLocalMaxEdges): DataFrame =
-    bfsLevelsPrepared(e, starts, maxLevels, localMaxEdges, broadcastFrontierMax)
-
-  /** [[bfsLevelsPrepared]] with the driver-held bound `maxHeld` as an
-    * argument; 0 runs the DataFrame-state loop from the start. */
-  private[graft] def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int,
-                                       localMaxEdges: Long, maxHeld: Long): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    require(starts.nonEmpty, "at least one start vertex")
-    // Tiny-graph fast path: identical (vertex, min-hop level) output,
-    // computed in one pass on the driver.
-    val levels = collectAtMost(castEdges(e), localMaxEdges) match {
-      case Some(raw) => Some(localLevels(raw, starts, maxLevels))
-      case None => heldLevels(e, starts, maxLevels, maxHeld)
-    }
-    levels match {
-      case Some(ls) => levelRows(ls).toDF("vertex", "level")
-      case None => levelLoop(e, starts.distinct.toDF("vertex"), Nil, maxLevels)._1
-    }
-  }
 
   /** One BSP superstep of every DataFrame-state frontier operator:
     * expand the frontier `(keys…, vertex)` along `e`'s edges and drop
@@ -477,36 +499,6 @@ object Traversals {
     }
   }
 
-  /** GraphX Pregel variant of [[bfsLevels]] (cross-check + the
-    * "GraphX for analytics" path). Same output contract. */
-  def bfsLevelsPregel(edges: DataFrame, start: Long): DataFrame =
-    bfsLevelsPregelOn(edges.sparkSession, GraphAlgos.unitGraph(edges), start)
-
-  /** [[bfsLevelsPregel]] over an ALREADY BUILT (possibly session-
-    * staged, [[GraphAlgos.stagedUnitGraph]]) unit graph: the
-    * fromEdges build is per-fixture derivation a caller stages once;
-    * reps/traversals pay only the supersteps. Identical output — the
-    * mapVertices seeding reproduces the fromEdges[Int,...] default
-    * attribute exactly, and Pregel's per-iteration unpersist touches
-    * only its own wrapper RDDs, never the staged parent's blocks. */
-  def bfsLevelsPregelOn(spark: SparkSession, g0: Graph[Unit, Unit],
-                        start: Long): DataFrame = {
-    import spark.implicits._
-    GraphAlgos.ensureGraphCheckpointDir(spark.sparkContext)
-    val g = g0.mapVertices((id, _) => if (id == start) 0 else Int.MaxValue)
-    val res = g.pregel(Int.MaxValue)(
-      (_, attr, msg) => math.min(attr, msg),
-      t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-             Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-    val out = res.vertices.filter(_._2 != Int.MaxValue)
-      .map { case (v, l) => (v, l) }.toDF("vertex", "level")
-    // Isolated start vertex: fromEdges only materialises endpoint vertices.
-    if (out.where(col("vertex") === start).isEmpty)
-      out.union(Seq((start, 0)).toDF("vertex", "level"))
-    else out
-  }
-
   /** Replay inputs above this edge count abort with a clear error
     * instead of a driver OOM (the reference contract bounds graphs at
     * n=100; this guard is ~4 orders of magnitude above that). 5 M
@@ -575,9 +567,8 @@ object Traversals {
       case Some(raw) => Some(localReducedAdjacency(raw, start)).filter(_.length <= maxReplayEdges)
       case None =>
         val replay = new ReplayEdges(start, maxReplayEdges)
-        val held = eCast.persist(StorageLevel.MEMORY_AND_DISK)
-        val reached = try heldLevels(held, Seq(start), Int.MaxValue, maxHeld, Some(replay))
-                      finally held.unpersist(blocking = false)
+        val reached =
+          onCachedEdges(edges)(heldLevels(_, Seq(start), Int.MaxValue, maxHeld, Some(replay)))
         if (replay.refused) None
         else if (reached.isDefined) Some(replay.edges.toArray)
         else {
@@ -710,7 +701,7 @@ object Traversals {
     dfsLeafClassesOn(ePart, start)
 
   private def dfsLeafClassesOn(ePart: DataFrame, start: Long): DataFrame = {
-    val reach = bfsLevelsPrepared(ePart, Seq(start))
+    val reach = bfsLevelsMulti(ePart, Seq(start))
       .select("vertex").checkpointSized()
     // reachable-src, deduped edge set (self-loops already dropped by
     // the caller); every dst is then reachable too (one BFS step from
@@ -1598,31 +1589,30 @@ object Traversals {
     * 2^k hops after k rounds, so rounds are O(log diameter) instead of
     * O(diameter). That's the difference between ~40 and ~6 shuffles on
     * a long-chain 100 TB graph. Output `(vertex, component)`,
-    * component = min vertex id; edges treated as undirected. */
+    * component = min vertex id; edges treated as undirected.
+    *
+    * While the graph has at most [[broadcastFrontierMax]] vertices the
+    * components are driver-held ([[heldComponents]]): one Spark job
+    * over the edges, and the result is a local relation. The loop's
+    * O(log diameter) superstep barriers dominate its data work on such
+    * graphs (q_graph_cc's 20-edge chains measured ~1.5 s of pure
+    * scheduling; q_er_cluster's 30.7k-edge match graph 6.4 s). Only a
+    * larger graph runs the loop, which reads `edges` again. Both paths
+    * return identical rows. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 10000,
-                          jumps: Int = 2,
-                          localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
-    val sym = symmetrize(edges)
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused every round
-    // Small-graph fast path (same bounded-collect contract as
-    // bfsLevelsPrepared): the distributed loop costs O(log diameter)
-    // superstep BARRIERS, which dominate data work by 100x on
-    // fixture-sized graphs (q_graph_cc's 20-edge chains measured
-    // ~1.5 s of pure scheduling). Union-find on the driver emits the
-    // identical (vertex, min-id component) labels. CC's own bound is
-    // 64k (vs BFS's 16k reference-envelope bound): union-find's
-    // collect is a flat edge array (64k x 16 B = 1 MB, trivially
-    // driver-safe), and r13's q_er_cluster measured the cliff directly
-    // — its 30.7k-edge match graph paid 6.4 s of pointer-jump barriers
-    // for work union-find does in microseconds. Graphs that GROW with
-    // the data (cc_big's 600k+, any 100 TB input) stay on the
-    // distributed loop.
-    collectAtMost(sym, localMaxEdges) match {
-      case Some(es) =>
-        sym.unpersist(blocking = false)
-        return unionFindComponents(edges.sparkSession, es)
+                          jumps: Int = 2): DataFrame =
+    connectedComponents(edges, maxIters, jumps, broadcastFrontierMax)
+
+  /** [[connectedComponents]] with the driver-held bound `maxHeld` as an
+    * argument; 0 runs the pointer-jumping loop. */
+  private[graft] def connectedComponents(edges: DataFrame, maxIters: Int, jumps: Int,
+                                         maxHeld: Long): DataFrame = {
+    heldComponents(edges, maxHeld) match {
+      case Some(held) => return held
       case None =>
     }
+    val sym = symmetrize(edges)
+      .persist(StorageLevel.MEMORY_AND_DISK) // reused every round
     // Fused first round: with identity labels, round 1's neighbour-min
     // join degenerates to component := min(v, min of in-neighbours) —
     // one hash aggregate over the edge table, no labels join. At scale
@@ -1674,15 +1664,12 @@ object Traversals {
     labels
   }
 
-  /** Driver-side union-find over a collected symmetric edge array —
-    * the shared small-graph fast path of [[connectedComponents]] and
-    * [[contractedComponents]]. Union toward the smaller root: the
-    * surviving root of any merge chain is the component's min id,
+  /** Union-find over vertex ids, uniting toward the smaller root: the
+    * surviving root of any merge chain is its component's min id,
     * matching the distributed min-label fixpoint exactly. */
-  private def unionFindComponents(spark: SparkSession,
-                                  es: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    val parent = scala.collection.mutable.HashMap[Long, Long]()
+  private final class UnionFind {
+    private val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def size: Int = parent.size
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -1690,19 +1677,44 @@ object Traversals {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    es.foreach { case (a, b) =>
+    def union(a: Long, b: Long): Unit = {
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    parent.keys.toSeq.sorted.map(v => (v, find(v)))
-      .toDF("vertex", "component")
+    /** Every vertex with its root. */
+    def roots: Array[(Long, Long)] = parent.keys.toArray.map(v => (v, find(v)))
+  }
+
+  /** The components of [[connectedComponents]] on driver-held state,
+    * from one [[scanEdges]] job: each partition union-finds its own
+    * edges and emits `(vertex, root)` for each of its vertices, at most
+    * `maxHeld` + 1 of them, and the driver unites the pairs (a spanning
+    * forest of each partition preserves the components; Lattanzi et al.,
+    * SPAA 2011). A local relation, vertices ascending; None when the
+    * graph has more than `maxHeld` vertices. */
+  private def heldComponents(edges: DataFrame, maxHeld: Long): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val cap = capOf(maxHeld)
+    val parts = scanEdges(castEdges(edges).queryExecution.toRdd, ()) { (_, es) =>
+      val uf = new UnionFind
+      while (es.hasNext && uf.size < cap) { val r = es.next(); uf.union(vertexAt(r, 0), vertexAt(r, 1)) }
+      uf.roots
+    }
+    if (parts.exists(_.length >= cap)) None
+    else {
+      val all = new UnionFind
+      parts.foreach(_.foreach { case (v, r) => all.union(v, r) })
+      if (all.size > maxHeld) None
+      else Some(all.roots.sortBy(_._1).toSeq.toDF("vertex", "component"))
+    }
   }
 
   /** [[connectedComponents]] with leading HASH-TO-MIN contraction
     * rounds (r18, the q_spatial_dbscan_auto finding): the pointer-
     * jumping loop's cost at local[*] is superstep BARRIERS, and a
-    * mid-size graph (10⁵–10⁷ edges — above the union-find collect
+    * mid-size graph (10⁵–10⁷ edges, more vertices than the driver-held
     * bound, below "big data") pays tens of seconds of scheduling for
     * data work DuckDB does in under a second. Each contraction round
     * is ONE hash agg (every vertex's provisional label = min of
@@ -1711,31 +1723,31 @@ object Traversals {
     * every radius-1 neighbourhood onto its min vertex, shrinking the
     * graph ~avg-degree× per round (measured on the sf10 auto-DBSCAN
     * core graph: 1.67 M edges → 183 k after one round → 49 k after
-    * two, under the union-find fast path). EXACT: l(v) = min({v} ∪
-    * N(v)) stays inside v's component, quotient components biject
-    * with original components, and the component's min vertex m has
-    * l(m) = m (m is ≤ every neighbour), so min-labels are preserved
-    * verbatim — callers get bit-identical output to
-    * [[connectedComponents]]. At cluster scale the same two rounds
-    * cut the iterated loop's input by the same degree factor, so this
-    * is a pure win whenever average degree is high — exactly the
-    * density regime DBSCAN core graphs live in. */
+    * two). EXACT: l(v) = min({v} ∪ N(v)) stays inside v's component,
+    * quotient components biject with original components, and the
+    * component's min vertex m has l(m) = m (m is ≤ every neighbour),
+    * so min-labels are preserved verbatim — callers get bit-identical
+    * output to [[connectedComponents]]. At cluster scale the same two
+    * rounds cut the iterated loop's input by the same degree factor,
+    * so this is a pure win whenever average degree is high — exactly
+    * the density regime DBSCAN core graphs live in. */
   def contractedComponents(edges: DataFrame, rounds: Int = 2,
-                           maxIters: Int = 10000, jumps: Int = 2,
-                           localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
-    var cur = symmetrize(edges).checkpointSized() // (src, dst), both orders
-    // below the union-find collect bound, contraction is pure overhead
-    // (two agg+join rounds to shrink a graph union-find already eats
-    // in microseconds — measured +0.7 s on q_spatial_dbscan's sf0.1
-    // fixture); collect the already-materialized checkpoint straight
-    // into the shared union-find — same cost profile as the plain
-    // loop's small path, not a re-symmetrizing delegation
-    collectAtMost(cur, localMaxEdges) match {
-      case Some(es) =>
-        dropCheckpoint(cur)
-        return unionFindComponents(edges.sparkSession, es)
+                           maxIters: Int = 10000, jumps: Int = 2): DataFrame =
+    contractedComponents(edges, rounds, maxIters, jumps, broadcastFrontierMax)
+
+  /** [[contractedComponents]] with the driver-held bound `maxHeld` as
+    * an argument, for the raw edges and for the quotient; 0 runs the
+    * contraction rounds and the pointer-jumping loop. */
+  private[graft] def contractedComponents(edges: DataFrame, rounds: Int, maxIters: Int,
+                                          jumps: Int, maxHeld: Long): DataFrame = {
+    // within the driver-held bound contraction is pure overhead: two
+    // agg+join rounds to shrink a graph the driver-side union-find
+    // already eats (measured +0.7 s on q_spatial_dbscan's sf0.1 fixture)
+    heldComponents(edges, maxHeld) match {
+      case Some(held) => return held
       case None =>
     }
+    var cur = symmetrize(edges).checkpointSized() // (src, dst), both orders
     // vertex -> current quotient label, composed across rounds
     var map: DataFrame = null
     (1 to rounds).foreach { _ =>
@@ -1762,7 +1774,7 @@ object Traversals {
       dropCheckpoint(prevCur)
       dropCheckpoint(lbl)
     }
-    val qComp = connectedComponents(cur, maxIters, jumps, localMaxEdges)
+    val qComp = connectedComponents(cur, maxIters, jumps, maxHeld)
     // materialize the composed result into its OWN blocks, then drop
     // the vertex→label map's and the quotient labels' checkpoints —
     // without this each call on the hot dedup/ER/cluster/DBSCAN paths
@@ -1952,7 +1964,7 @@ object Traversals {
                                   localMaxEdges: Long = bfsLocalMaxEdges): DataFrame = {
     val e0 = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    // Tiny-graph fast path (the BFS/CC localMaxEdges contract): below
+    // Tiny-graph fast path (the BFS localMaxEdges contract): below
     // the bound, each FW-BW peel round's fixed job latency dwarfs the
     // work. Identical output (vertex, min-member component). A bound
     // of 0 forces the peel even on an empty graph.

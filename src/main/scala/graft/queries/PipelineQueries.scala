@@ -296,7 +296,7 @@ object PipelineQueries {
     // hash-to-min contraction (2 rounds) before the pointer-jumping
     // loop: DBSCAN core graphs are exactly the high-average-degree
     // regime where contraction collapses the graph under the
-    // union-find fast path (sf10 auto: 1.67 M edges → 49 k; exactness
+    // driver-held bound (sf10 auto: 1.67 M edges → 49 k; exactness
     // argument in Traversals.contractedComponents's scaladoc)
     val comp = graft.operators.Traversals.contractedComponents(coreEdges)
     val border = pairs

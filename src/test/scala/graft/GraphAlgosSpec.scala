@@ -302,7 +302,7 @@ class GraphAlgosSpec extends SparkSpec {
       .getInt("spark.graphx.pregel.checkpointInterval", -1) == 25)
     // ...and PeriodicCheckpointer silently skips without a RELIABLE
     // checkpoint dir, so every GraphX entry point must guarantee one
-    GraphAlgos.connectedComponentsGraphX(ring).count()
+    GraphAlgos.pageRank(ring).count()
     assert(spark.sparkContext.getCheckpointDir.nonEmpty,
       "GraphX entry ran without ensuring a checkpoint dir")
   }

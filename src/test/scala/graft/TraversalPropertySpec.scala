@@ -56,22 +56,35 @@ class TraversalPropertySpec extends SparkSpec {
   }
 
   test("connectedComponents agrees with a reference union-find on random graphs") {
-    (0 until 6).foreach { i =>
-      val (n, edges) = sample(200 + i)
-      val e = edges.toSeq.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
+    // the random graphs, then the same with duplicate edges and two
+    // vertices that only have self-loops
+    val graphs = (0 until 6).map(i => sample(200 + i)).flatMap { case (n, edges) =>
+      val es = edges.toSeq
+      Seq(n -> es, (n + 2) -> (es ++ es.take(3) ++ Seq((n, n), (n + 1, n + 1), (n, n))))
+    }
+    graphs.zipWithIndex.foreach { case ((n, edges), i) =>
+      val e = edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
       // reference union-find (undirected)
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
       edges.foreach { case (a, b) =>
         val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val touched = edges.flatMap { case (a, b) => Seq(a, b) }
+      val touched = edges.flatMap { case (a, b) => Seq(a, b) }.toSet
       val expected = touched.map(v => v.toLong -> find(v).toLong).toMap
-      val got = Traversals.connectedComponents(e).collect()
-        .map(r => r.getAs[Long]("vertex") -> r.getAs[Long]("component")).toMap
-      // components must partition identically; representative = min id,
-      // and union-find with min-root merging yields exactly that
-      assert(got === expected, s"graph #$i: $edges")
+      // driver-held, the pointer-jumping loop, and a bound one vertex
+      // short of the graph, which the held scan sees and restarts on
+      // the loop
+      val runs = Seq("default" -> Traversals.connectedComponents(e),
+        "maxHeld = 0" -> Traversals.connectedComponents(e, 10000, 2, 0L),
+        "maxHeld = V - 1" -> Traversals.connectedComponents(e, 10000, 2, touched.size - 1L))
+      runs.foreach { case (path, df) =>
+        val got = df.collect()
+          .map(r => r.getAs[Long]("vertex") -> r.getAs[Long]("component")).toMap
+        // components must partition identically; representative = min
+        // id, and union-find with min-root merging yields exactly that
+        assert(got === expected, s"$path, graph #$i: $edges")
+      }
     }
   }
 
@@ -83,10 +96,8 @@ class TraversalPropertySpec extends SparkSpec {
       def levels(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getAs[Long]("vertex") -> r.getAs[Int]("level")).toMap
       val multi = levels(Traversals.bfsLevelsMulti(e, starts))
-      val ep = Traversals.partitionEdges(e)
-      val forced =
-        try levels(Traversals.bfsLevelsPrepared(ep, starts, 10000, localMaxEdges = 0L))
-        finally ep.unpersist(blocking = false)
+      val forced = levels(Traversals.bfsLevelsMulti(e, starts, 10000, 0L,
+        Traversals.broadcastFrontierMax))
       val expected = starts.map(s => refBfsLevels(edges, s.toInt)
           .map { case (v, l) => v.toLong -> l })
         .reduce { (a, b) =>
@@ -150,7 +161,7 @@ class TraversalPropertySpec extends SparkSpec {
     ("DataFrame-state", 0L, 0L),
     (s"restart past $restartAt", 0L, restartAt))
 
-  test("bfs, bfsLevelsPrepared and dfsLeaves: local, driver-held, DataFrame-state and " +
+  test("bfs, bfsLevelsMulti and dfsLeaves: local, driver-held, DataFrame-state and " +
     "restarted paths return identical rows and schema") {
     (0 until 4).foreach { i =>
       val (n, es) = messyGraph(i)
@@ -163,8 +174,8 @@ class TraversalPropertySpec extends SparkSpec {
       val starts = Seq(0L, (n / 2).toLong, 0L)
       val runs = paths(restartAt).map { case (name, local, held) =>
         val bfs = Traversals.bfs(e, 0L, local, held)
-        val leveled = Traversals.bfsLevelsPrepared(e, starts, 10000, local, held)
-        val cut = Traversals.bfsLevelsPrepared(e, starts, 1, local, held)
+        val leveled = Traversals.bfsLevelsMulti(e, starts, 10000, local, held)
+        val cut = Traversals.bfsLevelsMulti(e, starts, 1, local, held)
         val leaves = Traversals.dfsLeaves(e, 0L, Traversals.dfsReplayMaxEdges,
           if (local > 0) GraphAlgos.denseLocalMaxEdges else 0L, held)
         name -> Seq(
@@ -178,7 +189,7 @@ class TraversalPropertySpec extends SparkSpec {
       assert(bfsLevels.toMap === ref, s"graph #$i: $es")
       assert(local.head._2.map(_.head) === (0 until ref.size).map(_.toLong), s"graph #$i: $es")
       runs.tail.foreach { case (name, got) =>
-        Seq("bfs", "bfsLevelsPrepared", "bfsLevelsPrepared, maxLevels = 1", "dfsLeaves")
+        Seq("bfs", "bfsLevelsMulti", "bfsLevelsMulti, maxLevels = 1", "dfsLeaves")
           .zip(got.zip(local)).foreach { case (op, (g, l)) =>
             assert(g._1 === l._1, s"$op schema, $name path, graph #$i: $es")
             assert(g._2 === l._2, s"$op rows, $name path, graph #$i: $es")
@@ -197,10 +208,15 @@ class TraversalPropertySpec extends SparkSpec {
     Seq("local" -> Traversals.bfsLocalMaxEdges, "driver-held" -> 0L).foreach { case (path, local) =>
       val msgs = Seq(
         failure(Traversals.bfs(e, 0L, localMaxEdges = local).collect()),
-        failure(Traversals.bfsLevelsPrepared(e, Seq(0L), 10000, local).collect()),
+        failure(Traversals.bfsLevelsMulti(e, Seq(0L), 10000, local,
+          Traversals.broadcastFrontierMax).collect()),
         failure(Traversals.dfsLeaves(e, 0L, localMaxEdges = local).collect()))
       msgs.foreach(m => assert(m.toLowerCase.contains("null"), s"$path path: $m"))
     }
+    // components have no local path: driver-held is their first
+    Seq(failure(Traversals.connectedComponents(e).collect()),
+        failure(Traversals.contractedComponents(e).collect()))
+      .foreach(m => assert(m.toLowerCase.contains("null"), s"components: $m"))
   }
 
   test("sssp agrees with a reference Dijkstra on random weighted digraphs") {
@@ -256,18 +272,6 @@ class TraversalPropertySpec extends SparkSpec {
           s"graph #$i: mass ${pr.values.sum} != $n")
         assert(pr.values.forall(_ >= 0.15 - 1e-12))
       }
-    }
-  }
-
-  test("Pregel BFS agrees with driver-loop BFS on random graphs") {
-    (0 until 3).foreach { i =>
-      val (_, edges) = sample(100 + i)
-      val e = edges.toSeq.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
-      val a = Traversals.bfsLevels(e, 0).collect()
-        .map(r => (r.getAs[Long]("vertex"), r.getAs[Int]("level"))).toSet
-      val b = Traversals.bfsLevelsPregel(e, 0).collect()
-        .map(r => (r.getAs[Long]("vertex"), r.getAs[Int]("level"))).toSet
-      assert(a === b, s"graph #$i: $edges")
     }
   }
 }

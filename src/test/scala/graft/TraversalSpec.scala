@@ -70,14 +70,12 @@ class TraversalSpec extends SparkSpec {
     // forcing localMaxEdges=0 runs the distributed BSP loop on the
     // same input — outputs must be identical row sets
     Seq(0L, 3L).foreach { start =>
-      val e = Traversals.partitionEdges(edges("G7"))
-      try {
-        val fast = Traversals.bfsLevelsPrepared(e, Seq(start), 10000)
-          .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-        val dist = Traversals.bfsLevelsPrepared(e, Seq(start), 10000, localMaxEdges = 0L)
-          .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-        assert(fast === dist, s"paths diverged from start $start")
-      } finally e.unpersist(blocking = false)
+      val fast = Traversals.bfsLevelsMulti(edges("G7"), Seq(start))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      val dist = Traversals.bfsLevelsMulti(edges("G7"), Seq(start), 10000, 0L,
+          Traversals.broadcastFrontierMax)
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+      assert(fast === dist, s"paths diverged from start $start")
     }
   }
 
@@ -169,12 +167,13 @@ class TraversalSpec extends SparkSpec {
     val seeds = Seq(0L).toDF("vertex")
     // the jobs of one call plus a collect of its result: the one
     // bounded collect, plus the staging an operator does before it
-    // (lubyMis and contractedComponents checkpoint the symmetrised
-    // edges, connectedComponents and labelPropagation cache them,
-    // reachableFrom caches the cast edges). The collect is one job on
-    // a one-partition input (the canonical table, a coalesced shuffle
-    // output) and two on the 4-partition fixture (the limit scans one
-    // partition, then the rest).
+    // (lubyMis checkpoints the symmetrised edges, labelPropagation
+    // caches them, reachableFrom caches the cast edges). The collect
+    // is one job on a one-partition input (the canonical table, a
+    // coalesced shuffle output) and two on the 4-partition fixture
+    // (the limit scans one partition, then the rest).
+    // connectedComponents and contractedComponents stage nothing: their
+    // driver-held union-find is one job over all partitions.
     val pins: Seq[(String, () => DataFrame, Int)] = Seq(
       ("trianglesByMinVertexCanon", () => GraphAlgos.trianglesByMinVertexCanon(und), 1),
       ("jaccardPerEdgeCanon", () => GraphAlgos.jaccardPerEdgeCanon(und), 1),
@@ -184,8 +183,8 @@ class TraversalSpec extends SparkSpec {
       ("greedyMatchingCanon", () => GraphAlgos.greedyMatchingCanon(und, rounds = 2), 1),
       ("dfsLeafResidual", () => Traversals.dfsLeafResidual(e, 0L), 2),
       ("lubyMis", () => Traversals.lubyMis(e, rounds = 2), 3),
-      ("connectedComponents", () => Traversals.connectedComponents(e), 3),
-      ("contractedComponents", () => Traversals.contractedComponents(e), 3),
+      ("connectedComponents", () => Traversals.connectedComponents(e), 1),
+      ("contractedComponents", () => Traversals.contractedComponents(e), 1),
       ("reachableFrom", () => Traversals.reachableFrom(e, seeds), 2),
       ("stronglyConnectedComponents", () => Traversals.stronglyConnectedComponents(e), 2),
       ("labelPropagation", () => Traversals.labelPropagation(e), 3))
@@ -269,8 +268,8 @@ class TraversalSpec extends SparkSpec {
     val roots = Seq(0L).toDF("root")
     val seeds = Seq(0L).toDF("vertex")
     val calls: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "bfsLevelsPrepared" ->
-        (e => Traversals.bfsLevelsPrepared(e, Seq(0L), 10000, localMaxEdges = 0L, maxHeld = 0L)),
+      "bfsLevelsMulti" ->
+        (e => Traversals.bfsLevelsMulti(e, Seq(0L), 10000, localMaxEdges = 0L, maxHeld = 0L)),
       "multiSourceDistances" -> (e => Traversals.multiSourceDistances(e, roots)),
       "reachableFrom" -> (e => Traversals.reachableFrom(e, seeds)))
     // eight supersteps and one compaction of the visited set, each
@@ -297,7 +296,7 @@ class TraversalSpec extends SparkSpec {
 
   test("job-count pin: a driver-held superstep is one job; dfsLeaves pays none beyond them") {
     assert(eightLevels(e => Traversals.bfs(e, 0L)) === 8)
-    assert(eightLevels(e => Traversals.bfsLevelsPrepared(e, Seq(0L))) === 8)
+    assert(eightLevels(e => Traversals.bfsLevelsMulti(e, Seq(0L))) === 8)
     // the replay adjacency comes from the reachability supersteps: the
     // call costs what a bfs with the same bounded collect costs
     assert(eightLevels(e => Traversals.dfsLeaves(e, 0L, localMaxEdges = 0L), rowsAt = _ => 1) === 8)
@@ -328,13 +327,6 @@ class TraversalSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-absent").toString)
     val e = intercept[Exception] { cat.load("absent") }
     assert(e.getMessage.contains("absent"), e.getMessage)
-  }
-
-  test("Pregel BFS agrees with driver-loop BFS on G7") {
-    val a = bfsLevelOf("G7", 0)
-    val b = Traversals.bfsLevelsPregel(edges("G7"), 0).collect()
-      .map(r => r.getAs[Long]("vertex") -> r.getAs[Int]("level")).toMap
-    assert(a === b)
   }
 
   test("goldens from a non-root start: G6 from 4") {
@@ -415,6 +407,24 @@ class TraversalSpec extends SparkSpec {
     val cc1 = Traversals.connectedComponents(edges("G1")).collect()
       .map(r => (r.getAs[Long]("vertex"), r.getAs[Long]("component"))).toSet
     assert(cc1 === Set((0L, 0L), (1L, 1L)))
+  }
+
+  test("job-count pin: driver-held components are one job at the bound, the loop one vertex past it") {
+    // G7 has 7 vertices, all in component 0
+    val g7 = edges("G7")
+    def run(df: => DataFrame) =
+      jobsOf(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1))
+    val want = (0L to 6L).map(_ -> 0L)
+    val (held, heldJobs) = run(Traversals.connectedComponents(g7, 10000, 2, 7L))
+    val (loop, loopJobs) = run(Traversals.connectedComponents(g7, 10000, 2, 6L))
+    assert(held === want && loop === want)
+    assert(heldJobs === 1 && loopJobs > 1, s"held $heldJobs jobs, loop $loopJobs")
+    // past the bound contractedComponents contracts, then holds the
+    // smaller quotient
+    val (cHeld, cHeldJobs) = run(Traversals.contractedComponents(g7, 2, 10000, 2, 7L))
+    val (cLoop, cLoopJobs) = run(Traversals.contractedComponents(g7, 2, 10000, 2, 6L))
+    assert(cHeld === want && cLoop === want)
+    assert(cHeldJobs === 1 && cLoopJobs > 1, s"held $cHeldJobs jobs, contracted $cLoopJobs")
   }
 
   test("GraphCatalog: add/load/modify roundtrip + snapshot semantics") {

@@ -247,16 +247,16 @@ class Wave31Spec extends SparkSpec {
       .toDF("src", "dst")
     def labels(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    // localMaxEdges = 0 forces the DISTRIBUTED loop on both sides so
-    // the equality exercises the real machinery, not union-find twice
+    // maxHeld = 0 forces the DISTRIBUTED loop on both sides so the
+    // equality exercises the real machinery, not union-find twice
     val plain = labels(graft.operators.Traversals
-      .connectedComponents(edges, localMaxEdges = 0L))
+      .connectedComponents(edges, 10000, 2, 0L))
     for (rounds <- 1 to 3) {
       val contracted = labels(graft.operators.Traversals
-        .contractedComponents(edges, rounds = rounds, localMaxEdges = 0L))
+        .contractedComponents(edges, rounds, 10000, 2, 0L))
       assert(contracted == plain, s"contraction rounds=$rounds diverged")
     }
-    // and with the union-find fast path engaged downstream
+    // and with the driver-held union-find engaged
     val fast = labels(graft.operators.Traversals.contractedComponents(edges))
     assert(fast == plain)
   }

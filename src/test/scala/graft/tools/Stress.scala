@@ -71,9 +71,7 @@ object Stress {
         (col("dst") + lit(i.toLong * 100000000L)).as("dst"))).reduce(_ union _)
     time("bfs_x1", eb.count()) { Traversals.bfsLevels(eb, 2L).count() }
     time("bfs_x4", e4.count()) { Traversals.bfsLevels(e4, 2L).count() }
-    // GraphX Pregel vs driver-loop on the same graph
-    time("bfs_pregel_x1", eb.count()) { Traversals.bfsLevelsPregel(eb, 2L).count() }
-    // CC: driver-loop vs GraphX on the per-customer chain graph (sf0.1)
+    // CC on the per-customer chain graph (sf0.1)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
     val o1 = spark.read.parquet(s"$d/orders.parquet")
@@ -82,7 +80,6 @@ object Stress {
       .where(col("dst").isNotNull).select(col("src"), col("dst"))
     val chain = ch.union(ch.select(col("dst").as("src"), col("src").as("dst")))
     time("cc_loop", chain.count()) { Traversals.connectedComponents(chain).count() }
-    time("cc_graphx", chain.count()) { graft.operators.GraphAlgos.connectedComponentsGraphX(chain).count() }
 
     // round-2 operator families at 1x and 10x document/embedding scale
     val docs = spark.read.parquet(s"$d/documents.parquet")
