@@ -821,10 +821,6 @@ object Bench {
       // spill (the iterative operators now drop superseded
       // checkpoints eagerly — this catches the rest)
       .config("spark.cleaner.periodicGC.interval", "1min")
-      // bound GraphX Pregel lineage on deep graphs:
-      // read from SparkConf at context creation, dir supplied by
-      // GraphAlgos.ensureGraphCheckpointDir
-      .config("spark.graphx.pregel.checkpointInterval", "25")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: touch every table once (footer reads, codegen JIT)

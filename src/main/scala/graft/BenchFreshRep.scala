@@ -29,7 +29,6 @@ object BenchFreshRep {
       .config("spark.ui.enabled", "false")
       .config("spark.locality.wait", "0")
       .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.graphx.pregel.checkpointInterval", "25")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen warmup on the smaller sibling (same rationale as

@@ -22,10 +22,6 @@ object Verify {
       // wait for, and the 3 s default stalls iterative operators'
       // per-superstep barriers (pure wall-clock, zero semantics)
       .config("spark.locality.wait", "0")
-      // bound GraphX Pregel lineage on deep graphs: Pregel reads this
-      // from the SparkConf at context creation (GraphAlgos
-      // .ensureGraphCheckpointDir supplies the required dir)
-      .config("spark.graphx.pregel.checkpointInterval", "25")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

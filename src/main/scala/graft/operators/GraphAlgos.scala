@@ -12,21 +12,7 @@ import org.apache.spark.graphx.{Edge, Graph}
   * operators over the canonical undirected edge form. */
 object GraphAlgos {
 
-  /** GraphX's Pregel loop honours `spark.graphx.pregel.checkpointInterval`
-    * only when a RELIABLE checkpoint dir is set — `PeriodicCheckpointer`
-    * silently skips the cut otherwise, so on a 100x-diameter graph the
-    * superstep lineage (and with it stack depth and recovery cost) would
-    * grow without bound. The interval itself must live in the SparkConf
-    * at context creation (Pregel reads `sc.getConf`, not the SQL conf),
-    * so the harness/test session builders set it; the library guarantees
-    * the dir exists before any GraphX entry point runs. */
-  private[graft] def ensureGraphCheckpointDir(sc: org.apache.spark.SparkContext): Unit =
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-graphx-ckpt").toString)
-
   private def toGraph(edges: DataFrame): Graph[Unit, Unit] = {
-    ensureGraphCheckpointDir(edges.sparkSession.sparkContext)
     val rdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
     Graph.fromEdges[Unit, Unit](rdd, ())

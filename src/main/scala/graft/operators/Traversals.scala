@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.Bridge.notNull
@@ -126,9 +126,14 @@ object Traversals {
   private[operators] def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] = {
     val spark = edges.sparkSession
     import spark.implicits._
+    rowsAtMost(edges.as[(Long, Long)], max)
+  }
+
+  /** [[collectAtMost]] over any typed table. */
+  private def rowsAtMost[T](rows: Dataset[T], max: Long): Option[Array[T]] = {
     val fetch = if (max >= Int.MaxValue) Int.MaxValue else (max max -1L).toInt + 1
-    val rows = edges.limit(fetch).as[(Long, Long)].collect()
-    if (rows.length <= max) Some(rows) else None
+    val got = rows.limit(fetch).collect()
+    if (got.length <= max) Some(got) else None
   }
 
   /** The level loop on driver-held state: every level's vertices
@@ -192,24 +197,54 @@ object Traversals {
   /** [[driverLevels]] over a collected edge array, expanding by
     * adjacency lookup: the local path of BFS, `reachableFrom` and the
     * DFS operators, which run it to its fixpoint (`Int.MaxValue`
-    * levels) for the reachable set. */
-  private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long],
-                          maxLevels: Int): Seq[Array[Long]] = {
+    * levels) for the reachable set. With `replay`, each level also
+    * hands it the frontier's out-edges; the walk goes on past a
+    * refusal (the edges are on the driver already). */
+  private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long], maxLevels: Int,
+                          replay: Option[ReplayEdges] = None): Seq[Array[Long]] = {
     val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    driverLevels(starts, maxLevels, Long.MaxValue)((frontier, _, _) =>
-      Some(frontier.flatMap(v => adj.getOrElse(v, Array.emptyLongArray)))).get
+    def out(v: Long) = adj.getOrElse(v, Array.emptyLongArray)
+    driverLevels(starts, maxLevels, Long.MaxValue) { (frontier, _, _) =>
+      replay.foreach(_.add(frontier.iterator.flatMap(s => out(s).iterator.map(s -> _))))
+      Some(frontier.flatMap(out))
+    }.get
   }
 
   /** [[dfsLeaves]]' reduced replay adjacency, gathered by the
-    * driver-held supersteps one frontier at a time: the edges out of
-    * the frontier minus self-loops and edges into `start`,
-    * deduplicated. Every reached vertex is in exactly one frontier, so
-    * their union is the whole reduced set, and holding more than `max`
-    * edges refuses the replay exactly. */
+    * reachability expanders one frontier at a time, the local one
+    * ([[localLevels]]) and the driver-held one ([[heldLevels]]) alike:
+    * the frontier's out-edges that [[ReplayEdges.keeps]], deduplicated.
+    * Every reached vertex is in exactly one frontier, so their union is
+    * the whole reduced set, and holding more than `max` edges refuses
+    * the replay exactly. Every reached vertex but `start` enters
+    * through a kept edge (its source is visited and it is not, so the
+    * edge is neither a self-loop nor into `start`), so a replay that
+    * fits holds at least reached − 1 edges. */
   private final class ReplayEdges(val start: Long, val max: Long) {
-    val edges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    def room: Long = max - edges.length
+    private val held = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    def room: Long = max - held.length
     def refused: Boolean = room < 0
+    /** Adds one frontier's out-edges that the reduction keeps, each once. */
+    def add(frontierEdges: Iterator[(Long, Long)]): Unit =
+      held ++= frontierEdges.filter { case (s, d) => ReplayEdges.keeps(start, s, d) }.distinct
+    def edges: Array[(Long, Long)] = held.toArray
+  }
+
+  private object ReplayEdges {
+    /** The replay-input reduction (r13, exactness-preserving): an edge
+      * whose target is always already visited when its source is
+      * expanded can never push a child, never increments childCount
+      * and never extends reachability, so dropping it leaves the
+      * replay's visit order, tree and leaf set bit-identical.
+      * Self-loops (v is visited when v expands) and edges into `start`
+      * (visited from step 0) fail this test where the edges are read.
+      * Duplicate rows (the replay dedups per vertex anyway) are dropped
+      * by [[ReplayEdges.add]], and first per partition by the held
+      * scan, which on a multigraph shrinks the fetch by the
+      * multiplicity. The bound applies to the REDUCED adjacency: graphs
+      * over the raw bound still replay exactly when their reduced form
+      * fits. */
+    def keeps(start: Long, s: Long, d: Long): Boolean = s != d && d != start
   }
 
   /** At most `room + 1` rows, clamped to one array's reach. */
@@ -262,22 +297,23 @@ object Traversals {
           val d = vertexAt(r, 1)
           if (java.util.Arrays.binarySearch(f, s) >= 0) {
             if (java.util.Arrays.binarySearch(seen, d) < 0) found += d
-            if (keepEdges && s != d && d != start) out += ((s, d))
+            if (keepEdges && ReplayEdges.keeps(start, s, d)) out += ((s, d))
           }
         }
         (found.toArray, out.toArray)
       }
-      replay.foreach(_.edges ++= parts.iterator.flatMap(_._2).distinct)
+      replay.foreach(_.add(parts.iterator.flatMap(_._2)))
       if (replay.exists(_.refused)) None else Some(parts.flatMap(_._1))
     }
   }
 
-  /** The bound on driver-held traversal state, and on the frontier
-    * rows broadcast to the edge side. While at most this many vertices
-    * are reached, BFS and the reachability pass of [[dfsLeaves]] keep
-    * the frontier and the visited set on the driver, one Spark job per
-    * level ([[heldLevels]]); a traversal whose reached set would pass it
-    * restarts on the DataFrame-state [[levelLoop]]. There, a frontier
+  /** The bound on driver-held BFS state, and on the frontier rows
+    * broadcast to the edge side. While at most this many vertices are
+    * reached, BFS keeps the frontier and the visited set on the driver,
+    * one Spark job per level ([[heldLevels]]); a traversal whose
+    * reached set would pass it restarts on the DataFrame-state
+    * [[levelLoop]]. [[dfsLeaves]] does not consult it: its replay
+    * bound also bounds its reached set. In the loop, a frontier
     * over it is not broadcast: the superstep falls back to a shuffle
     * hash join against the (persisted, src-partitioned) edges —
     * force-broadcasting an O(V) mid-BFS frontier would ship the whole
@@ -315,27 +351,24 @@ object Traversals {
     require(starts.nonEmpty, "at least one start vertex")
     driverHeldLevels(edges, starts, maxLevels, localMaxEdges, maxHeld) match {
       case Some(ls) => levelTable(spark, ls)
-      case None =>
-        // Materialise the (possibly derived/unioned) edge table ONCE,
-        // hash-partitioned by src so non-broadcast supersteps reuse the
-        // partitioning instead of reshuffling edges every level.
-        val e = partitionEdges(edges)
-        try levelLoop(e, starts.distinct.toDF("vertex"), Nil, maxLevels)._1
-        finally e.unpersist(blocking = false)
+      case None => levelLoop(edges, starts.distinct.toDF("vertex"), Nil, maxLevels)._1
     }
   }
 
   /** The levels from `starts` over an unprepared edge table on
-    * driver-held state: the local path when at most `localMaxEdges`
+    * driver-held state, the reachability of [[bfs]], [[bfsLevelsMulti]]
+    * and [[dfsLeaves]]: the local path when at most `localMaxEdges`
     * edges come back, else [[heldLevels]] over the edges cached as they
-    * are (no repartition, so no shuffle), dropped after. None when the
-    * reached set passes `maxHeld`; the caller then restarts on the
-    * DataFrame-state [[levelLoop]]. */
+    * are (no repartition, so no shuffle), dropped after. `replay`, if
+    * given, gathers [[dfsLeaves]]' replay edges on either path. None
+    * when the reached set passes `maxHeld` or the replay is refused;
+    * BFS then restarts on the DataFrame-state [[levelLoop]]. */
   private def driverHeldLevels(edges: DataFrame, starts: Seq[Long], maxLevels: Int,
-                               localMaxEdges: Long, maxHeld: Long): Option[Seq[Array[Long]]] =
+                               localMaxEdges: Long, maxHeld: Long,
+                               replay: Option[ReplayEdges] = None): Option[Seq[Array[Long]]] =
     collectAtMost(castEdges(edges), localMaxEdges) match {
-      case Some(raw) => Some(localLevels(raw, starts, maxLevels))
-      case None => onCachedEdges(edges)(heldLevels(_, starts, maxLevels, maxHeld))
+      case Some(raw) => Some(localLevels(raw, starts, maxLevels, replay))
+      case None => onCachedEdges(edges)(heldLevels(_, starts, maxLevels, maxHeld, replay))
     }
 
   /** `scans` over `edges` cached as they are (no repartition, so no
@@ -379,50 +412,57 @@ object Traversals {
       .checkpointCounted()
   }
 
-  /** The level loop on DataFrame state, over prepared edges, from a
-    * DISTINCT seed table `(keys…, vertex)`: the path of
-    * [[multiSourceDistances]], [[reachableFrom]] and every traversal
-    * whose reached set passes [[broadcastFrontierMax]]. Returns the
-    * visited table `(keys…, vertex, level)` — one row per reached
+  /** The level loop on DataFrame state, from a DISTINCT seed table
+    * `(keys…, vertex)`: the path of [[multiSourceDistances]], of
+    * [[reachableFrom]] past its local bounds, and of [[bfs]] and
+    * [[bfsLevelsMulti]] once their reached set passes
+    * [[broadcastFrontierMax]]. It stages `edges` itself, hash-partitioned
+    * by `src` once ([[partitionEdges]]) so non-broadcast supersteps reuse
+    * the partitioning instead of reshuffling edges every level, and
+    * drops that copy when it returns. Returns the visited table
+    * `(keys…, vertex, level)` — one row per reached
     * `(keys…, vertex)` at its min-hop level — and the number of rows on
     * each level: level `l`'s count at index `l`, taken by the job that
     * checkpoints the level, so no level pays a separate count. With
     * `keys` (say a `root` column) k searches run as ONE loop with
     * k-fold state, each superstep a single join however many are in
     * flight. */
-  private def levelLoop(e: DataFrame, seeds: DataFrame, keys: Seq[String],
+  private def levelLoop(edges: DataFrame, seeds: DataFrame, keys: Seq[String],
                         maxLevels: Int): (DataFrame, Seq[Long]) = {
-    val frontierCols = (keys :+ "vertex").map(col)
-    var (visited, frontierSize) = seeds.withColumn("level", lit(0)).checkpointCounted()
-    var frontier = visited.select(frontierCols: _*)
-    var level = 0
-    var sinceCompact = 0
-    val levelSizes = scala.collection.mutable.ArrayBuffer(frontierSize)
-    while (frontierSize > 0 && level < maxLevels) {
-      level += 1
-      val (next, nextSize) = expand(frontier, frontierSize, e, visited, keys)
-      frontierSize = nextSize
-      if (frontierSize > 0) {
-        levelSizes += frontierSize
-        // visited stays a lazy union of already-checkpointed frontiers —
-        // no O(|visited|) copy per level; compact every 8 levels so deep
-        // graphs keep bounded plan depth
-        visited = visited.union(next.select(frontierCols :+ lit(level).as("level"): _*))
-        sinceCompact += 1
-        if (sinceCompact >= 8) {
-          val old = visited
-          visited = visited.checkpointSized(); sinceCompact = 0
-          // the compacted copy supersedes the per-level checkpoints it
-          // unioned — except the current frontier (= next), which the
-          // next superstep still joins
-          dropCheckpoint(old, keep = checkpointRddIds(next))
+    val e = partitionEdges(edges)
+    try {
+      val frontierCols = (keys :+ "vertex").map(col)
+      var (visited, frontierSize) = seeds.withColumn("level", lit(0)).checkpointCounted()
+      var frontier = visited.select(frontierCols: _*)
+      var level = 0
+      var sinceCompact = 0
+      val levelSizes = scala.collection.mutable.ArrayBuffer(frontierSize)
+      while (frontierSize > 0 && level < maxLevels) {
+        level += 1
+        val (next, nextSize) = expand(frontier, frontierSize, e, visited, keys)
+        frontierSize = nextSize
+        if (frontierSize > 0) {
+          levelSizes += frontierSize
+          // visited stays a lazy union of already-checkpointed frontiers —
+          // no O(|visited|) copy per level; compact every 8 levels so deep
+          // graphs keep bounded plan depth
+          visited = visited.union(next.select(frontierCols :+ lit(level).as("level"): _*))
+          sinceCompact += 1
+          if (sinceCompact >= 8) {
+            val old = visited
+            visited = visited.checkpointSized(); sinceCompact = 0
+            // the compacted copy supersedes the per-level checkpoints it
+            // unioned — except the current frontier (= next), which the
+            // next superstep still joins
+            dropCheckpoint(old, keep = checkpointRddIds(next))
+          }
+          frontier = next
+        } else {
+          dropCheckpoint(next) // empty expansion: nothing references it
         }
-        frontier = next
-      } else {
-        dropCheckpoint(next) // empty expansion: nothing references it
       }
-    }
-    (visited, levelSizes.toSeq)
+      (visited, levelSizes.toSeq)
+    } finally e.unpersist(blocking = false)
   }
 
   /** Per-root hop distances from a SET of root vertices — the
@@ -441,11 +481,9 @@ object Traversals {
     * reachable pair, level = shortest hop distance (root itself 0). */
   def multiSourceDistances(edges: DataFrame, roots: DataFrame,
                            maxLevels: Int = 10000): DataFrame = {
-    val e = partitionEdges(edges)
     val seeds = roots.select(col("root").cast("long")).distinct()
       .select(col("root"), col("root").as("vertex"))
-    try levelLoop(e, seeds, Seq("root"), maxLevels)._1
-    finally e.unpersist(blocking = false)
+    levelLoop(edges, seeds, Seq("root"), maxLevels)._1
   }
 
   /** Reference op=4: BFS traversal sequence. Output
@@ -483,10 +521,7 @@ object Traversals {
       levelRows(levels).zipWithIndex.map { case ((v, l), i) => (i.toLong, l, v) }
         .toDF("order", "level", "vertex")
     driverHeldLevels(edges, Seq(start), maxLevels, localMaxEdges, maxHeld).map(numbered).getOrElse {
-      val e = partitionEdges(edges)
-      val (lv, levelSizes) =
-        try levelLoop(e, Seq(start).toDF("vertex"), Nil, maxLevels)
-        finally e.unpersist(blocking = false)
+      val (lv, levelSizes) = levelLoop(edges, Seq(start).toDF("vertex"), Nil, maxLevels)
       val offsets = typedLit(levelSizes.indices.zip(levelSizes.scanLeft(0L)(_ + _)).toMap)
       val inLevel = Window.partitionBy(col("level")).orderBy(col("vertex"))
       // vertex ids come from the edge columns, which may be declared
@@ -508,15 +543,6 @@ object Traversals {
     * a big driver opt in per call via `maxReplayEdges`. */
   val dfsReplayMaxEdges: Long = 5000000L
 
-  /** The [[dfsLeaves]] r13 replay-input reduction on a collected edge
-    * array: reachable-src, self-loop-free, not-into-start, deduped —
-    * exactly the distributed reduction's row set. */
-  private def localReducedAdjacency(raw: Array[(Long, Long)],
-      start: Long): Array[(Long, Long)] = {
-    val reach = localLevels(raw, Seq(start), Int.MaxValue).flatten.toSet
-    raw.filter { case (s, d0) => s != d0 && d0 != start && reach(s) }.distinct
-  }
-
   /** Reference op=3: leaf nodes of the DFS tree from `start`
     * (`secondary_server.c:142-176`). A vertex is a leaf iff its DFS
     * expansion finds no unvisited neighbor (checked incrementally in
@@ -531,76 +557,42 @@ object Traversals {
     * collected-replay split is the honest design: phase 1 bounds phase
     * 2's input to the component actually reached.
     *
-    * One bounded collect of at most `localMaxEdges + 1` edges picks the
-    * path: when the whole edge list came back, both phases run on it on
-    * the driver and the call is that one job. Otherwise the edges are
-    * cached as they are and reachability runs driver-held while at most
-    * [[broadcastFrontierMax]] vertices are reached, one Spark job per
-    * level ([[heldLevels]]); the same jobs gather the reduced replay
-    * adjacency (below) one frontier at a time ([[ReplayEdges]]), so no
-    * other job runs. A reached set past the bound restarts
-    * reachability on the DataFrame-state [[levelLoop]], and the reduced
-    * adjacency is then computed once, by one collect of at most
-    * `maxReplayEdges + 1` rows. On every path reachability runs to its
-    * fixpoint and more than `maxReplayEdges` reduced edges refuse the
-    * replay. Output: `(vertex: Long)` ascending, not nullable; all
-    * paths return identical rows and schema.
+    * Reachability always runs on the driver ([[driverHeldLevels]]),
+    * and its expanders gather the reduced replay adjacency one frontier
+    * at a time ([[ReplayEdges]]). One bounded collect of at most
+    * `localMaxEdges + 1` edges picks the path: when the whole edge list
+    * came back, both phases run on it and the call is that one job.
+    * Otherwise the edges are cached as they are and each level is one
+    * Spark job ([[heldLevels]]); no other job runs. More than
+    * `maxReplayEdges` reduced edges refuse the replay. Every reached
+    * vertex but `start` enters through a reduced edge, so the driver
+    * holds at most `maxReplayEdges + 1` reached vertices before the
+    * replay refuses, and that is the held bound (not
+    * [[broadcastFrontierMax]]): a DataFrame-state reachability would
+    * save no driver memory, since the replay needs more. Output:
+    * `(vertex: Long)` ascending, not nullable; both paths return
+    * identical rows and schema.
     */
   def dfsLeaves(edges: DataFrame, start: Long,
                 maxReplayEdges: Long = dfsReplayMaxEdges,
-                localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame =
-    dfsLeaves(edges, start, maxReplayEdges, localMaxEdges, broadcastFrontierMax)
-
-  /** [[dfsLeaves]] with the driver-held bound `maxHeld` as an argument;
-    * 0 runs the DataFrame-state reachability from the start. */
-  private[graft] def dfsLeaves(edges: DataFrame, start: Long, maxReplayEdges: Long,
-                               localMaxEdges: Long, maxHeld: Long): DataFrame = {
+                localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val eCast = castEdges(edges)
-    val reduced = collectAtMost(eCast, localMaxEdges) match {
-      // dense-small-graph fast path (r20): the reachability pass, the
-      // r13 reduction and the replay all run on one collected edge
-      // array. The reduction classes are identical, so the replay —
-      // and therefore the leaf set — is bit-identical, and the
-      // replay bound below applies to the same row set.
-      case Some(raw) => Some(localReducedAdjacency(raw, start)).filter(_.length <= maxReplayEdges)
-      case None =>
-        val replay = new ReplayEdges(start, maxReplayEdges)
-        val reached =
-          onCachedEdges(edges)(heldLevels(_, Seq(start), Int.MaxValue, maxHeld, Some(replay)))
-        if (replay.refused) None
-        else if (reached.isDefined) Some(replay.edges.toArray)
-        else {
-          val e = partitionEdges(edges)
-          val reach = try levelLoop(e, Seq(start).toDF("vertex"), Nil, Int.MaxValue)._1
-            .select("vertex") finally e.unpersist(blocking = false)
-          // Replay-input REDUCTION (r13, exactness-preserving — spec-
-          // pinned): an edge whose target is always-already-visited when
-          // its source is expanded can never push a child, never
-          // increments childCount, and never extends reachability —
-          // dropping it leaves the replay's visit order, tree, and leaf
-          // set bit-identical. Three such classes are droppable
-          // DISTRIBUTIVELY before the collect: self-loops (v visited
-          // when v expands), edges into `start` (visited from step 0),
-          // and duplicate rows (the replay dedups per-vertex anyway —
-          // dedup on the cluster instead of the driver, which on a
-          // multigraph shrinks the collect by the multiplicity). The
-          // bound applies to the REDUCED adjacency: graphs over the raw
-          // bound still replay exactly when their reduced form fits.
-          collectAtMost(eCast
-            .where(col("src") =!= col("dst") && col("dst") =!= lit(start))
-            .join(reach, col("src") === reach("vertex"), "left_semi")
-            .distinct(), maxReplayEdges)
-        }
-    }
-    require(reduced.isDefined,
+    val replay = new ReplayEdges(start, maxReplayEdges)
+    val maxHeld = if (maxReplayEdges == Long.MaxValue) Long.MaxValue else maxReplayEdges + 1
+    val reached = driverHeldLevels(edges, Seq(start), Int.MaxValue, localMaxEdges, maxHeld,
+      Some(replay))
+    require(!replay.refused,
       s"DFS-tree replay needs the reachable adjacency on the driver: its " +
         s"reduced edges exceed dfsReplayMaxEdges=$maxReplayEdges " +
         "(DFS order is inherently sequential; use dfsLeafClasses for a " +
         "distributed any-scale leaf/internal classification, or " +
         "bfsLevels/sssp for traversals that must scale past driver memory)")
-    replayDfsLeaves(reduced.get, start).toSeq.sorted.toDF("vertex")
+    // each new vertex's edge is gathered by the scan that finds it, and
+    // the replay's room never exceeds the held room: a held overflow
+    // always comes with a refusal
+    require(reached.isDefined, s"held reachability passed $maxHeld vertices without a refusal")
+    replayDfsLeaves(replay.edges, start).toSeq.sorted.toDF("vertex")
   }
 
   /** The sequential explicit-stack DFS replay (smallest-unvisited-
@@ -739,21 +731,19 @@ object Traversals {
     pinned
   }
 
-  /** The [[dfsLeafClasses]] order-invariant rules on a collected edge
-    * array — (vertex, cls) for every reachable vertex, identical
-    * labels to the distributed aggregation. */
-  private def localLeafClasses(raw: Array[(Long, Long)],
+  /** The [[dfsLeafClasses]] order-invariant rules over the reached
+    * vertices and their reduced adjacency `ex` ([[ReplayEdges]]: the
+    * distributed side's "expanding" edges) — (vertex, cls) for every
+    * reached vertex, identical labels to the distributed aggregation. */
+  private def localLeafClasses(reach: Seq[Long], ex: Array[(Long, Long)],
       start: Long): Seq[(Long, String)] = {
-    val reach = localLevels(raw, Seq(start), Int.MaxValue).flatten.toSet
-    val e = raw.filter { case (s, d0) => s != d0 && reach(s) }.distinct
-    val ex = e.filter(_._2 != start)
     val hasOut = ex.map(_._1).toSet
     val onlyParents = ex.groupBy(_._2).collect {
       case (_, ins) if ins.length == 1 => ins.head._1
     }.toSet
     val internals =
       onlyParents ++ (if (hasOut(start)) Set(start) else Set.empty[Long])
-    reach.toSeq.sorted.map { v =>
+    reach.sorted.map { v =>
       val cls =
         if (!hasOut(v)) "leaf"
         else if (internals(v)) "internal"
@@ -816,15 +806,17 @@ object Traversals {
     // ≤ 22k-edge memoized fixture.
     collectAtMost(castEdges(edges), localMaxEdges) match {
       case Some(raw) =>
-        val reduced = localReducedAdjacency(raw, start)
+        val reduced = new ReplayEdges(start, maxResidualEdges)
+        val reach = localLevels(raw, Seq(start), Int.MaxValue, Some(reduced)).flatten
         // honour the refusal contract: the distributed path decides on
         // the adjacency AFTER its certain-parent/ancestor reductions, so
         // when the r13-reduced set alone exceeds the cap, fall through
         // (the deeper reductions may still fit it; a local refusal here
         // would fire where the old path succeeded)
-        if (reduced.length <= maxResidualEdges) {
-          val classes = localLeafClasses(raw, start)
-          val leaves = replayDfsLeaves(reduced, start).toSet
+        if (!reduced.refused) {
+          val ex = reduced.edges
+          val classes = localLeafClasses(reach, ex, start)
+          val leaves = replayDfsLeaves(ex, start).toSet
           return classes.map { case (v, cls) =>
             (v, cls, if (leaves(v)) "leaf" else "internal")
           }.toDF("vertex", "cls_rule", "cls_final")
@@ -1848,31 +1840,25 @@ object Traversals {
   /** Vertices reachable (along edge direction) from a SEED SET given
     * as a DataFrame — the set-source sibling of [[bfsLevels]] for
     * callers whose seeds are themselves a distributed result (e.g.
-    * the bow-tie decomposition's core SCC) and must never transit the
-    * driver: the BFS level loop seeded with the whole set, levels
-    * dropped. The edge cache is shared across supersteps via
-    * [[partitionEdges]]. Output: one `vertex` column, seeds included.
-    * Reverse the edge columns at the call site for reaches-TO-set. */
+    * the bow-tie decomposition's core SCC): the BFS level loop seeded
+    * with the whole set, levels dropped ([[levelLoop]]). Output: one
+    * `vertex` column, seeds included. Reverse the edge columns at the
+    * call site for reaches-TO-set. */
   def reachableFrom(edges: DataFrame, seeds: DataFrame,
                     maxIters: Int = 10000): DataFrame = {
-    val e = partitionEdges(edges)
-    try {
-      // Tiny-graph fast path (same contract and bound as the BFS
-      // local path): below bfsLocalMaxEdges the distributed loop's
-      // per-superstep scheduling latency dwarfs the work, and the
-      // seed set is bounded by the vertex count, so both collects are
-      // trivially bounded. Identical output set.
-      val seedVerts = seeds.select(col("vertex").cast("long").as("vertex"))
-      collectAtMost(e, bfsLocalMaxEdges) match {
-        case Some(raw) =>
-          val spark = e.sparkSession
-          import spark.implicits._
-          localLevels(raw, seedVerts.as[Long].collect().toSeq, Int.MaxValue)
-            .flatten.toDF("vertex")
-        case None =>
-          levelLoop(e, seedVerts.distinct(), Nil, maxIters)._1.select("vertex")
-      }
-    } finally e.unpersist(blocking = false)
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val seedVerts = seeds.select(col("vertex").cast("long").as("vertex"))
+    // Tiny-graph fast path (same contract and bound as the BFS local
+    // path): below bfsLocalMaxEdges the loop's per-superstep scheduling
+    // latency dwarfs the work. The seeds come to the driver only when
+    // at most broadcastFrontierMax rows came back; a larger seed set
+    // runs the loop. Identical output set.
+    val local = for {
+      raw <- collectAtMost(castEdges(edges), bfsLocalMaxEdges)
+      starts <- rowsAtMost(seedVerts.as[Long], broadcastFrontierMax)
+    } yield localLevels(raw, starts.toSeq, Int.MaxValue).flatten.toDF("vertex")
+    local.getOrElse(levelLoop(edges, seedVerts.distinct(), Nil, maxIters)._1.select("vertex"))
   }
 
   /** Driver-local SCC for the tiny-graph fast path: iterative Tarjan

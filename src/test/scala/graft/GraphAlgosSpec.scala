@@ -293,20 +293,6 @@ class GraphAlgosSpec extends SparkSpec {
     }
   }
 
-  test("GraphX Pregel checkpoint cadence is armed: interval conf set, dir guaranteed") {
-    // r10 VERDICT #5: Pregel reads spark.graphx.pregel.checkpointInterval
-    // from the SparkConf fixed at context creation — assert the session
-    // builders actually carry it (a silent drop here means unbounded RDD
-    // lineage on 100x-diameter graphs, invisible at fixture scale)...
-    assert(spark.sparkContext.getConf
-      .getInt("spark.graphx.pregel.checkpointInterval", -1) == 25)
-    // ...and PeriodicCheckpointer silently skips without a RELIABLE
-    // checkpoint dir, so every GraphX entry point must guarantee one
-    GraphAlgos.pageRank(ring).count()
-    assert(spark.sparkContext.getCheckpointDir.nonEmpty,
-      "GraphX entry ran without ensuring a checkpoint dir")
-  }
-
   test("pageRankDeterministic: segment cuts past pageRankFuseDepth leave ranks unchanged") {
     import graft.operators.Traversals
     // 12 iters crosses the fuse-depth-10 segment boundary, so the run

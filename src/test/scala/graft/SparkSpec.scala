@@ -14,9 +14,6 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // mirror the harness sessions: Pregel checkpoint cadence must be
-      // in the SparkConf at context creation to take effect
-      .config("spark.graphx.pregel.checkpointInterval", "25")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // every dropCheckpoint unpersists a localCheckpoint on purpose, and

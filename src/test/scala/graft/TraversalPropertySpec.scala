@@ -154,7 +154,7 @@ class TraversalPropertySpec extends SparkSpec {
   /** The paths of a dual-path traversal as `(localMaxEdges, maxHeld)`:
     * local, driver-held, DataFrame-state, and driver-held with a bound
     * the reached set crosses mid-run, so it restarts on DataFrame
-    * state. */
+    * state. dfsLeaves has only the first two. */
   def paths(restartAt: Long): Seq[(String, Long, Long)] = Seq(
     ("local", Traversals.bfsLocalMaxEdges, Traversals.broadcastFrontierMax),
     ("driver-held", 0L, Traversals.broadcastFrontierMax),
@@ -176,13 +176,14 @@ class TraversalPropertySpec extends SparkSpec {
         val bfs = Traversals.bfs(e, 0L, local, held)
         val leveled = Traversals.bfsLevelsMulti(e, starts, 10000, local, held)
         val cut = Traversals.bfsLevelsMulti(e, starts, 1, local, held)
-        val leaves = Traversals.dfsLeaves(e, 0L, Traversals.dfsReplayMaxEdges,
-          if (local > 0) GraphAlgos.denseLocalMaxEdges else 0L, held)
-        name -> Seq(
+        val leaves = if (held != Traversals.broadcastFrontierMax) None
+          else Some(Traversals.dfsLeaves(e, 0L, Traversals.dfsReplayMaxEdges,
+            if (local > 0) GraphAlgos.denseLocalMaxEdges else 0L))
+        name -> (Seq(
           bfs.schema -> bfs.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
           leveled.schema -> leveled.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
-          cut.schema -> cut.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq,
-          leaves.schema -> leaves.collect().map(_.toSeq).toSeq)
+          cut.schema -> cut.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq) ++
+          leaves.map(l => l.schema -> l.collect().map(_.toSeq).toSeq))
       }
       val (_, local) = runs.head
       val bfsLevels = local.head._2.map(r => r(2).asInstanceOf[Long].toInt -> r(1).asInstanceOf[Int])
@@ -194,6 +195,27 @@ class TraversalPropertySpec extends SparkSpec {
             assert(g._1 === l._1, s"$op schema, $name path, graph #$i: $es")
             assert(g._2 === l._2, s"$op rows, $name path, graph #$i: $es")
           }
+      }
+    }
+  }
+
+  test("dfsLeaves replays at exactly its reduced edge count and refuses one below, on both paths") {
+    // a path 0 → 1 → … → 9 reaches R + 1 vertices over R = 9 reduced
+    // edges, so a held bound of R (one short of reached) fails the
+    // replay at R; then the messy graphs, with self-loops, duplicates and
+    // edges into the start, against a plain-Scala reduction
+    val path = (0L until 9L).map(i => (i, i + 1))
+    (path +: (0 until 4).map(messyGraph(_)._2)).zipWithIndex.foreach { case (es, i) =>
+      val reach = refBfsLevels(es.map { case (a, b) => (a.toInt, b.toInt) }.toSet, 0).keySet
+      val reduced = es.distinct.count { case (s, d) => reach(s.toInt) && s != d && d != 0L }.toLong
+      val e = es.toDF("src", "dst")
+      val expected = Traversals.dfsLeaves(e, 0L).collect().toSeq
+      assert(i > 0 || (reduced === 9L && expected.map(_.getLong(0)) === Seq(9L)))
+      Seq("local" -> GraphAlgos.denseLocalMaxEdges, "driver-held" -> 0L).foreach { case (name, local) =>
+        val what = s"$name path, graph #$i: $es"
+        assert(Traversals.dfsLeaves(e, 0L, reduced, local).collect().toSeq === expected, what)
+        val err = intercept[IllegalArgumentException](Traversals.dfsLeaves(e, 0L, reduced - 1, local))
+        assert(err.getMessage.contains(s"exceed dfsReplayMaxEdges=${reduced - 1}"), what)
       }
     }
   }

@@ -243,6 +243,16 @@ class TraversalSpec extends SparkSpec {
     assert(distJobs > localJobs, s"distributed $distJobs jobs, local $localJobs")
   }
 
+  test("reachableFrom: a seed set one past broadcastFrontierMax returns the seeds and what they reach") {
+    import spark.implicits._
+    // a tiny graph, so only the seed bound keeps the call off the local path
+    val bound = Traversals.broadcastFrontierMax
+    val e = Seq((3L, bound + 5), (bound + 5, bound + 6), (bound + 7, bound + 8)).toDF("src", "dst")
+    val got = Traversals.reachableFrom(e, spark.range(0L, bound + 1).toDF("vertex"))
+      .collect().map(_.getLong(0)).sorted
+    assert(got.toSeq === (0L to bound) ++ Seq(bound + 5, bound + 6))
+  }
+
   /** A path 0 → 1 → … → k plus padding edges vertex 0 never reaches,
     * more than bfsLocalMaxEdges of them, so no call takes a local path. */
   def paddedPath(k: Int): DataFrame = {
@@ -307,19 +317,17 @@ class TraversalSpec extends SparkSpec {
 
   test("replay bound is exact on both paths; an unbounded replay runs; an absent graph fails to load") {
     // G7 from 0 reduces to 10 replay edges: its 12 minus the 2 into the
-    // start. Both paths: local, and distributed with driver-held or
-    // DataFrame state.
-    val held = Traversals.broadcastFrontierMax
-    Seq(graft.operators.GraphAlgos.denseLocalMaxEdges -> held, 0L -> held, 0L -> 0L).foreach {
-      case (local, maxHeld) =>
-        val path = s"localMaxEdges=$local, maxHeld=$maxHeld"
-        def leaves(maxReplay: Long) = Traversals.dfsLeaves(edges("G7"), 0, maxReplay, local, maxHeld)
-          .collect().map(_.getLong(0)).toSeq
-        assert(leaves(10L) === Seq(3L, 5L, 6L), path)
-        val e = intercept[IllegalArgumentException](leaves(9L))
-        assert(e.getMessage.contains("exceed dfsReplayMaxEdges=9"), path)
-        // Long.MaxValue + 1 overflows; the bounded collect clamps it
-        assert(leaves(Long.MaxValue) === Seq(3L, 5L, 6L), path)
+    // start. Both paths: local, and distributed with driver-held state.
+    Seq(graft.operators.GraphAlgos.denseLocalMaxEdges, 0L).foreach { local =>
+      val path = s"localMaxEdges=$local"
+      def leaves(maxReplay: Long) = Traversals.dfsLeaves(edges("G7"), 0, maxReplay, local)
+        .collect().map(_.getLong(0)).toSeq
+      assert(leaves(10L) === Seq(3L, 5L, 6L), path)
+      val e = intercept[IllegalArgumentException](leaves(9L))
+      assert(e.getMessage.contains("exceed dfsReplayMaxEdges=9"), path)
+      // Long.MaxValue + 1 overflows: the held bound saturates and the
+      // bounded collect clamps it
+      assert(leaves(Long.MaxValue) === Seq(3L, 5L, 6L), path)
     }
     assert(Traversals.bfs(edges("G7"), 0, localMaxEdges = Long.MaxValue)
       .collect().map(_.getLong(2)).toSeq === Seq(0L, 1L, 4L, 2L, 5L, 6L, 3L))

@@ -30,10 +30,6 @@ object Stress {
       // checkpoint blocks inside one long probe session
       .config("spark.locality.wait", "0")
       .config("spark.cleaner.periodicGC.interval", "1min")
-      // same Pregel checkpoint cadence as the harness/test builders
-      // (read from SparkConf at context creation; dir guaranteed by
-      // GraphAlgos.ensureGraphCheckpointDir at each GraphX entry)
-      .config("spark.graphx.pregel.checkpointInterval", "25")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
