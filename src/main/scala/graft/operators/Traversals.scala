@@ -195,11 +195,12 @@ object Traversals {
   }
 
   /** [[driverLevels]] over a collected edge array, expanding by
-    * adjacency lookup: the local path of BFS, `reachableFrom` and the
-    * DFS operators, which run it to its fixpoint (`Int.MaxValue`
-    * levels) for the reachable set. With `replay`, each level also
-    * hands it the frontier's out-edges; the walk goes on past a
-    * refusal (the edges are on the driver already). */
+    * adjacency lookup: the local path of BFS, `reachableFrom` (to its
+    * `maxIters` levels) and the DFS operators, which run it to its
+    * fixpoint (`Int.MaxValue` levels) for the reachable set. With
+    * `replay`, each level also hands it the frontier's out-edges; the
+    * walk goes on past a refusal (the edges are on the driver
+    * already). */
   private def localLevels(raw: Array[(Long, Long)], starts: Seq[Long], maxLevels: Int,
                           replay: Option[ReplayEdges] = None): Seq[Array[Long]] = {
     val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
@@ -1842,7 +1843,8 @@ object Traversals {
     * callers whose seeds are themselves a distributed result (e.g.
     * the bow-tie decomposition's core SCC): the BFS level loop seeded
     * with the whole set, levels dropped ([[levelLoop]]). Output: one
-    * `vertex` column, seeds included. Reverse the edge columns at the
+    * `vertex` column, seeds included, each within `maxIters` hops of a
+    * seed on either path. Reverse the edge columns at the
     * call site for reaches-TO-set. */
   def reachableFrom(edges: DataFrame, seeds: DataFrame,
                     maxIters: Int = 10000): DataFrame = {
@@ -1857,7 +1859,7 @@ object Traversals {
     val local = for {
       raw <- collectAtMost(castEdges(edges), bfsLocalMaxEdges)
       starts <- rowsAtMost(seedVerts.as[Long], broadcastFrontierMax)
-    } yield localLevels(raw, starts.toSeq, Int.MaxValue).flatten.toDF("vertex")
+    } yield localLevels(raw, starts.toSeq, maxIters).flatten.toDF("vertex")
     local.getOrElse(levelLoop(edges, seedVerts.distinct(), Nil, maxIters)._1.select("vertex"))
   }
 

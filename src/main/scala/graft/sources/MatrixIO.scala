@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Adjacency-matrix text source/sink, for fidelity with the reference's
   * on-disk graph format (`secondary_server.c:91-100` read path,
@@ -11,46 +11,29 @@ import org.apache.spark.sql.functions._
   *
   * The in-engine representation is a **sparse edge list**
   * `DataFrame(src: Long, dst: Long)` — dense matrices don't survive a
-  * 100 TB design point, edge lists do. The parse itself is fully
-  * declarative (split + posexplode), so Catalyst plans and codegens it;
-  * no driver-side tokenisation.
+  * 100 TB design point, edge lists do. Every read and write here goes
+  * through the `graft-matrix` connector ([[MatrixSourceV2]]), the one
+  * code that knows the format, and shares its contract: the file is
+  * local (one file = one small graph, n <= 100 per `client.c:11`), and
+  * a malformed one refuses with an `IllegalArgumentException` naming
+  * the path.
+  * Large graphs enter the engine as Parquet edge lists via
+  * [[graft.operators.GraphCatalog]].
   */
 object MatrixIO {
 
-  /** Schema of every edge DataFrame in the engine. */
-  val edgeCols: Seq[String] = Seq("src", "dst")
+  // by class, not short name: a classpath without the connector's
+  // META-INF/services entry still finds it
+  private val format = classOf[MatrixSourceV2].getName
 
-  /** Read a `G<k>.txt`-style adjacency-matrix file into an edge DataFrame.
-    *
-    * One file = one small graph (reference caps n at 100,
-    * `client.c:11`), so `wholetext` is safe here; large graphs enter the
-    * engine as Parquet edge lists via [[graft.operators.GraphCatalog]].
-    */
+  /** Read a `G<k>.txt`-style adjacency-matrix file into an edge
+    * DataFrame. The file is checked here, on the driver and with no
+    * Spark job, so a malformed one fails at the call. The scan is one
+    * input partition: the graph is small, and a writer of the result
+    * then leaves one file. */
   def readMatrix(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("wholetext", "true").text(path)
-    // regex trim: Spark's trim() strips spaces but NOT the file's
-    // trailing newline, which would leave an empty final token
-    val toks = split(regexp_replace(col("value"), "^\\s+|\\s+$", ""), "\\s+")
-    // validate shape up front: a truncated matrix would otherwise parse
-    // silently into a smaller, WRONG graph (cells re-interpreted
-    // row-major against the declared n)
-    val hdr = raw.select(
-      element_at(toks, 1).cast("int").as("n"), size(toks).as("total")).head()
-    require(!hdr.isNullAt(0) && hdr.getInt(0) >= 0,
-      s"$path: first token must be a non-negative vertex count")
-    val n = hdr.getInt(0)
-    require(hdr.getInt(1) == n.toLong * n + 1,
-      s"$path: expected ${n.toLong * n} matrix cells for n=$n, " +
-        s"found ${hdr.getInt(1) - 1}")
-    raw
-      .select(
-        element_at(toks, 1).cast("int").as("n"),
-        slice(toks, lit(2), element_at(toks, 1).cast("int") * element_at(toks, 1).cast("int")).as("cells"))
-      .select(col("n"), posexplode(col("cells")))
-      .where(col("col").cast("int") === 1)
-      .select(
-        floor(col("pos") / col("n")).cast("long").as("src"),
-        (col("pos") % col("n")).cast("long").as("dst"))
+    MatrixSourceV2.read(path)
+    spark.read.format(format).option("partitions", 1).load(path)
   }
 
   /** Read a bundled reference graph (src/main/resources/graphs/<name>)
@@ -60,8 +43,8 @@ object MatrixIO {
     readMatrix(spark, resourcePath(name))
 
   /** Extract a bundled graph resource to a (memoized, exit-reaped)
-    * temp file and return its filesystem path — for readers that need
-    * a real path (the `graft-matrix` V2 source, spark.read.text). */
+    * temp file and return its filesystem path: the `graft-matrix`
+    * connector reads local files only. */
   def resourcePath(name: String): String =
     resourcePathMemo.computeIfAbsent(name, { n =>
       val in = getClass.getClassLoader.getResourceAsStream(s"graphs/$n")
@@ -77,33 +60,17 @@ object MatrixIO {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Vertex count declared in the file header (needed because isolated
-    * vertices carry no edges). */
-  def readVertexCount(spark: SparkSession, path: String): Int = {
-    spark.read.option("wholetext", "true").text(path)
-      .select(element_at(split(regexp_replace(col("value"), "^\\s+|\\s+$", ""), "\\s+"), 1).cast("int"))
-      .head().getInt(0)
-  }
+    * vertices carry no edges), of a file that passes the same checks as
+    * [[readMatrix]]. */
+  def readVertexCount(spark: SparkSession, path: String): Int =
+    MatrixSourceV2.read(path).n
 
-  /** Write an edge DataFrame back out in the reference's dense text format.
-    * Only intended for reference-format interop (n bounded); the engine's
+  /** Write an edge DataFrame back out in the reference's dense text
+    * format, replacing the file atomically. `n` must be non-negative and
+    * cover every endpoint of the first two columns, cast to long. Only
+    * intended for reference-format interop (n bounded); the engine's
     * native persistence is Parquet. */
-  def writeMatrix(edges: DataFrame, n: Int, path: String): Unit = {
-    // cast like readMatrix does (int edge columns would ClassCastException
-    // on getLong), and fail loudly on endpoints outside [0, n) instead of
-    // silently truncating the graph
-    val cells = edges
-      .select(col(edges.columns(0)).cast("long"), col(edges.columns(1)).cast("long"))
-      .collect().map { r =>
-        val (i, j) = (r.getLong(0), r.getLong(1))
-        require(i >= 0 && i < n && j >= 0 && j < n,
-          s"writeMatrix: edge ($i,$j) outside [0,$n) — n too small or negative ids")
-        (i.toInt, j.toInt)
-      }.toSet
-    val sb = new StringBuilder
-    sb.append(n).append('\n')
-    (0 until n).foreach { i =>
-      sb.append((0 until n).map(j => if (cells((i, j))) "1" else "0").mkString(" ")).append('\n')
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), sb.toString.getBytes("UTF-8"))
-  }
+  def writeMatrix(edges: DataFrame, n: Int, path: String): Unit =
+    edges.select(col(edges.columns(0)).cast("long"), col(edges.columns(1)).cast("long"))
+      .write.format(format).mode("overwrite").option("n", n).save(path)
 }

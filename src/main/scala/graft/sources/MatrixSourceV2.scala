@@ -14,24 +14,25 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 provider for the reference's dense adjacency-matrix
-  * text format (`secondary_server.c:91-100`): header token `n`, then
-  * `n*n` row-major 0/1 cells; cell `(i,j)==1` is a directed edge.
-  * Registered as `graft-matrix` (META-INF/services), so
-  * `spark.read.format("graft-matrix").load(path)` yields the engine's
-  * canonical `(src: Long, dst: Long)` edge schema.
+  * text format (`secondary_server.c:91-100` read path,
+  * `primary_server.c:82-89` write path), and the one codec of that
+  * format in the engine: header token `n`, then `n*n` row-major integer
+  * cells; cell `(i,j)` is a directed edge `i -> j` iff it equals 1 (the
+  * reference's `%d` read). Every token must parse as an integer and
+  * exactly `n*n` cells must follow the header, or the read refuses with
+  * an `IllegalArgumentException` naming the path. [[MatrixIO]] reads and
+  * writes through this class. Registered as `graft-matrix`
+  * (META-INF/services), so `spark.read.format("graft-matrix").load(path)`
+  * yields the engine's canonical `(src: Long, dst: Long)` edge schema.
   *
-  * Why a V2 source when [[MatrixIO.readMatrix]] already parses the
-  * format declaratively: this is the extension tier where SCAN
-  * decisions live. The connector plans one `InputPartition` per
+  * The file is local by contract (plain java.nio, n <= 100 per
+  * `client.c:11`); data-scale graphs enter as Parquet edge lists via
+  * GraphCatalog. The connector plans one `InputPartition` per
   * matrix-row range, accepts `src` range/equality filters and prunes
-  * whole row ranges BEFORE any cell is parsed (`pushedFilters`
-  * reports them, so they vanish from post-scan `Filter` nodes), and
-  * honours column pruning (`dst`-only projection never materialises
-  * `src` values). The same three hooks are exactly what a 100 TB
-  * columnar source uses — this keeps the interop format on the same
-  * contract. Per the reference contract n <= 100 (`client.c:11`), so
-  * each partition re-reading its ~40 KB file is the right trade;
-  * data-scale graphs enter as Parquet edge lists via GraphCatalog.
+  * whole row ranges BEFORE any cell is read (`pushedFilters` reports
+  * them, so they vanish from post-scan `Filter` nodes), and honours
+  * column pruning (`dst`-only projection never materialises `src`
+  * values). Each partition re-reads the ~40 KB file.
   */
 class MatrixSourceV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-matrix"
@@ -52,22 +53,30 @@ object MatrixSourceV2 {
     StructField("src", LongType, nullable = false),
     StructField("dst", LongType, nullable = false)))
 
-  /** Whole-file token read (header contract keeps this tiny). Plain
-    * java.nio — the interop format is a local/posix file by contract;
-    * distributed storage carries graphs as Parquet edge lists. */
-  private[sources] def tokens(path: String): Array[String] = {
-    val clean = if (path.startsWith("file:")) new java.net.URI(path).getPath else path
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(clean)),
-      java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
+  /** A checked matrix file: `n`, then its `n*n` cells row-major. */
+  private[sources] final class Matrix(val n: Int, cells: Array[Int]) {
+    def isEdge(i: Long, j: Long): Boolean = cells((i * n + j).toInt) == 1
+    def edges: Iterator[(Long, Long)] =
+      cells.indices.iterator.filter(cells(_) == 1).map(k => ((k / n).toLong, (k % n).toLong))
   }
 
-  private[sources] def vertexCount(path: String): Int = {
-    val t = tokens(path)
-    val n = t(0).toInt
+  private[sources] def localPath(path: String): java.nio.file.Path =
+    java.nio.file.Paths.get(
+      if (path.startsWith("file:")) new java.net.URI(path).getPath else path)
+
+  /** Reads and checks a whole matrix file: the header, the shape and
+    * every cell. Runs on the driver when a scan is built, so a malformed
+    * file refuses before any Spark job. */
+  private[sources] def read(path: String): Matrix = {
+    val t = new String(java.nio.file.Files.readAllBytes(localPath(path)),
+      java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
+    def int(k: Int, what: => String): Int = t(k).toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"$path: $what '${t(k)}' is not an integer"))
+    val n = int(0, "vertex count")
     require(n >= 0, s"$path: first token must be a non-negative vertex count")
     require(t.length == n.toLong * n + 1,
       s"$path: expected ${n.toLong * n} matrix cells for n=$n, found ${t.length - 1}")
-    n
+    new Matrix(n, Array.tabulate(n * n)(k => int(k + 1, s"cell (${k / n},${k % n})")))
   }
 }
 
@@ -124,26 +133,26 @@ private[sources] class MatrixWrite(path: String, info: LogicalWriteInfo,
     val incoming = messages.iterator.flatMap {
       case MatrixEdgesMessage(flat) => flat.grouped(2).map(p => (p(0), p(1)))
     }.toSet
-    val clean = if (path.startsWith("file:"))
-      new java.net.URI(path).getPath else path
-    val target = java.nio.file.Paths.get(clean)
-    val existing: Set[(Long, Long)] =
-      if (!replace && java.nio.file.Files.exists(target)) {
-        val toks = MatrixSourceV2.tokens(path)
-        val en = toks(0).toInt
-        (for { i <- 0 until en; j <- 0 until en
-               if toks(i * en + j + 1) == "1" } yield (i.toLong, j.toLong)).toSet
-      } else Set.empty
-    val cells = existing ++ incoming
+    val target = MatrixSourceV2.localPath(path)
+    val existing =
+      if (!replace && java.nio.file.Files.exists(target)) Some(MatrixSourceV2.read(path))
+      else None
+    val cells = existing.fold(Set.empty[(Long, Long)])(_.edges.toSet) ++ incoming
+    // explicit n wins (callers writing a fixed-capacity interop file, an
+    // empty graph's n = 0 included); otherwise size to the data. The
+    // existing file's n is respected on append.
+    val opts = info.options()
+    val optN = if (opts.containsKey("n")) Some(opts.getInt("n", 0)) else None
+    require(optN.forall(_ >= 0),
+      s"graft-matrix write: the n option must be non-negative, got ${optN.get}")
+    require(optN.nonEmpty || existing.nonEmpty || cells.nonEmpty,
+      "graft-matrix write: empty input and no explicit n option")
     val maxId = (cells.iterator.flatMap(c => Iterator(c._1, c._2)) ++ Iterator(-1L)).max
-    // explicit n wins (callers writing a fixed-capacity interop file);
-    // otherwise size to the data. Existing-file n is respected on append.
-    val optN = info.options().getInt("n", -1)
-    val existN = if (existing.nonEmpty) MatrixSourceV2.tokens(path)(0).toInt else 0
-    val n = math.max(if (optN > 0) optN else (maxId + 1).toInt, existN)
-    require(n >= 1, "graft-matrix write: empty input and no explicit n option")
-    require(maxId < n,
-      s"graft-matrix write: edge endpoint $maxId outside [0,$n) — pass a larger n option")
+    val n = math.max(optN.getOrElse((maxId + 1).toInt), existing.fold(0)(_.n))
+    cells.find { case (s, d) => (s min d) < 0 || (s max d) >= n }.foreach { case (s, d) =>
+      throw new IllegalArgumentException(s"graft-matrix write: edge ($s,$d) outside " +
+        s"[0,$n) — negative ids, or pass a larger n option")
+    }
     val sb = new StringBuilder
     sb.append(n).append('\n')
     (0 until n).foreach { i =>
@@ -178,11 +187,8 @@ private[sources] case class MatrixWriterFactory(srcLong: Boolean, dstLong: Boole
           s"graft-matrix write: task buffered > $maxEdges edges — the dense " +
             "interop format is for reference-contract graphs (n <= 100); " +
             "persist data-scale graphs as Parquet edge lists via GraphCatalog")
-        val s = if (srcLong) row.getLong(0) else row.getInt(0).toLong
-        val t = if (dstLong) row.getLong(1) else row.getInt(1).toLong
-        require(s >= 0 && t >= 0,
-          s"graft-matrix write: negative vertex id ($s,$t)")
-        buf += s; buf += t
+        buf += (if (srcLong) row.getLong(0) else row.getInt(0).toLong)
+        buf += (if (dstLong) row.getLong(1) else row.getInt(1).toLong)
       }
       override def commit(): WriterCommitMessage = MatrixEdgesMessage(buf.toArray)
       override def abort(): Unit = buf.clear()
@@ -196,7 +202,7 @@ private[sources] case class MatrixWriterFactory(srcLong: Boolean, dstLong: Boole
   * Filter. */
 private[sources] class MatrixScanBuilder(path: String, parts: Int)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-  private val n = MatrixSourceV2.vertexCount(path)
+  private val n = MatrixSourceV2.read(path).n
   private var lo = 0L          // inclusive row bound
   private var hi = n.toLong    // exclusive row bound
   private var accepted: Array[Filter] = Array.empty
@@ -264,7 +270,7 @@ private[sources] class MatrixReaderFactory(required: StructType)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MatrixPartition]
     new PartitionReader[InternalRow] {
-      private val toks = MatrixSourceV2.tokens(p.path) // ~40 KB by contract
+      private val matrix = MatrixSourceV2.read(p.path)
       private var row = p.rowStart
       private var j = -1L
       private var current: InternalRow = _
@@ -273,7 +279,7 @@ private[sources] class MatrixReaderFactory(required: StructType)
         while (row < p.rowEnd) {
           j += 1
           if (j >= p.n) { j = -1L; row += 1 }
-          else if (toks((row * p.n + j + 1).toInt) == "1") {
+          else if (matrix.isEdge(row, j)) {
             val vals = required.fieldNames.map {
               case "src" => row
               case "dst" => j

@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions.col
 
 import graft.sources.{MatrixIO, MatrixSourceV2}
 
-/** The `graft-matrix` DataSource V2 connector: parity with the
-  * declarative MatrixIO parse, filter pushdown that PRUNES row
-  * partitions (not just reports filters), and column pruning. */
+/** The `graft-matrix` DataSource V2 connector, the engine's one codec
+  * of the reference's matrix format: both entry points
+  * (`MatrixIO.readMatrix` and `format("graft-matrix")`) against an
+  * independent plain-Scala parse, their shared refusals, filter
+  * pushdown that PRUNES row partitions (not just reports filters), and
+  * column pruning. */
 class MatrixSourceV2Spec extends SparkSpec {
 
   private def v2(name: String) =
@@ -17,13 +20,69 @@ class MatrixSourceV2Spec extends SparkSpec {
     df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }
       .getOrElse(fail("no BatchScanExec in plan"))
 
-  test("v2 read matches MatrixIO.readMatrix on every fixture") {
+  private def edgeSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Both entry points' reads of a matrix file. */
+  private def reads(path: String): Seq[(String, Set[(Long, Long)])] = Seq(
+    "readMatrix" -> edgeSet(MatrixIO.readMatrix(spark, path)),
+    "format(graft-matrix)" -> edgeSet(spark.read.format("graft-matrix").load(path)))
+
+  /** The reference parse, kept apart from the connector: split on
+    * whitespace, then row-major (i, j) for every cell equal to 1. */
+  private def plainParse(text: String): Set[(Long, Long)] = {
+    val t = text.trim.split("\\s+")
+    val n = t(0).toInt
+    (for (i <- 0 until n; j <- 0 until n if BigInt(t(1 + i * n + j)) == 1)
+      yield (i.toLong, j.toLong)).toSet
+  }
+
+  private def textOf(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+
+  private def tmpWith(content: String): String = {
+    val p = java.nio.file.Files.createTempFile("graft-matrix-", ".txt")
+    java.nio.file.Files.write(p, content.getBytes)
+    p.toFile.deleteOnExit()
+    p.toString
+  }
+
+  test("both entry points match a plain-Scala parse on every fixture") {
     for (g <- Seq("G1", "G2", "G3", "G5", "G6", "G7")) {
-      val want = MatrixIO.readMatrix(spark, MatrixIO.resourcePath(s"$g.txt"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got = v2(s"$g.txt").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === want, s"fixture $g")
+      val path = MatrixIO.resourcePath(s"$g.txt")
+      val want = plainParse(textOf(path))
+      reads(path).foreach { case (entry, got) => assert(got === want, s"$entry, fixture $g") }
     }
+  }
+
+  test("a cell is an edge iff its integer value is 1, on both entry points") {
+    val path = tmpWith("3\n01 +1 1\n2 -1 0\n0 00 1\n")
+    val want = Set((0L, 0L), (0L, 1L), (0L, 2L), (2L, 2L))
+    assert(plainParse(textOf(path)) === want)
+    reads(path).foreach { case (entry, got) => assert(got === want, entry) }
+  }
+
+  test("seeded random matrices with n in [0, 100] render and read back to their edge sets") {
+    val rnd = new scala.util.Random(11L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-mxr")
+    try (1 to 12).foreach { k =>
+      val n = if (k == 1) 0 else if (k == 2) 100 else rnd.nextInt(101)
+      val density = rnd.nextDouble()
+      val want = (for (i <- 0 until n; j <- 0 until n if rnd.nextDouble() < density)
+        yield (i.toLong, j.toLong)).toSet
+      val df = edgesDf(want.toSeq: _*)
+      val viaIO = dir.resolve(s"io$k.txt").toString
+      MatrixIO.writeMatrix(df, n, viaIO)
+      val viaV2 = dir.resolve(s"v2$k.txt").toString
+      df.write.format("graft-matrix").mode("overwrite").option("n", n).save(viaV2)
+      for (path <- Seq(viaIO, viaV2)) {
+        assert(MatrixIO.readVertexCount(spark, path) === n, s"#$k n=$n $path")
+        assert(plainParse(textOf(path)) === want, s"#$k n=$n $path")
+        reads(path).foreach { case (entry, got) =>
+          assert(got === want, s"#$k n=$n $entry $path")
+        }
+      }
+    } finally graft.tools.TestCleanup.deleteRecursively(dir)
   }
 
   test("src range filters are pushed and prune row partitions") {
@@ -74,28 +133,33 @@ class MatrixSourceV2Spec extends SparkSpec {
   }
 
   test("malformed files fail loudly at scan build, not silently mis-parse") {
-    def tmpWith(content: String): String = {
-      val p = java.nio.file.Files.createTempFile("graft-badmatrix-", ".txt")
-      java.nio.file.Files.write(p, content.getBytes)
-      p.toFile.deleteOnExit()
-      p.toString
+    // each refuses through both entry points with a message naming the
+    // path: readMatrix at the call, the short name at scan build (a
+    // truncated matrix would otherwise be re-interpreted row-major
+    // against the declared n into a smaller, WRONG graph)
+    val malformed = Seq(
+      "3\n0 1 0 1 0\n" -> "expected 9 matrix cells",
+      "-2\n" -> "non-negative vertex count",
+      "two\n0 1\n1 0\n" -> "vertex count 'two' is not an integer",
+      "2\n0 1\nx 0\n" -> "cell (1,0) 'x' is not an integer",
+      "" -> "vertex count '' is not an integer")
+    for ((content, why) <- malformed) {
+      val path = tmpWith(content)
+      val refusals = Seq(
+        "readMatrix" -> intercept[IllegalArgumentException](MatrixIO.readMatrix(spark, path)),
+        "readVertexCount" ->
+          intercept[IllegalArgumentException](MatrixIO.readVertexCount(spark, path)),
+        "format(graft-matrix)" -> intercept[IllegalArgumentException](
+          spark.read.format("graft-matrix").load(path).count()))
+      refusals.foreach { case (entry, e) =>
+        assert(e.getMessage.contains(s"$path: ") && e.getMessage.contains(why),
+          s"$entry on ${content.trim}: ${e.getMessage}")
+      }
     }
-    // truncated cell matrix: must refuse (silently re-interpreting
-    // row-major cells against the declared n is the failure mode
-    // MatrixIO guards against too)
-    val truncated = tmpWith("3\n0 1 0 1 0\n")
-    val e1 = intercept[IllegalArgumentException] {
-      spark.read.format("graft-matrix").load(truncated).count()
-    }
-    assert(e1.getMessage.contains("expected 9 matrix cells"))
-    // negative header
-    val negative = tmpWith("-2\n")
-    val e2 = intercept[Exception] {
-      spark.read.format("graft-matrix").load(negative).count()
-    }
-    assert(e2.getMessage.contains("non-negative") || e2.getMessage.contains("expected"))
     // n = 0 is a VALID empty graph, not an error
-    assert(spark.read.format("graft-matrix").load(tmpWith("0\n")).count() === 0L)
+    val empty = tmpWith("0\n")
+    assert(reads(empty).map(_._2) === Seq(Set.empty, Set.empty))
+    assert(MatrixIO.readVertexCount(spark, empty) === 0)
   }
 
   private def edgesDf(pairs: (Long, Long)*) = {
@@ -116,6 +180,26 @@ class MatrixSourceV2Spec extends SparkSpec {
       assert(back === in.toSet)
       // inferred n = maxId + 1
       assert(MatrixIO.readVertexCount(spark, p) === 4)
+    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+  }
+
+  test("an empty edge set with n = 0 round-trips as an empty graph through both entry points") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-mxw")
+    try {
+      val viaIO = dir.resolve("io.txt").toString
+      MatrixIO.writeMatrix(edgesDf(), 0, viaIO)
+      val viaV2 = dir.resolve("v2.txt").toString
+      edgesDf().write.format("graft-matrix").mode("overwrite").option("n", 0).save(viaV2)
+      for (path <- Seq(viaIO, viaV2)) {
+        assert(textOf(path) === "0\n", path)
+        assert(MatrixIO.readVertexCount(spark, path) === 0, path)
+        assert(reads(path).map(_._2) === Seq(Set.empty, Set.empty), path)
+      }
+      // without an explicit n an empty write has no size to take
+      val e = intercept[IllegalArgumentException] {
+        edgesDf().write.format("graft-matrix").mode("overwrite").save(dir.resolve("x.txt").toString)
+      }
+      assert(e.getMessage.contains("no explicit n"))
     } finally graft.tools.TestCleanup.deleteRecursively(dir)
   }
 

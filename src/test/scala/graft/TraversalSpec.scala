@@ -129,7 +129,14 @@ class TraversalSpec extends SparkSpec {
   test("job-count pins: a catalog load runs no job, a G7 bfs or dfsLeaves collect runs one") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
     val cat = new GraphCatalog(spark, tmp)
-    cat.addGraph("g7", edges("G7"))
+    // the matrix read checks the file on the driver and plans one input
+    // partition, so adding it to the catalog is one job and one file
+    val (g7, readJobs) = jobsOf(edges("G7"))
+    assert(readJobs === 0, "readMatrix must run no job")
+    assert(jobsOf(cat.addGraph("g7", g7))._2 === 1)
+    val parquet = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, "g7", "edges"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).count()
+    assert(parquet === 1L)
     cat.commitVersion("g7v", edges("G7"))
     assert(jobsOf(cat.load("g7"))._2 === 0, "load must not infer the schema")
     assert(jobsOf(cat.loadLatest("g7v"))._2 === 0, "loadLatest must not infer the schema")
@@ -241,6 +248,16 @@ class TraversalSpec extends SparkSpec {
     assert(dist === reference(above) && !dist.contains(5000L))
     assert(local === reference(below) && !local.contains(5000L))
     assert(distJobs > localJobs, s"distributed $distJobs jobs, local $localJobs")
+  }
+
+  test("reachableFrom stops after maxIters levels on the local path and on the loop") {
+    import spark.implicits._
+    val seeds = Seq(0L).toDF("vertex")
+    val path = (0L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    for ((name, e) <- Seq("local" -> path, "loop" -> paddedPath(5))) {
+      val got = Traversals.reachableFrom(e, seeds, maxIters = 2).collect().map(_.getLong(0)).toSet
+      assert(got === Set(0L, 1L, 2L), name)
+    }
   }
 
   test("reachableFrom: a seed set one past broadcastFrontierMax returns the seeds and what they reach") {
@@ -661,5 +678,20 @@ class TraversalSpec extends SparkSpec {
     val back = MatrixIO.readMatrix(spark, s"$tmp/ok.txt").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(back === edges("G7").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    // a negative n, a negative id or a null one refuses too, and writes nothing
+    val negN = intercept[IllegalArgumentException] {
+      MatrixIO.writeMatrix(edges("G7"), -1, s"$tmp/neg.txt")
+    }
+    assert(negN.getMessage.contains("non-negative"))
+    val negId = intercept[IllegalArgumentException] {
+      MatrixIO.writeMatrix(intEdges.union(spark.range(1).selectExpr("-1", "0")), 7, s"$tmp/neg.txt")
+    }
+    assert(negId.getMessage.contains("(-1,0) outside [0,7)"))
+    val nullId = intercept[Exception] {
+      MatrixIO.writeMatrix(intEdges.union(spark.range(1).selectExpr("null", "0")), 7, s"$tmp/neg.txt")
+    }
+    // the connector's schema is non-nullable, so Spark refuses the row
+    assert(nullId.getMessage.contains("NULL value appeared in non-nullable field"), nullId.toString)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/neg.txt")))
   }
 }
