@@ -1,8 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.queries.SessionMemo
 
 /** Named-graph store replacing the reference's write path
   * (ops 1/2, `primary_server.c:70-99`) and its per-graph
@@ -19,6 +30,37 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * read that must survive concurrent overwrites, [[loadPinned]]
   * materialises the snapshot first (the moral equivalent of the
   * reference's reader lock, without blocking writers).
+  *
+  * Staged versions: the reference's read servers hold the graph in
+  * memory and traverse it (`secondary_server.c:91-100`). Here a
+  * version written by [[addGraph]] / [[modifyGraph]] with more than
+  * [[Traversals.bfsLocalMaxEdges]] edges is staged by its first
+  * [[load]]: a lazy `localCheckpoint` of the read, filled by the first
+  * job over it, with its exact edge count in its plan statistics (the
+  * count is observed on the write, which runs no extra job for it),
+  * so a traversal skips the bounded collect and scans the checkpoint
+  * in place. What stays in memory is one checkpoint per graph past the
+  * bound, in this catalog's [[graft.queries.SessionMemo]], keyed on
+  * the edge path and the fingerprint of the file listing the write
+  * left. That is the cost of staging: once filled, the copy (storage
+  * level MEMORY_AND_DISK) stays until the next write to the graph
+  * through this catalog, or until a load finds another writer's
+  * files, whether or not the graph is read again, and a
+  * [[loadPinned]] of a staged graph holds a second full copy. Graphs
+  * at or below the bound, graphs this catalog did not write (or whose
+  * count is not in yet), appended graphs and the bucketed and
+  * versioned layouts keep the plain Parquet read. The
+  * consistency model is unchanged: every write to a graph's path
+  * releases its stage before it writes, and a listing that no longer
+  * matches the fingerprint (another writer replaced the files) is
+  * read plainly, so a DataFrame from a released stage fails as one
+  * over replaced files does, and a stage never serves rows of a
+  * superseded version to a new [[load]]. A write whose input reads the
+  * graph it writes, its files or its stage (`modifyGraph(g,
+  * load(g).union(more))`, `addEdges(g, load(g)...)`), pins that input
+  * before it releases or deletes anything, so it reads the old version
+  * whole.
+  *
   * No fixed caps (reference: 20 graphs / 100 vertices); names are
   * real names, not a load-bearing `G<k>.txt` convention
   * (`primary_server.c:43-51`).
@@ -39,11 +81,73 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     require(name.nonEmpty && !name.contains("/") && !name.contains(".."),
       s"invalid graph name: $name")
 
-  /** Reference op=1 (Add graph). Create-or-replace, atomic per graph. */
-  def addGraph(name: String, edges: DataFrame): Unit = {
+  /** The staged versions (see the class doc), one per graph. */
+  private val stages = new SessionMemo
+  private val stageTag = "catalog.stage"
+
+  /** Per graph, the fingerprint of the listing its last [[addGraph]]
+    * left and the edge count observed on that write. */
+  private val written = new ConcurrentHashMap[String, (Long, Observation)]()
+
+  /** Runs a write of `edges` to `name`'s edge path after forgetting
+    * its observed count and releasing its stage. When `edges` reads
+    * the graph itself, its files or its stage (a [[load]] of it, to
+    * append to it or to rewrite it), it is pinned first with an eager
+    * `localCheckpoint`, so the write reads the rows the graph held
+    * instead of files it has deleted or blocks just released, and the
+    * pin is dropped once the write is done. */
+  private def rewrite(name: String, edges: DataFrame)(write: DataFrame => Unit): Unit = {
     validate(name)
-    asEdges(edges)
+    val stage = stages.entries(spark, edgePath(name), stageTag)
+      .flatMap(Traversals.checkpointRddIds).toSet
+    val pin = if (reads(edges, fs.makeQualified(new Path(edgePath(name))), stage))
+      Some(edges.localCheckpoint(eager = true)) else None
+    written.remove(name)
+    stages.release(spark, edgePath(name), stageTag)
+    try write(pin.getOrElse(edges))
+    finally pin.foreach(Traversals.dropCheckpoint(_))
+  }
+
+  /** Whether `df`'s plan reads the files under `dir`, or an RDD of
+    * `ids` as a checkpoint or in the lineage of one. */
+  private def reads(df: DataFrame, dir: Path, ids: Set[Int]): Boolean = {
+    val plan = df.queryExecution.analyzed
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def lineage(rdd: RDD[_]): Boolean =
+      seen.add(rdd.id) && (ids(rdd.id) || rdd.dependencies.exists(d => lineage(d.rdd)))
+    plan.collectWithSubqueries {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.rootPaths
+    }.flatten.contains(dir) ||
+      ids.nonEmpty && plan.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.exists(lineage)
+  }
+
+  /** A fingerprint of the data files of a listing: their paths, sizes
+    * and modification times (Spark's file index skips names starting
+    * with `_` or `.`, and so does this). */
+  private def fingerprint(files: Seq[FileStatus]): Long = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
+      .sorted.foreach(l => md.update(l.getBytes(StandardCharsets.UTF_8)))
+    java.nio.ByteBuffer.wrap(md.digest()).getLong
+  }
+
+  /** The fingerprint of the files a plain read lists. */
+  private def listed(read: DataFrame): Option[Long] =
+    read.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.collect { case index: PartitioningAwareFileIndex => fingerprint(index.allFiles()) }
+
+  /** Reference op=1 (Add graph). Create-or-replace, atomic per graph.
+    * The write observes its edge count for [[load]]'s staging. */
+  def addGraph(name: String, edges: DataFrame): Unit = rewrite(name, edges) { input =>
+    val rows = Observation()
+    asEdges(input).observe(rows, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(edgePath(name))
+    val listing = fs.listStatus(new Path(edgePath(name))).toSeq
+    written.put(name, (fingerprint(listing), rows))
   }
 
   /** Reference op=2 (Modify graph) — behaviourally identical to add
@@ -52,8 +156,34 @@ final class GraphCatalog(spark: SparkSession, root: String) {
 
   /** Snapshot read of a named graph's edge list (fail-stop under
     * concurrent overwrite — see class doc). Runs no Spark job; an
-    * absent graph fails here. */
-  def load(name: String): DataFrame = { validate(name); readEdges(edgePath(name)) }
+    * absent graph fails here.
+    *
+    * A version that this catalog wrote with [[addGraph]] /
+    * [[modifyGraph]] and whose observed edge count is above
+    * [[Traversals.bfsLocalMaxEdges]] is staged by its first load and
+    * returned from the stage by later ones (see the class doc): a
+    * checkpoint that the first job over it fills, stating its exact
+    * row count, and that stays in memory until the graph's next write.
+    * The count is read without waiting: until the write's
+    * observation is in, and for any listing other than the one the
+    * write left, the load is the plain Parquet read. */
+  def load(name: String): DataFrame = {
+    validate(name)
+    val read = readEdges(edgePath(name))
+    val entry = written.get(name)
+    val rows = Option(entry).flatMap(_._2.future.value).flatMap(_.toOption).map(_.getLong(0))
+    if (!rows.exists(_ > Traversals.bfsLocalMaxEdges)) read
+    else if (listed(read).contains(entry._1))
+      stages(spark, edgePath(name), stageTag, entry._1) {
+        Bridge.withRowCount(read.localCheckpoint(eager = false), rows.get)
+      }
+    else {
+      // another writer replaced the files: the count and any stage
+      // describe a superseded version
+      if (written.remove(name, entry)) stages.release(spark, edgePath(name), stageTag)
+      read
+    }
+  }
 
   /** Materialised snapshot: survives a concurrent overwrite of the
     * underlying files. `persist()` is NOT enough — Spark's
@@ -77,15 +207,15 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * persistent-storage counterpart of
     * [[Traversals.partitionEdges]]'s in-memory partitioning, and the
     * right layout for a graph queried many times at 100 TB. */
-  def addGraphBucketed(name: String, edges: DataFrame, buckets: Int = 32): Unit = {
-    validate(name)
-    asEdges(edges)
-      .write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(buckets, "src").sortBy("src")
-      .option("path", edgePath(name))
-      .saveAsTable(tableName(name))
-  }
+  def addGraphBucketed(name: String, edges: DataFrame, buckets: Int = 32): Unit =
+    rewrite(name, edges) { input =>
+      asEdges(input)
+        .write.mode(SaveMode.Overwrite)
+        .format("parquet")
+        .bucketBy(buckets, "src").sortBy("src")
+        .option("path", edgePath(name))
+        .saveAsTable(tableName(name))
+    }
 
   /** Load a bucketed graph with its bucket metadata (required for
     * shuffle elimination — a plain parquet read loses it). */
@@ -98,9 +228,8 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * planned before the append never sees the new files (file listing
     * is plan-time), and a [[loadPinned]] snapshot is immune by
     * construction. Creates the graph when absent (append to empty). */
-  def addEdges(name: String, edges: DataFrame): Unit = {
-    validate(name)
-    asEdges(edges)
+  def addEdges(name: String, edges: DataFrame): Unit = rewrite(name, edges) { input =>
+    asEdges(input)
       .write.mode(SaveMode.Append).parquet(edgePath(name))
   }
 
@@ -114,10 +243,9 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * from the catalog, so it can never diverge), which keeps src-keyed
     * joins and traversals shuffle-free — each bucket id just has more
     * than one file until [[compactBucketed]] folds them together. */
-  def addEdgesBucketed(name: String, edges: DataFrame): Unit = {
-    validate(name)
+  def addEdgesBucketed(name: String, edges: DataFrame): Unit = rewrite(name, edges) { input =>
     val spec = bucketSpecOf(name)
-    asEdges(edges)
+    asEdges(input)
       .write.mode(SaveMode.Append).format("parquet")
       .bucketBy(spec.numBuckets, "src").sortBy("src")
       .saveAsTable(tableName(name))

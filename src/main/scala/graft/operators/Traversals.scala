@@ -3,7 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.graftshim.Bridge.notNull
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -64,7 +68,7 @@ object Traversals {
       val rows = cp.queryExecution.analyzed match {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
       }
-      (org.apache.spark.sql.graftshim.Bridge.resetCheckpointStats(cp), rows)
+      (Bridge.resetCheckpointStats(cp), rows)
     }
   }
 
@@ -82,10 +86,11 @@ object Traversals {
     * truncated). `keep` exempts blocks shared with a still-live
     * DataFrame (e.g. BFS's current frontier inside the old visited
     * union). */
-  private[graft] def dropCheckpoint(df: DataFrame, keep: Set[Int] = Set.empty): Unit =
+  private[graft] def dropCheckpoint(df: DataFrame, keep: Set[Int] = Set.empty,
+                                    blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD
-        if !keep.contains(lr.rdd.id) => lr.rdd.unpersist(blocking = false)
+        if !keep.contains(lr.rdd.id) => lr.rdd.unpersist(blocking)
       case _ => ()
     }
 
@@ -122,7 +127,10 @@ object Traversals {
     * (adaptive execution is Spark's default, and no session in this
     * project turns it off). `limit` takes an Int; a bound at or past
     * `Int.MaxValue` fetches up to `Int.MaxValue` rows, the most one
-    * driver array can hold. */
+    * driver array can hold. A table whose plan statistics carry an
+    * exact row count above `max` (a checkpoint with its count stated,
+    * as [[GraphCatalog.load]] stages a large graph) is refused with no
+    * job at all. */
   private[operators] def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -130,10 +138,21 @@ object Traversals {
   }
 
   /** [[collectAtMost]] over any typed table. */
-  private def rowsAtMost[T](rows: Dataset[T], max: Long): Option[Array[T]] = {
-    val fetch = if (max >= Int.MaxValue) Int.MaxValue else (max max -1L).toInt + 1
-    val got = rows.limit(fetch).collect()
-    if (got.length <= max) Some(got) else None
+  private def rowsAtMost[T](rows: Dataset[T], max: Long): Option[Array[T]] =
+    if (statedRows(rows.queryExecution.analyzed).exists(_ > max)) None
+    else {
+      val fetch = if (max >= Int.MaxValue) Int.MaxValue else (max max -1L).toInt + 1
+      val got = rows.limit(fetch).collect()
+      if (got.length <= max) Some(got) else None
+    }
+
+  /** The exact row count a checkpoint's plan statistics state
+    * ([[graftshim.Bridge.withRowCount]]), seen through projections,
+    * which keep the row count; None for any other plan. */
+  private def statedRows(plan: LogicalPlan): Option[BigInt] = plan match {
+    case p: Project => statedRows(p.child)
+    case lr: org.apache.spark.sql.execution.LogicalRDD => Bridge.statedRowCount(lr)
+    case _ => None
   }
 
   /** The level loop on driver-held state: every level's vertices
@@ -174,12 +193,8 @@ object Traversals {
   private def newVertices(found: Array[Long], visited: Array[Long]): Array[Long] =
     found.distinct.filter(java.util.Arrays.binarySearch(visited, _) < 0).sorted
 
-  /** `(vertex, level)` rows of per-level vertex arrays, in (level,
-    * vertex) order. */
-  private def levelRows(levels: Seq[Array[Long]]): Seq[(Long, Int)] =
-    levels.zipWithIndex.flatMap { case (vs, l) => vs.toSeq.map(_ -> l) }
-
-  /** [[levelRows]] as a table whose rows are built where they are read:
+  /** The `(vertex, level)` rows of per-level vertex arrays, in (level,
+    * vertex) order, as a table whose rows are built where they are read:
     * each level travels as at most one array slice per core, so up to
     * [[broadcastFrontierMax]] rows cost no row-by-row encoding on the
     * driver and no per-row serialization into the tasks (a local
@@ -494,9 +509,10 @@ object Traversals {
     * One bounded collect of at most `localMaxEdges + 1` edges picks the
     * path. When the whole edge list came back, the levels, the sort and
     * the numbering all run on the driver and the result is a local
-    * relation, so the call costs that one job and collecting the result
-    * none. Otherwise the edges are cached as they are and the levels
-    * are driver-held while at most [[broadcastFrontierMax]] vertices
+    * relation (its rows built as `InternalRow`s, with no encoder pass),
+    * so the call costs that one job and collecting the result none.
+    * Otherwise the edges are cached as they are and the levels are
+    * driver-held while at most [[broadcastFrontierMax]] vertices
     * are reached: one Spark job per level ([[heldLevels]]), then the
     * same driver-side sort and numbering into a local relation. A
     * traversal whose reached set passes the bound restarts on the
@@ -518,9 +534,18 @@ object Traversals {
     val spark = edges.sparkSession
     import spark.implicits._
     val maxLevels = 10000
-    def numbered(levels: Seq[Array[Long]]): DataFrame =
-      levelRows(levels).zipWithIndex.map { case ((v, l), i) => (i.toLong, l, v) }
-        .toDF("order", "level", "vertex")
+    def numbered(levels: Seq[Array[Long]]): DataFrame = {
+      val rows = new Array[InternalRow](levels.iterator.map(_.length).sum)
+      var i = 0
+      levels.zipWithIndex.foreach { case (vs, l) =>
+        vs.foreach { v => rows(i) = InternalRow(i.toLong, l, v); i += 1 }
+      }
+      Bridge.ofRows(spark, LocalRelation(Seq(
+        AttributeReference("order", LongType, nullable = false)(),
+        AttributeReference("level", IntegerType, nullable = false)(),
+        AttributeReference("vertex", LongType, nullable = false)()),
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)))
+    }
     driverHeldLevels(edges, Seq(start), maxLevels, localMaxEdges, maxHeld).map(numbered).getOrElse {
       val (lv, levelSizes) = levelLoop(edges, Seq(start).toDF("vertex"), Nil, maxLevels)
       val offsets = typedLit(levelSizes.indices.zip(levelSizes.scanLeft(0L)(_ + _)).toMap)

@@ -63,15 +63,34 @@ private[graft] final class SessionMemo {
     b.result()
   }
 
-  private def release(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    Traversals.dropCheckpoint(df, keep = liveBlockIds())
+  private def release(df: DataFrame, blocking: Boolean = false): Unit = {
+    df.unpersist(blocking)
+    Traversals.dropCheckpoint(df, keep = liveBlockIds(), blocking)
+  }
+
+  private def canonical(dir: String) = new java.io.File(dir).getCanonicalPath
+
+  /** Removes the entries of (session `s`, canonical `dir`, `tag`) whose
+    * fingerprint `drop` accepts, and returns them. */
+  private def removeEntries(s: SparkSession, dir: String, tag: String)(
+      drop: Long => Boolean): List[DataFrame] = {
+    val gone = List.newBuilder[DataFrame]
+    val it = map.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val k = e.getKey
+      if ((k._1 eq s) && k._2 == dir && k._3 == tag && drop(k._4)) {
+        gone += e.getValue
+        it.remove()
+      }
+    }
+    gone.result()
   }
 
   def apply(s: SparkSession, dir: String, tag: String, fingerprint: Long)
            (build: => DataFrame): DataFrame = {
     map.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, new java.io.File(dir).getCanonicalPath, tag, fingerprint)
+    val key = (s, canonical(dir), tag, fingerprint)
     val hit = map.get(key)
     if (hit ne null) hit
     else {
@@ -79,28 +98,29 @@ private[graft] final class SessionMemo {
       val prev = map.putIfAbsent(key, built)
       if (prev ne null) { release(built); prev }
       else {
-        val stale = List.newBuilder[DataFrame]
-        val it = map.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          val k = e.getKey
-          if ((k._1 eq s) && k._2 == key._2 && k._3 == tag &&
-              k._4 != fingerprint) {
-            stale += e.getValue
-            it.remove()
-          }
-        }
-        stale.result().foreach(release)
+        removeEntries(s, key._2, tag)(_ != fingerprint).foreach(release(_))
         built
       }
     }
   }
 
-  /** Test hook: number of live entries for one (session, dir, tag). */
-  private[graft] def entryCount(s: SparkSession, dir: String, tag: String): Int = {
-    val canon = new java.io.File(dir).getCanonicalPath
-    var n = 0
-    map.keySet.forEach(k => if ((k._1 eq s) && k._2 == canon && k._3 == tag) n += 1)
-    n
+  /** Drops every entry of (session `s`, `dir`, `tag`), whatever its
+    * fingerprint, with its blocks (those another live entry's plan
+    * reads stay). The drop is blocking: once this returns, a DataFrame
+    * over a released checkpoint fails instead of reading its rows. For
+    * a writer that replaces the data behind `dir`. */
+  def release(s: SparkSession, dir: String, tag: String): Unit =
+    removeEntries(s, canonical(dir), tag)(_ => true).foreach(release(_, blocking = true))
+
+  /** The live entries of (session `s`, `dir`, `tag`). */
+  def entries(s: SparkSession, dir: String, tag: String): List[DataFrame] = {
+    val canon = canonical(dir)
+    val b = List.newBuilder[DataFrame]
+    map.forEach((k, df) => if ((k._1 eq s) && k._2 == canon && k._3 == tag) b += df)
+    b.result()
   }
+
+  /** Test hook: number of live entries for one (session, dir, tag). */
+  private[graft] def entryCount(s: SparkSession, dir: String, tag: String): Int =
+    entries(s, dir, tag).size
 }

@@ -100,9 +100,11 @@ private[sources] class MatrixTable(path: String)
   * edges (bounded by the reference contract n <= 100 — a guard trips
   * at `maxBufferedEdges` with a scale-pointing error) and ships them
   * as a `WriterCommitMessage`; nothing touches the filesystem until
-  * the driver's `commit`, which assembles the dense matrix and
-  * replaces the file ATOMICALLY (temp + ATOMIC_MOVE, the GraphCatalog
-  * pointer pattern) — a failed job leaves the previous file intact.
+  * the driver's `commit`, which refuses an `n` whose n * n cells pass
+  * the same `maxBufferedEdges` before it renders anything, then
+  * assembles the dense matrix and replaces the file ATOMICALLY (temp +
+  * ATOMIC_MOVE, the GraphCatalog pointer pattern) — a failed job
+  * leaves the previous file intact.
   * `mode("overwrite")` maps to `SupportsTruncate`; `mode("append")`
   * ORs the incoming cells into the existing matrix (reference op=2
   * modify semantics: adding an edge twice is idempotent). */
@@ -125,9 +127,12 @@ private[sources] class MatrixWrite(path: String, info: LogicalWriteInfo,
         s.fields.forall(f => f.dataType == LongType || f.dataType == IntegerType),
       s"graft-matrix write expects two integral columns (src, dst), got ${s.simpleString}")
     MatrixWriterFactory(s.fields(0).dataType == LongType,
-      s.fields(1).dataType == LongType,
-      info.options().getLong("maxBufferedEdges", 1L << 20))
+      s.fields(1).dataType == LongType, maxBufferedEdges)
   }
+
+  /** The edges one task may buffer, and the cells (n * n) one rendered
+    * matrix may hold. */
+  private def maxBufferedEdges = info.options().getLong("maxBufferedEdges", 1L << 20)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val incoming = messages.iterator.flatMap {
@@ -142,21 +147,28 @@ private[sources] class MatrixWrite(path: String, info: LogicalWriteInfo,
     // empty graph's n = 0 included); otherwise size to the data. The
     // existing file's n is respected on append.
     val opts = info.options()
-    val optN = if (opts.containsKey("n")) Some(opts.getInt("n", 0)) else None
+    val optN = if (opts.containsKey("n")) Some(opts.getLong("n", 0L)) else None
     require(optN.forall(_ >= 0),
       s"graft-matrix write: the n option must be non-negative, got ${optN.get}")
     require(optN.nonEmpty || existing.nonEmpty || cells.nonEmpty,
       "graft-matrix write: empty input and no explicit n option")
     val maxId = (cells.iterator.flatMap(c => Iterator(c._1, c._2)) ++ Iterator(-1L)).max
-    val n = math.max(optN.getOrElse((maxId + 1).toInt), existing.fold(0)(_.n))
+    val sized = optN.getOrElse(if (maxId == Long.MaxValue) maxId else maxId + 1)
+    val n = math.max(sized, existing.fold(0L)(_.n.toLong))
+    // the dense rendering holds n * n cells on the driver: refuse before
+    // allocating, on the same envelope as the per-task edge buffer
+    if (n > 0 && n > maxBufferedEdges / n)
+      throw new IllegalArgumentException(s"graft-matrix write to $path: n = $n " +
+        s"needs n * n cells, over maxBufferedEdges = $maxBufferedEdges — the dense " +
+        "interop format is for reference-contract graphs (n <= 100)")
     cells.find { case (s, d) => (s min d) < 0 || (s max d) >= n }.foreach { case (s, d) =>
       throw new IllegalArgumentException(s"graft-matrix write: edge ($s,$d) outside " +
         s"[0,$n) — negative ids, or pass a larger n option")
     }
     val sb = new StringBuilder
     sb.append(n).append('\n')
-    (0 until n).foreach { i =>
-      sb.append((0 until n).map(j =>
+    (0 until n.toInt).foreach { i =>
+      sb.append((0 until n.toInt).map(j =>
         if (cells((i.toLong, j.toLong))) "1" else "0").mkString(" ")).append('\n')
     }
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp-" +

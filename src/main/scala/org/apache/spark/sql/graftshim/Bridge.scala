@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.RDDBlockId
 
 /** Minimal `private[sql]` bridge (the standard extension-library
@@ -38,7 +41,7 @@ object Bridge {
     * LogicalRDD-backed. */
   def resetCheckpointStats(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: LogicalRDD =>
         val actual = SparkEnv.get.blockManager.master.getStorageStatus.iterator
           .flatMap(_.rddBlocks).collect {
             case (RDDBlockId(id, _), s) if id == lr.rdd.id => s.memSize + s.diskSize
@@ -48,14 +51,41 @@ object Bridge {
         // under-estimate would flip the planner into BROADCASTING an
         // arbitrarily large state table, which is far worse than one
         // round of a compounding (always upward) estimate
-        if (actual <= 0) df
-        else ofRows(df.sparkSession, new org.apache.spark.sql.execution.LogicalRDD(
-          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          lr.isStreaming, lr.stream)(
-          df.sparkSession.asInstanceOf[classic.SparkSession],
-          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
-            sizeInBytes = BigInt(actual))),
-          None))
+        if (actual <= 0) df else restated(df, lr, Statistics(sizeInBytes = BigInt(actual)))
       case _ => df
     }
+
+  /** The RDDs of the checkpoints [[withRowCount]] restated, held
+    * weakly. */
+  private val counted = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[RDD[_], java.lang.Boolean]()))
+
+  /** A `localCheckpoint` whose plan statistics carry `rows` as its exact
+    * row count (and a size of `rows` rows of its schema), so a bounded
+    * collect over it can refuse without a job. `rows` must be the
+    * checkpoint's true row count. No-op on frames that are not
+    * LogicalRDD-backed. */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        counted.add(lr.rdd)
+        restated(df, lr, Statistics(
+          sizeInBytes = EstimationUtils.getSizePerRow(lr.output) * rows max 1,
+          rowCount = Some(BigInt(rows))))
+      case _ => df
+    }
+
+  /** The row count [[withRowCount]] stated for `lr`; None for any other
+    * checkpoint, whose statistics may hold an estimate (Spark's own
+    * `localCheckpoint` copies the optimized plan's, and a limit, say,
+    * states its limit however few rows it keeps). */
+  def statedRowCount(lr: LogicalRDD): Option[BigInt] =
+    if (counted.contains(lr.rdd)) lr.stats.rowCount else None
+
+  /** `lr`, the plan of `df`, over the same RDD with `stats`. */
+  private def restated(df: DataFrame, lr: LogicalRDD, stats: Statistics): DataFrame =
+    ofRows(df.sparkSession, new LogicalRDD(
+      lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
+      lr.isStreaming, lr.stream)(
+      df.sparkSession.asInstanceOf[classic.SparkSession], Some(stats), None))
 }

@@ -238,4 +238,23 @@ class MatrixSourceV2Spec extends SparkSpec {
       assert(after === before)
     } finally graft.tools.TestCleanup.deleteRecursively(dir)
   }
+  test("v2 write: an n whose n * n cells pass maxBufferedEdges refuses before rendering, file intact") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-mxw")
+    try {
+      val p = dir.resolve("g.txt").toString
+      edgesDf((0L, 1L)).write.format("graft-matrix").mode("overwrite").save(p)
+      val before = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq
+      def refused(write: => Unit): Unit = {
+        val e = intercept[Exception](write)
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ ne null).toSeq
+        assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(p) && c.getMessage.contains("maxBufferedEdges")), chain)
+        assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq === before)
+      }
+      // sized from the data: one edge makes n = 50001
+      refused(edgesDf((50000L, 0L)).write.format("graft-matrix").mode("overwrite").save(p))
+      refused(edgesDf((0L, 1L)).write.format("graft-matrix")
+        .mode("overwrite").option("n", 1 << 16).save(p))
+    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+  }
 }

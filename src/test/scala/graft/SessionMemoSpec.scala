@@ -16,6 +16,13 @@ class SessionMemoSpec extends SparkSpec {
     (1 to n).toDF("v").localCheckpoint(true)
   }
 
+  private def blockLive(ids: Set[Int]): Boolean = {
+    val bm = org.apache.spark.SparkEnv.get.blockManager.master
+    ids.exists(id => bm.getMatchingBlockIds(
+      { case RDDBlockId(rid, _) => ids.contains(rid); case _ => false },
+      askStorageEndpoints = true).nonEmpty)
+  }
+
   test("a build may consult the same memo for its dependency " +
        "(the bipartiteEo -> bipartiteEdges shape)") {
     val memo = new SessionMemo
@@ -48,12 +55,6 @@ class SessionMemoSpec extends SparkSpec {
     val v1 = memo(spark, "/tmp", "refresh", 1L) { df(10) }
     val v1Blocks = Traversals.checkpointRddIds(v1)
     assert(v1Blocks.nonEmpty)
-    def blockLive(ids: Set[Int]): Boolean = {
-      val bm = org.apache.spark.SparkEnv.get.blockManager.master
-      ids.exists(id => bm.getMatchingBlockIds(
-        { case RDDBlockId(rid, _) => ids.contains(rid); case _ => false },
-        askStorageEndpoints = true).nonEmpty)
-    }
     assert(blockLive(v1Blocks), "precondition: v1's checkpoint is stored")
     val v2 = memo(spark, "/tmp", "refresh", 2L) { df(20) }
     assert(v2.count() === 20)
@@ -65,6 +66,28 @@ class SessionMemoSpec extends SparkSpec {
       Thread.sleep(50)
     assert(!blockLive(v1Blocks),
       "superseded entry's localCheckpoint blocks must be unpersisted")
+  }
+
+  test("release(session, dir, tag) drops every entry of that (dir, tag) and its blocks, " +
+       "and nothing else") {
+    val memo = new SessionMemo
+    val released = memo(spark, "/tmp/rel_a", "t", 1L) { df(3) }
+    val otherTag = memo(spark, "/tmp/rel_a", "u", 1L) { df(5) }
+    val otherDir = memo(spark, "/tmp/rel_b", "t", 1L) { df(6) }
+    val gone = Traversals.checkpointRddIds(released)
+    val kept = Traversals.checkpointRddIds(otherTag) ++ Traversals.checkpointRddIds(otherDir)
+    memo.release(spark, "/tmp/rel_a", "t")
+    assert(memo.entryCount(spark, "/tmp/rel_a", "t") === 0)
+    assert(!blockLive(gone), "release is blocking: the blocks are gone when it returns")
+    intercept[Exception] { released.count() }
+    assert(memo.entryCount(spark, "/tmp/rel_a", "u") === 1)
+    assert(memo.entryCount(spark, "/tmp/rel_b", "t") === 1)
+    assert(kept.forall(id => blockLive(Set(id))))
+    assert(otherTag.count() === 5 && otherDir.count() === 6)
+    // a released key builds afresh
+    var builds = 0
+    assert(memo(spark, "/tmp/rel_a", "t", 1L) { builds += 1; df(7) }.count() === 7)
+    assert(builds === 1)
   }
 
   test("a refresh keeps blocks another live entry's plan still reads") {

@@ -560,6 +560,152 @@ class TraversalSpec extends SparkSpec {
     assert(cat.loadBucketed("gb").count() === 5, "dedup compaction drops the exact duplicate")
   }
 
+  /** A generated graph past both local bounds: 70 000 edges (`extra`
+    * more for a second version), 1000 sources with 70 out-edges each
+    * into 1200 vertices, so 200 vertices are sinks. */
+  def pastBounds(extra: Int = 0): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    spark.range(70000L + extra).select((col("id") / 70).cast("long").as("src"),
+      ((col("id") * 7919L + 13L) % 1200L).as("dst"))
+  }
+
+  /** `df`'s plan is a staged checkpoint stating `rows` rows. */
+  def staged(df: DataFrame, rows: Long): Boolean = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.stats.rowCount.contains(BigInt(rows))
+    case _ => false
+  }
+
+  /** `df`'s plan is the plain Parquet read. */
+  def plainRead(df: DataFrame): Boolean = df.queryExecution.analyzed
+    .isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]
+
+  /** A catalog with `pastBounds()` written as "big", its write's
+    * observed count delivered. */
+  def stagedCatalog(prefix: String): (GraphCatalog, String) = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    val cat = new GraphCatalog(spark, tmp)
+    cat.addGraph("big", pastBounds())
+    ListenerBusDrain(spark.sparkContext)
+    (cat, tmp)
+  }
+
+  test("staged catalog read: one job per level, no bounded-collect job, rows as the plain read") {
+    val (cat, tmp) = stagedCatalog("graft-stage")
+    def bfsRows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1).toSeq
+    val plain = spark.read.parquet(s"$tmp/big/edges")
+    val wantBfs = bfsRows(Traversals.bfs(plain, 0L))
+    val wantDfs = Traversals.dfsLeaves(plain, 0L).collect().toSeq
+    val levels = wantBfs.map(_._2).max + 1
+    assert(levels >= 2 && wantDfs.nonEmpty)
+    val (first, loadJobs) = jobsOf(cat.load("big"))
+    assert(loadJobs === 0 && staged(first, 70000L), first.queryExecution.analyzed)
+    // the first traversal fills the stage with its first level's scan
+    assert(bfsRows(Traversals.bfs(first, 0L)) === wantBfs)
+    def pins(): Unit = {
+      val (bfs, bfsJobs) = jobsOf(bfsRows(Traversals.bfs(cat.load("big"), 0L)))
+      val (dfs, dfsJobs) = jobsOf(Traversals.dfsLeaves(cat.load("big"), 0L).collect().toSeq)
+      assert(bfs === wantBfs && dfs === wantDfs)
+      // every level scans the edges once, the last finding nothing new
+      assert((bfsJobs, dfsJobs) === ((levels, levels)))
+      assert(jobsOf(cat.bfs("big", 0L).collect())._2 === levels)
+    }
+    pins()
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      pins()
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("staged catalog read: modifyGraph and addEdges release the stage; a released stage throws") {
+    import spark.implicits._
+    val (cat, _) = stagedCatalog("graft-release")
+    val old = cat.load("big")
+    assert(staged(old, 70000L) && old.count() === 70000L)
+    cat.modifyGraph("big", pastBounds(extra = 5))
+    // its blocks are gone and its lineage was truncated: no old rows
+    intercept[Exception] { old.count() }
+    ListenerBusDrain(spark.sparkContext)
+    val next = cat.load("big")
+    assert(staged(next, 70005L) && next.count() === 70005L)
+    cat.addEdges("big", Seq((5000L, 5001L), (5001L, 5002L)).toDF("src", "dst"))
+    intercept[Exception] { next.count() }
+    // an appended graph has no observed count: the plain read
+    val appended = cat.load("big")
+    assert(plainRead(appended) && appended.count() === 70007L)
+    assert(Traversals.bfs(appended, 5000L).collect().map(_.getLong(2)).sorted.toSeq ===
+      Seq(5000L, 5001L, 5002L))
+  }
+
+  test("staged catalog read: a write whose input reads the filled stage pins it first") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val (cat, _) = stagedCatalog("graft-selfappend")
+    Traversals.bfs(cat.load("big"), 0L).collect() // fills the stage
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    cat.addEdges("big", cat.load("big").filter(col("src") < 2L)
+      .select((col("src") + 5000L).as("src"), col("dst")))
+    // the stage is released and the pin dropped
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted - 1)
+    assert(cat.load("big").count() === 70140L)
+    assert(cat.load("big").filter(col("src") >= 5000L).count() === 140L)
+
+    val (cat2, _) = stagedCatalog("graft-selfmodify")
+    Traversals.dfsLeaves(cat2.load("big"), 0L).collect() // fills the stage
+    cat2.modifyGraph("big", cat2.load("big").union(Seq((5000L, 5001L)).toDF("src", "dst")))
+    ListenerBusDrain(spark.sparkContext)
+    val next = cat2.load("big")
+    assert(staged(next, 70001L) && next.count() === 70001L)
+    assert(next.filter(col("src") === 5000L).count() === 1L)
+  }
+
+  test("a checkpoint's estimated row count does not refuse the local path") {
+    import org.apache.spark.sql.functions.col
+    // under cost-based estimation a limit states its limit as its row
+    // count, however few rows it keeps, and a checkpoint copies it
+    val prev = spark.conf.get("spark.sql.cbo.enabled")
+    val edges = try {
+      spark.conf.set("spark.sql.cbo.enabled", "true")
+      spark.range(0L, 20000L).filter(col("id") % 1000L === 0L)
+        .select(col("id").as("src"), (col("id") + 1000L).as("dst"))
+        .limit(20000).repartition(1).localCheckpoint()
+    } finally spark.conf.set("spark.sql.cbo.enabled", prev)
+    assert(edges.queryExecution.analyzed.stats.rowCount
+      .exists(_ > Traversals.bfsLocalMaxEdges))
+    val (got, jobs) = jobsOf(Traversals.bfs(edges, 0L).collect())
+    assert(got.map(_.getLong(2)).toSeq === (0L to 20000L by 1000L))
+    assert(jobs === 1, "the bounded collect, then local levels")
+  }
+
+  test("staged catalog read: an overwrite by a second catalog on the same root is read plainly") {
+    import spark.implicits._
+    val (cat, tmp) = stagedCatalog("graft-foreign")
+    assert(staged(cat.load("big"), 70000L))
+    new GraphCatalog(spark, tmp).modifyGraph("big", Seq((0L, 1L), (1L, 2L)).toDF("src", "dst"))
+    // the listing no longer matches the one this catalog's write left
+    val now = cat.load("big")
+    assert(plainRead(now) && now.count() === 2L)
+    assert(cat.bfs("big", 0L).collect().map(_.getLong(2)).toSeq === Seq(0L, 1L, 2L))
+  }
+
+  test("a graph at the local bound loads as a plain Parquet read with no job") {
+    import org.apache.spark.sql.functions.col
+    val tmp = java.nio.file.Files.createTempDirectory("graft-atbound").toString
+    val cat = new GraphCatalog(spark, tmp)
+    // one partition, so one Parquet file and a one-job bounded collect
+    cat.addGraph("g", spark.range(0L, Traversals.bfsLocalMaxEdges, 1L, 1)
+      .select(col("id").as("src"), (col("id") + 1).as("dst")))
+    ListenerBusDrain(spark.sparkContext)
+    val (g, jobs) = jobsOf(cat.load("g"))
+    assert(jobs === 0 && plainRead(g))
+    assert(jobsOf(cat.bfs("g", 0L).collect())._2 === 1, "the bounded collect, then local levels")
+    // an overwrite whose input reads the files it replaces is pinned first
+    cat.modifyGraph("g", cat.load("g").union(spark.range(1).select(col("id").as("src"),
+      col("id").as("dst"))))
+    assert(cat.load("g").count() === Traversals.bfsLocalMaxEdges + 1)
+  }
+
   test("versioned catalog: immutable versions, atomic latest pointer, time travel, expiry") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-versions").toString
