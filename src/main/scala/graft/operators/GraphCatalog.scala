@@ -1,9 +1,8 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -48,7 +47,7 @@ import graft.queries.SessionMemo
   * files, whether or not the graph is read again, and a
   * [[loadPinned]] of a staged graph holds a second full copy. Graphs
   * at or below the bound, graphs this catalog did not write (or whose
-  * count is not in yet), appended graphs and the bucketed and
+  * count the write did not deliver), appended graphs and the bucketed and
   * versioned layouts keep the plain Parquet read. The
   * consistency model is unchanged: every write to a graph's path
   * releases its stage before it writes, and a listing that no longer
@@ -87,7 +86,7 @@ final class GraphCatalog(spark: SparkSession, root: String) {
 
   /** Per graph, the fingerprint of the listing its last [[addGraph]]
     * left and the edge count observed on that write. */
-  private val written = new ConcurrentHashMap[String, (Long, Observation)]()
+  private val written = new ConcurrentHashMap[String, (Long, Long)]()
 
   /** Runs a write of `edges` to `name`'s edge path after forgetting
     * its observed count and releasing its stage. When `edges` reads
@@ -121,33 +120,25 @@ final class GraphCatalog(spark: SparkSession, root: String) {
       ids.nonEmpty && plan.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.exists(lineage)
   }
 
-  /** A fingerprint of the data files of a listing: their paths, sizes
-    * and modification times (Spark's file index skips names starting
-    * with `_` or `.`, and so does this). */
-  private def fingerprint(files: Seq[FileStatus]): Long = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    files.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
-      .sorted.foreach(l => md.update(l.getBytes(StandardCharsets.UTF_8)))
-    java.nio.ByteBuffer.wrap(md.digest()).getLong
-  }
-
   /** The fingerprint of the files a plain read lists. */
   private def listed(read: DataFrame): Option[Long] =
     read.queryExecution.analyzed.collectFirst {
       case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
-    }.collect { case index: PartitioningAwareFileIndex => fingerprint(index.allFiles()) }
+    }.collect { case index: PartitioningAwareFileIndex => SessionMemo.fingerprint(index.allFiles()) }
 
   /** Reference op=1 (Add graph). Create-or-replace, atomic per graph.
-    * The write observes its edge count for [[load]]'s staging. */
+    * The write observes its edge count for [[load]]'s staging, and
+    * takes it once the write returns, waiting at most Spark's 100 ms
+    * for the listener bus to deliver it; a count still missing leaves
+    * the graph to the plain read. */
   def addGraph(name: String, edges: DataFrame): Unit = rewrite(name, edges) { input =>
     val rows = Observation()
     asEdges(input).observe(rows, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(edgePath(name))
-    val listing = fs.listStatus(new Path(edgePath(name))).toSeq
-    written.put(name, (fingerprint(listing), rows))
+    Bridge.observedRow(rows).foreach { r =>
+      val listing = fs.listStatus(new Path(edgePath(name))).toSeq
+      written.put(name, (SessionMemo.fingerprint(listing), r.getLong(0)))
+    }
   }
 
   /** Reference op=2 (Modify graph) — behaviourally identical to add
@@ -164,18 +155,16 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * returned from the stage by later ones (see the class doc): a
     * checkpoint that the first job over it fills, stating its exact
     * row count, and that stays in memory until the graph's next write.
-    * The count is read without waiting: until the write's
-    * observation is in, and for any listing other than the one the
-    * write left, the load is the plain Parquet read. */
+    * For a graph without a count and for any listing other than the
+    * one the write left, the load is the plain Parquet read. */
   def load(name: String): DataFrame = {
     validate(name)
     val read = readEdges(edgePath(name))
     val entry = written.get(name)
-    val rows = Option(entry).flatMap(_._2.future.value).flatMap(_.toOption).map(_.getLong(0))
-    if (!rows.exists(_ > Traversals.bfsLocalMaxEdges)) read
+    if (entry == null || entry._2 <= Traversals.bfsLocalMaxEdges) read
     else if (listed(read).contains(entry._1))
       stages(spark, edgePath(name), stageTag, entry._1) {
-        Bridge.withRowCount(read.localCheckpoint(eager = false), rows.get)
+        Bridge.withRowCount(read.localCheckpoint(eager = false), entry._2)
       }
     else {
       // another writer replaced the files: the count and any stage

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Traversals
+import SessionMemo.shared
 import Tables.t
 
 /** The reference's graph query surface (BFS levels/order, DFS-tree
@@ -39,11 +40,9 @@ object GraphQueries {
     * materialized edge view; at gate scale it cuts the repeated
     * scan+distinct (~0.3-0.5 s each) from every family member after
     * the first. */
-  private[graft] val graphMemo = new SessionMemo
-
   private def modMemoized(s: SparkSession, d: String, tag: String)
                          (build: => DataFrame): DataFrame =
-    graphMemo(s, d, s"mod_$tag", Tables.fingerprint(d, "orders"))(build)
+    shared(s, d, s"mod_$tag", Tables.fingerprint(s, d, "orders"))(build)
 
   /** Canonical undirected (a < b, deduped, long, pinned) modulus-m
     * graph over orders — [[graft.operators.GraphAlgos.canonicalUndirected]]
@@ -90,7 +89,7 @@ object GraphQueries {
     * the memo pins it once per fixture generation (keyed on the
     * lineitem fingerprint, unlike the orders-keyed modulus memo). */
   private def bipartiteEdges(s: SparkSession, d: String): DataFrame =
-    graphMemo(s, d, "bip_edges", Tables.fingerprint(d, "lineitem"))(
+    shared(s, d, "bip_edges", Tables.fingerprint(s, d, "lineitem"))(
       mirror(t(s, d, "lineitem")
         .select((col("l_orderkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()).localCheckpoint(true))
@@ -99,11 +98,11 @@ object GraphQueries {
     * bipartite graph ([[Traversals.pageRankEdgeTable]] artifact,
     * memoized like the edge tables above; persisted blocks die with
     * the session). The edge-table dependency is resolved BEFORE the
-    * memo insert (its own `graphMemo` call), which SessionMemo makes
+    * memo insert (its own `shared` memo call), which SessionMemo makes
     * safe — the build runs outside any map mapping function. */
   private def bipartiteEo(s: SparkSession, d: String): DataFrame = {
     val edges = bipartiteEdges(s, d)
-    graphMemo(s, d, "bip_eo", Tables.fingerprint(d, "lineitem"))(
+    shared(s, d, "bip_eo", Tables.fingerprint(s, d, "lineitem"))(
       Traversals.pageRankEdgeTable(edges))
   }
 
@@ -416,8 +415,8 @@ object GraphQueries {
       // orientation, distinct by construction), so reps pay the
       // traversal + classification, not the lineitem scan + distinct
       // + union + repartition re-derivation. Edge set identical.
-      val ep = graphMemo(s, d, "dfs_classes_epart",
-          Tables.fingerprint(d, "lineitem")) {
+      val ep = shared(s, d, "dfs_classes_epart",
+          Tables.fingerprint(s, d, "lineitem")) {
         val p = bipartiteEdges(s, d).where(col("src") % 2 === 0)
           .select(col("src").cast("long"), col("dst").cast("long"))
         val edges = p.union(
@@ -453,8 +452,8 @@ object GraphQueries {
       // operator this entry exists to measure. Same memo contract as
       // the modulus edge tables (orders-fingerprint keyed, refresh-
       // safe, session-reaped).
-      val live = graphMemo(s, d, "reduce_live150",
-          Tables.fingerprint(d, "orders")) {
+      val live = shared(s, d, "reduce_live150",
+          Tables.fingerprint(s, d, "orders")) {
         val ks = Tables.t(s, d, "orders")
           .select((col("o_orderkey") % 150).cast("long").as("k")).distinct()
         val chain = ks.where(col("k") < 149)

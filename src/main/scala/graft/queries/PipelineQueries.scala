@@ -6,6 +6,7 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Dedup, Similarity}
 import graft.multimodal.Multimodal
+import SessionMemo.{deleteRecursively, shared}
 import Tables.t
 
 /** Training-data pipeline operators over the `documents` and
@@ -39,13 +40,9 @@ object PipelineQueries {
     * context's checkpoint blocks) recomputes instead of misreading.
     * Size: one (doc_id, 16×8-char array) row per doc per corpus —
     * negligible next to the corpus itself. */
-  // dead-session sweep, fixture-fingerprint refresh, re-entrant-safe
-  // builds, and stale-entry block release all live in SessionMemo
-  private[graft] val docMemo = new SessionMemo
-
   private def docSignatures(s: SparkSession, d: String,
                             k: Int = 16, shingleN: Int = 3): DataFrame =
-    docMemo(s, d, s"sig_k${k}_n$shingleN", Tables.fingerprint(d, "documents"))(
+    shared(s, d, s"sig_k${k}_n$shingleN", Tables.fingerprint(s, d, "documents"))(
       Dedup.minhashSignatures(t(s, d, "documents"), k, shingleN)
         .localCheckpoint(true))
 
@@ -74,12 +71,12 @@ object PipelineQueries {
     * table instead of re-running the corpus-wide aggregation. */
   private def memoTable(s: SparkSession, d: String, tag: String)
                        (build: => DataFrame): DataFrame =
-    docMemo(s, d, tag, Tables.fingerprint(d, "documents"))(
+    shared(s, d, tag, Tables.fingerprint(s, d, "documents"))(
       build.localCheckpoint(true))
 
   /** The corpus band index ([[Dedup.corpusBandIndex]] over the
     * doc_id % 5 ≠ 0 "existing corpus") persisted as a PARQUET-backed
-    * catalog table (Staging lifecycle), NOT a checkpoint memo — for a
+    * catalog table ([[stagedTable]]), NOT a checkpoint memo — for a
     * plan-statistics reason, found diagnosing the r14 q_dedup_
     * incremental floor drift: `localCheckpoint` snapshots the
     * PRE-materialization size estimate into the LogicalRDD's stats,
@@ -100,35 +97,27 @@ object PipelineQueries {
       Dedup.corpusBandIndex(
         docSignatures(s, d).where(col("doc_id") % 5 =!= 0)))
 
-  /** Stages `build`'s output as a parquet-backed catalog table
-    * (Staging lifecycle — built once per (session, dataset, tag),
-    * swept on session stop). Use this instead of [[memoTable]] when
-    * DOWNSTREAM PLANS matter: a checkpoint memo's LogicalRDD carries
-    * the pre-materialization size ESTIMATE (a join in the build plan
-    * → a multi-GB guess for a ~1 MB artifact — see [[corpusBandIdx]]),
-    * while a file-backed scan reports real bytes, so consumers get
-    * static broadcast joins and skip runtime-filter subqueries.
-    * The source-fixture FINGERPRINT is folded into the staging key
-    * (r15 review): [[memoTable]] invalidates when the fixture under
-    * the same path is regenerated mid-session, and the staged
-    * artifacts must keep that contract — a stale corpus index probed
-    * by fresh batch signatures would silently diverge from the
-    * oracle. A staging site whose artifact derives from another table
-    * names it via `fpTable` (r15 advice — a documents-hardcoded key
-    * would silently skip invalidation for an embeddings-derived
-    * artifact); every CURRENT caller is documents-derived, so all use
-    * the default — the q_ivm_join base view, which depends on TWO
-    * tables, folds both fingerprints into its tag by hand instead. */
+  /** Stages `build`'s output as a parquet-backed catalog table in
+    * [[SessionMemo]] (built once per (session, dataset, tag, source
+    * fingerprint), released on refresh, swept on session stop). Use
+    * this instead of [[memoTable]] when DOWNSTREAM PLANS matter: a
+    * checkpoint memo's LogicalRDD carries the pre-materialization size
+    * ESTIMATE (a join in the build plan → a multi-GB guess for a ~1 MB
+    * artifact — see [[corpusBandIdx]]), while a file-backed scan
+    * reports real bytes, so consumers get static broadcast joins and
+    * skip runtime-filter subqueries. The key carries the fingerprint
+    * of `fpTable`, the table the artifact derives from (r15 review: a
+    * stale corpus index probed by fresh batch signatures would
+    * silently diverge from the oracle); every current caller is
+    * documents-derived. */
   private def stagedTable(s: SparkSession, d: String, tag: String,
                           fpTable: String = "documents")
-                         (build: => DataFrame): DataFrame = {
-    val fp = java.lang.Long.toHexString(Tables.fingerprint(d, fpTable))
-    Staging.bucketedTable(s, d, s"${tag}_$fp") { (name, dir) =>
+                         (build: => DataFrame): DataFrame =
+    shared.table(s, d, tag, Tables.fingerprint(s, d, fpTable)) { (name, dir) =>
       build.write.format("parquet").mode("overwrite")
         .option("path", dir.resolve("t").toString)
         .saveAsTable(name)
     }
-  }
 
   /** LSH-bucketed embedding near-dup pairs (i, j, cos >= minCos):
     * candidates from random-hyperplane buckets ([[Similarity.lshBuckets]],
@@ -156,7 +145,7 @@ object PipelineQueries {
           java.nio.file.Files.move(f, streamDir.resolve(s"$tag.parquet"))
       }
     } finally ls.close()
-    Staging.deleteRecursively(stage)
+    deleteRecursively(stage)
   }
 
   /** The IVF cell assignment (vec_id, v, cid; centroids = vec_ids
@@ -167,10 +156,10 @@ object PipelineQueries {
     * measured first: Spark's planner auto-disables bucketed scans for
     * filter-only probes — "Bucketed: false (disabled by query
     * planner)" — so bucket pruning never fired; directory partitioning
-    * prunes in the FileIndex regardless of the plan shape.) Staging
-    * lifecycle in [[Staging.bucketedTable]]. */
+    * prunes in the FileIndex regardless of the plan shape.) Staged
+    * as a [[SessionMemo.table]] keyed on the embeddings fingerprint. */
   private def ivfIndex(s: SparkSession, d: String): DataFrame =
-    Staging.bucketedTable(s, d, "ivf_index") { (name, dir) =>
+    shared.table(s, d, "ivf_index", Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       val cents = e.where(col("vec_id").between(1, 8))
@@ -363,9 +352,9 @@ object PipelineQueries {
     * recall must come from a different graph family (true kNN-descent
     * refinement), which is the documented stop. */
   private[graft] def nswGraph(s: SparkSession, d: String, k: Int,
-      deg: Int = 12, links: Int = 4): DataFrame = {
-    val fp = java.lang.Long.toHexString(Tables.fingerprint(d, "embeddings"))
-    Staging.bucketedTable(s, d, s"nsw_graph_${k}_${deg}_${links}_$fp") { (name, dir) =>
+      deg: Int = 12, links: Int = 4): DataFrame =
+    shared.table(s, d, s"nsw_graph_${k}_${deg}_${links}",
+        Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
       graft.functions.expressions.GraftFunctions.register(s)
       val e = t(s, d, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
@@ -401,7 +390,6 @@ object PipelineQueries {
         .write.format("parquet").mode("overwrite")
         .option("path", dir.resolve("g").toString).saveAsTable(name)
     }
-  }
 
   /** One job fetching the 2-HOP adjacency ball around `srcIds` over
     * the staged proximity graph: the out-edges of srcIds UNION the
@@ -542,9 +530,8 @@ object PipelineQueries {
     * before any row is read (the ivf_indexed layout, finer-grained:
     * ~500-row cells instead of 8 corpus-sized ones, which is what
     * gives [[hybridDenseTop20]]'s bounds something to prune). */
-  private def hybridDenseIdx(s: SparkSession, d: String): DataFrame = {
-    val fp = java.lang.Long.toHexString(Tables.fingerprint(d, "embeddings"))
-    Staging.bucketedTable(s, d, s"hyb_dense_$fp") { (name, dir) =>
+  private def hybridDenseIdx(s: SparkSession, d: String): DataFrame =
+    shared.table(s, d, "hyb_dense", Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
       graft.functions.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val k = Similarity.autoCellCount(emb.count())
@@ -561,14 +548,12 @@ object PipelineQueries {
         .partitionBy("cid")
         .option("path", dir.resolve("t").toString).saveAsTable(name)
     }
-  }
 
   /** Per-cell pruning statistics for the exact bound-pruned dense
     * probe: centroid vector plus max member-to-centroid L2² (r²),
     * min/max member norm² — k rows, staged next to the index. */
-  private def hybridCellStats(s: SparkSession, d: String): DataFrame = {
-    val fp = java.lang.Long.toHexString(Tables.fingerprint(d, "embeddings"))
-    Staging.bucketedTable(s, d, s"hyb_stats_$fp") { (name, dir) =>
+  private def hybridCellStats(s: SparkSession, d: String): DataFrame =
+    shared.table(s, d, "hyb_stats", Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
       graft.functions.expressions.GraftFunctions.register(s)
       val idx = hybridDenseIdx(s, d)
       val k = Similarity.autoCellCount(t(s, d, "embeddings").count())
@@ -588,7 +573,6 @@ object PipelineQueries {
         .write.format("parquet").mode("overwrite")
         .option("path", dir.resolve("t").toString).saveAsTable(name)
     }
-  }
 
   /** EXACT dense top-20 via bound-pruned index probe — provably
     * identical to the scan-bound brute force, reading only the cells
@@ -1464,7 +1448,7 @@ object PipelineQueries {
         // detach from the temp dir (eager blocks) so cleanup can run
         s.read.parquet(out).orderBy("new_id", "corpus_id").localCheckpoint(true)
       } finally {
-        Staging.deleteRecursively(streamDir); Staging.deleteRecursively(outDir)
+        deleteRecursively(streamDir); deleteRecursively(outDir)
       }
     }),
     "q_stream_psi" -> ((s, d) => {
@@ -1511,7 +1495,7 @@ object PipelineQueries {
         try q.processAllAvailable() finally q.stop()
         s.read.parquet(cnts).groupBy("event_type", "b")
           .agg(sum(col("cnt")).as("nb")).localCheckpoint(true)
-      } finally Staging.deleteRecursively(streamDir)
+      } finally deleteRecursively(streamDir)
       try {
         val spine = evb.select("event_type").distinct()
           .select(col("event_type"), explode(sequence(lit(0L), lit(11L))).as("b"))
@@ -1536,7 +1520,7 @@ object PipelineQueries {
             round(sum(col("term")).cast("double"), 6).as("psi"))
           .orderBy("event_type")
           .localCheckpoint(true)
-      } finally Staging.deleteRecursively(outDir)
+      } finally deleteRecursively(outDir)
     }),
     "q_stream_ivf_upsert" -> ((s, d) => {
       // STREAMING ANN index maintenance (r13 VERDICT item 6): the
@@ -1559,7 +1543,8 @@ object PipelineQueries {
         .where(col("vec_id").between(1, 8))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val isArrival = (col("vec_id") % 10 === 0) && col("vec_id") > 8
-      val idx = Staging.bucketedTable(s, d, "ivf_index_upsert") { (name, dir) =>
+      val idx = shared.table(s, d, "ivf_index_upsert",
+          Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), toDouble(col("embedding")).as("v"))
         Similarity.assignCells(e.where(!isArrival), cents)
@@ -1582,7 +1567,7 @@ object PipelineQueries {
             }
           val q = stream.writeStream.foreachBatch(perBatch).start()
           try q.processAllAvailable() finally q.stop()
-        } finally Staging.deleteRecursively(streamDir)
+        } finally deleteRecursively(streamDir)
       }
       // probe = the ivf_indexed shape: 1-row cell lookup, then
       // literal-cid partition-pruned in-cell top-10
@@ -1613,7 +1598,8 @@ object PipelineQueries {
       // filter) + the 'd'-partition totals: no re-tokenization.
       graft.functions.expressions.GraftFunctions.register(s)
       val isArrival = col("doc_id") % 10 === 3
-      val idx = Staging.bucketedTable(s, d, "postings_upsert") { (name, dir) =>
+      val idx = shared.table(s, d, "postings_upsert",
+          Tables.fingerprint(s, d, "documents")) { (name, dir) =>
         def postRows(docs: DataFrame): DataFrame = {
           val tok = docs.select(col("doc_id"),
               explode(graft.functions.TextFunctions.tokens(col("text"))).as("term"))
@@ -1644,7 +1630,7 @@ object PipelineQueries {
               .write.mode("append").insertInto(name)
           val q = stream.writeStream.foreachBatch(perBatch).start()
           try q.processAllAvailable() finally q.stop()
-        } finally Staging.deleteRecursively(streamDir)
+        } finally deleteRecursively(streamDir)
       }
       val qTerms = idx.where(col("kind") === "p" && col("doc_id") === 0)
         .select("term").distinct().collect().map(_.getString(0)).toSeq
@@ -4530,7 +4516,8 @@ object PipelineQueries {
       // relies on per batch. Probe = the ivf_indexed shape (1-row
       // cell lookup, literal-cid partition-pruned scan, in-cell
       // top-10).
-      val idx = Staging.bucketedTable(s, d, "ivf_index_app") { (name, dir) =>
+      val idx = shared.table(s, d, "ivf_index_app",
+          Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), toDouble(col("embedding")).as("v"))
         val cents = e.where(col("vec_id").between(1, 8))
@@ -4755,7 +4742,8 @@ object PipelineQueries {
       // oracle verbatim). The rewrite is one partitionBy write of
       // surviving rows; with per-cell files only cells holding
       // tombstones need rewriting at scale.
-      val idx = Staging.bucketedTable(s, d, "ivf_index_cmp") { (name, dir) =>
+      val idx = shared.table(s, d, "ivf_index_cmp",
+          Tables.fingerprint(s, d, "embeddings")) { (name, dir) =>
         val e = t(s, d, "embeddings")
           .select(col("vec_id"), toDouble(col("embedding")).as("v"))
         val cents = e.where(col("vec_id").between(1, 8))
@@ -4777,7 +4765,7 @@ object PipelineQueries {
     "q_embed_ivf_indexed" -> ((s, d) => {
       // the PERSISTED-index ANN probe: the IVF cell assignment is
       // materialized ONCE as a catalog table PARTITIONED by cid
-      // (Staging.bucketedTable — built on first touch, reused by every
+      // (SessionMemo.table — built on first touch, reused by every
       // later probe, the "index build once, probe many" layout a real
       // ANN service maintains; one directory per cell = the on-disk
       // inverted-list layout). A probe is (1) a bounded 1-row driver

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions.toDouble
+import SessionMemo.{deleteRecursively, shared}
 import Tables.t
 
 /** The relational operator inventory (SURVEY.md §2.2 "Engine plan"):
@@ -39,38 +40,6 @@ object RelationalQueries {
     finally deleteRecursively(dir)
   }
 
-  /** Recursive delete that CLOSES its directory stream (Files.walk
-    * holds an open fd until closed — leaking one per gate query adds
-    * up over a long verify/bench session). Best-effort at TWO levels:
-    * per-entry, so one undeletable entry doesn't abandon the rest of
-    * the reverse-sorted list; and around the walk, catching Exception
-    * rather than IOException because the walk stream surfaces
-    * vanished-mid-traversal entries as UncheckedIOException (a
-    * RuntimeException) — the shutdown-hook / session-sweep reapers
-    * must never abort mid-cleanup on a concurrently-reaped file. */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit =
-    try {
-      if (!java.nio.file.Files.exists(dir)) return
-      val walk = java.nio.file.Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p =>
-            try java.nio.file.Files.deleteIfExists(p)
-            catch {
-              case _: InterruptedException =>
-                // swallowing would mask a pending interrupt and delay
-                // JVM shutdown — restore the flag, keep best-effort
-                Thread.currentThread().interrupt()
-              case _: Exception => ()
-            })
-      } finally walk.close()
-    } catch {
-      case _: InterruptedException => Thread.currentThread().interrupt()
-      case _: Exception => ()
-    }
-
-
   /** Stage the events parquet (a single file or a Spark-written
     * directory of part files) into `dst` for a file-stream source;
     * closes its directory stream. `prefix` disambiguates repeated
@@ -100,38 +69,26 @@ object RelationalQueries {
     * file-stream's schema is fixed from the staged files at
     * definition time, so a sentinel written in any other dtype would
     * be rejected or (for long vs timestamp int64) silently
-    * mis-scaled. */
-  /** Per-(session, fixture-dir, fixture-fingerprint) memo of (raw ts
-    * dtype, max epoch micros): each streaming gate query writes two
-    * sentinels and three of them run per Verify pass — without the memo
-    * that is six redundant full scans of the events fixture. Keys hold
-    * the session's identity hash, not the SparkSession itself (r10
-    * ADVICE: the instance key strongly retained closed sessions
-    * forever — the probed value depends only on the fixture, so an
-    * after-GC hash reuse could at worst serve another session an
-    * identical, still-correct probe), and carry
-    * a (name, size, mtime) fingerprint of the events files so a
-    * mid-session fixture refresh — the exact r9 dtype-break scenario —
-    * invalidates the memo instead of serving a stale dtype. Stale
-    * entries are tombstones: a handful of tuples per refresh, bounded. */
-  private val sentinelMetaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), (org.apache.spark.sql.types.DataType, Long)]()
-
+    * mis-scaled. The (raw ts dtype, max epoch micros) probe is
+    * memoized per events fingerprint: each streaming gate query writes
+    * two sentinels and three of them run per Verify pass, so without
+    * it that is six redundant full scans of the events fixture, and a
+    * mid-session refresh (the r9 dtype break) re-probes instead of
+    * serving a stale dtype. */
   private def writeSentinel(s: SparkSession, d: String,
                             streamDir: java.nio.file.Path, tag: String,
                             plusDays: Long): Unit = {
     import s.implicits._
-    val canon = new java.io.File(d).getCanonicalPath
-    val (rawTs, maxMicros) = sentinelMetaMemo.computeIfAbsent(
-      (System.identityHashCode(s), canon, Tables.fingerprint(canon, "events")), { _ =>
-        // Tables.events sets legacy.parquet.nanosAsLong BEFORE its
-        // read, so probe through it first — a bare Tables.t footer
-        // read on a nanos fixture would throw if nothing else had set
-        // the conf yet in this session
-        val maxUs = Tables.events(s, d)
-          .agg(max(unix_micros(col("ts")))).head().getLong(0)
-        (Tables.t(s, d, "events").schema("ts").dataType, maxUs)
-      })
+    val (rawTs, maxMicros) = shared.value(s, d, "sentinel_meta",
+        Tables.fingerprint(s, d, "events")) {
+      // Tables.events sets legacy.parquet.nanosAsLong BEFORE its
+      // read, so probe through it first — a bare Tables.t footer
+      // read on a nanos fixture would throw if nothing else had set
+      // the conf yet in this session
+      val maxUs = Tables.events(s, d)
+        .agg(max(unix_micros(col("ts")))).head().getLong(0)
+      (Tables.t(s, d, "events").schema("ts").dataType, maxUs)
+    }
     val tsMicros = maxMicros + plusDays * 86400L * 1000000L
     val base = Seq((-1L, -1L, "view", 0.0, "{}"))
       .toDF("event_id", "user_id", "event_type", "value", "props")
@@ -210,10 +167,10 @@ object RelationalQueries {
     * pre-partitioned-reference-side layout
     * [[graft.operators.AsOfJoin.asofExec]] is designed for (the
     * catalog-maintained dimension a 100 TB as-of enrichment would join
-    * against). Staging lifecycle (memoization, stopped-session sweep,
-    * exit reaper) lives in [[Staging.bucketedTable]]. */
+    * against). Staged as a [[SessionMemo.table]] keyed on the events
+    * fingerprint. */
   private def bucketedPurchases(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    Staging.bucketedTable(s, d, "asof_purchases") { (name, dir) =>
+    shared.table(s, d, "asof_purchases", Tables.fingerprint(s, d, "events")) { (name, dir) =>
       Tables.events(s, d).where(col("event_type") === "purchase")
         .groupBy(col("user_id").as("p_user"), col("ts").as("p_ts"))
         .agg(max(col("event_id")).as("purchase_id"))
@@ -241,18 +198,14 @@ object RelationalQueries {
           .cast("decimal(18,4)")).as("rev"),
         count(lit(1)).as("n"))
   /** V(A0, B0) — the materialized base view both IVM entries share
-    * (same staging tag, so one artifact serves both). */
-  private[graft] def ivmBase(s: SparkSession, d: String): DataFrame = {
-    val fpKey = java.lang.Long.toHexString(
-      Tables.fingerprint(d, "orders") ^
-        java.lang.Long.rotateLeft(Tables.fingerprint(d, "lineitem"), 17))
-    Staging.bucketedTable(s, d, s"ivm_base_$fpKey") { (name, dir) =>
+    * (same memo tag, so one artifact serves both). */
+  private[graft] def ivmBase(s: SparkSession, d: String): DataFrame =
+    shared.table(s, d, "ivm_base", Tables.fingerprint(s, d, "orders", "lineitem")) { (name, dir) =>
       ivmTerm(t(s, d, "orders").where(!ivmDA),
           t(s, d, "lineitem").where(!ivmDB))
         .write.format("parquet").mode("overwrite")
         .option("path", dir.resolve("t").toString).saveAsTable(name)
     }
-  }
 
   /** One RESTARTABLE pass of the q_stream_ivm_join maintenance stream
     * — replay-idempotent (r17 verdict item 1): every write is
@@ -809,9 +762,9 @@ object RelationalQueries {
           // detach from the temp dir (eager blocks) so cleanup can run
           .localCheckpoint(true)
       } finally {
-        Staging.deleteRecursively(streamDir)
-        Staging.deleteRecursively(ckpt)
-        Staging.deleteRecursively(outDir)
+        deleteRecursively(streamDir)
+        deleteRecursively(ckpt)
+        deleteRecursively(outDir)
       }
     }),
     "q_tpch_q3" -> ((s, d) => {
@@ -3582,9 +3535,9 @@ object RelationalQueries {
           // detach from the temp dir (eager blocks) so cleanup can run
           .localCheckpoint(true)
       } finally {
-        graft.queries.Staging.deleteRecursively(streamDir)
-        graft.queries.Staging.deleteRecursively(ckpt)
-        graft.queries.Staging.deleteRecursively(outDir)
+        deleteRecursively(streamDir)
+        deleteRecursively(ckpt)
+        deleteRecursively(outDir)
       }
     }),
     "q_source_corrupt" -> ((s, d) => {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -9,21 +10,16 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Cheap local-FS metadata hash of one fixture table (single file or
-    * a dir of parts): changes whenever the driver rewrites the fixture,
-    * so memo keys that include it re-derive instead of serving stale
-    * state after a mid-session refresh (the r9 failure class — schema
-    * AND content changes both move size/mtime). */
-  def fingerprint(dir: String, name: String): Long = {
-    val root = new java.io.File(dir, s"$name.parquet")
-    val files: Seq[java.io.File] =
-      if (root.isDirectory)
-        Option(root.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
-      else Seq(root)
-    files.foldLeft(1125899906842597L) { (h, f) =>
-      31 * (31 * (31 * h + f.getName.hashCode) + f.length()) + f.lastModified()
-    }
-  }
+  /** The data version of fixture tables `names` under `dir`: the
+    * [[SessionMemo.fingerprint]] of their listings (a missing table
+    * lists nothing). Memo keys that include it re-derive instead of
+    * serving stale state after a mid-session refresh. */
+  def fingerprint(s: SparkSession, dir: String, names: String*): Long =
+    SessionMemo.fingerprint(names.flatMap { name =>
+      val p = new Path(s"$dir/$name.parquet")
+      try p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    })
 
   /** Spread a sub-split scan across the session's cores before a
     * CPU-heavy per-row derivation (optimization guide §2.5, "input

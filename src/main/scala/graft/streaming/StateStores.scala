@@ -33,7 +33,8 @@ object StateStores {
     * the provider for their whole lifetime (gate entries drive their
     * stream to completion inside the block, so the reset never races
     * a running query). Same single-session concurrency bound as
-    * SessionMemo: the gate runs queries sequentially; defining
+    * [[graft.queries.SessionMemo]]'s refresh: the gate runs queries
+    * sequentially; defining
     * streaming queries concurrently on one session would race the
     * conf. */
   def withProvider[T](s: SparkSession, provider: String)(body: => T): T = {

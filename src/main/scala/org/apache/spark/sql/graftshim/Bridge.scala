@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
@@ -16,6 +16,10 @@ import org.apache.spark.storage.RDDBlockId
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `o`'s observed row, waiting at most Spark's 100 ms for the
+    * listener bus to deliver it; None when it is not in by then. */
+  def observedRow(o: Observation): Option[Row] = o.getRowOrEmpty
 
   /** `c` declared non-nullable; a null value fails the query (the
     * check a typed collect into a primitive field makes). */

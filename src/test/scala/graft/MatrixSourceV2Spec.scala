@@ -82,7 +82,7 @@ class MatrixSourceV2Spec extends SparkSpec {
           assert(got === want, s"#$k n=$n $entry $path")
         }
       }
-    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+    } finally graft.queries.SessionMemo.deleteRecursively(dir)
   }
 
   test("src range filters are pushed and prune row partitions") {
@@ -180,7 +180,7 @@ class MatrixSourceV2Spec extends SparkSpec {
       assert(back === in.toSet)
       // inferred n = maxId + 1
       assert(MatrixIO.readVertexCount(spark, p) === 4)
-    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+    } finally graft.queries.SessionMemo.deleteRecursively(dir)
   }
 
   test("an empty edge set with n = 0 round-trips as an empty graph through both entry points") {
@@ -200,7 +200,7 @@ class MatrixSourceV2Spec extends SparkSpec {
         edgesDf().write.format("graft-matrix").mode("overwrite").save(dir.resolve("x.txt").toString)
       }
       assert(e.getMessage.contains("no explicit n"))
-    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+    } finally graft.queries.SessionMemo.deleteRecursively(dir)
   }
 
   test("v2 write: append ORs cells into the existing matrix (op=2 modify)") {
@@ -216,7 +216,7 @@ class MatrixSourceV2Spec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(back === Set((0L, 1L), (1L, 2L), (4L, 0L)))
       assert(MatrixIO.readVertexCount(spark, p) === 5) // existing n respected
-    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+    } finally graft.queries.SessionMemo.deleteRecursively(dir)
   }
 
   test("v2 write: endpoint outside an explicit n fails loudly, file intact") {
@@ -236,7 +236,7 @@ class MatrixSourceV2Spec extends SparkSpec {
       val after = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(p)), "UTF-8")
       assert(after === before)
-    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+    } finally graft.queries.SessionMemo.deleteRecursively(dir)
   }
   test("v2 write: an n whose n * n cells pass maxBufferedEdges refuses before rendering, file intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mxw")
@@ -255,6 +255,6 @@ class MatrixSourceV2Spec extends SparkSpec {
       refused(edgesDf((50000L, 0L)).write.format("graft-matrix").mode("overwrite").save(p))
       refused(edgesDf((0L, 1L)).write.format("graft-matrix")
         .mode("overwrite").option("n", 1 << 16).save(p))
-    } finally graft.tools.TestCleanup.deleteRecursively(dir)
+    } finally graft.queries.SessionMemo.deleteRecursively(dir)
   }
 }

@@ -67,13 +67,13 @@ class RocksDbStateStoreSpec extends SparkSpec {
 
   test("q_stream_ivf_upsert is provider-invariant (index ingest re-run under RocksDB)") {
     // the maintained index is session-memoized (bench reps time the
-    // probe) — evict it so the foreachBatch ingest stream genuinely
+    // probe) — release it so the foreachBatch ingest stream genuinely
     // re-executes under RocksDB rather than serving the memo built
     // under the default provider; the rebuilt-under-RocksDB index
     // must answer exactly like the batch append path (they share the
     // gate oracle verbatim) and like the default-provider run
     val default = sortedRows(SparkEntry.queries("q_stream_ivf_upsert")(spark, dir))
-    graft.queries.Staging.evict(spark, dir, "ivf_index_upsert")
+    graft.queries.SessionMemo.shared.release(spark, dir, "ivf_index_upsert")
     val rocks = StateStores.withProvider(spark, StateStores.RocksDb)(
       sortedRows(SparkEntry.queries("q_stream_ivf_upsert")(spark, dir)))
     val batchAppend = sortedRows(SparkEntry.queries("q_embed_ivf_append")(spark, dir))

@@ -107,4 +107,60 @@ class SessionMemoSpec extends SparkSpec {
     assert(dependent.count() === 5,
       "dependent plan must stay computable after its dependency's tag refreshes")
   }
+
+  /** A table stage writing `n` rows, recording the table name and dir
+    * it was given. */
+  private def rangeTable(n: Int, made: collection.mutable.Buffer[(String, java.nio.file.Path)])
+                        (name: String, dir: java.nio.file.Path): Unit = {
+    made += name -> dir
+    spark.range(n).write.format("parquet")
+      .option("path", dir.resolve("t").toString).saveAsTable(name)
+  }
+
+  test("a table entry under a new fingerprint drops the old table and deletes its dir") {
+    val memo = new SessionMemo
+    val made = collection.mutable.Buffer.empty[(String, java.nio.file.Path)]
+    assert(memo.table(spark, "/tmp", "tbl_refresh", 1L)(rangeTable(3, made)).count() === 3)
+    assert(memo.table(spark, "/tmp", "tbl_refresh", 1L)(rangeTable(99, made)).count() === 3)
+    val Seq((oldName, oldDir)) = made.toSeq
+    assert(spark.catalog.tableExists(oldName) && java.nio.file.Files.exists(oldDir))
+    assert(memo.table(spark, "/tmp", "tbl_refresh", 2L)(rangeTable(5, made)).count() === 5)
+    val (newName, newDir) = made.last
+    assert(newName != oldName && newDir != oldDir)
+    assert(memo.entryCount(spark, "/tmp", "tbl_refresh") === 1)
+    assert(!spark.catalog.tableExists(oldName), "the superseded table must be dropped")
+    assert(!java.nio.file.Files.exists(oldDir), "the superseded table's dir must be deleted")
+    assert(spark.catalog.tableExists(newName) && java.nio.file.Files.exists(newDir))
+    memo.release(spark, "/tmp", "tbl_refresh")
+  }
+
+  test("a table build may consult the same memo for another table and a checkpoint") {
+    val memo = new SessionMemo
+    val made = collection.mutable.Buffer.empty[(String, java.nio.file.Path)]
+    (1 to 64).foreach { i =>
+      val top = memo.table(spark, "/tmp", s"tbl_top_$i", 7L) { (name, dir) =>
+        val inner = memo.table(spark, "/tmp", s"tbl_inner_$i", 7L)(rangeTable(2, made))
+        val staged = memo(spark, "/tmp", s"tbl_ckpt_$i", 7L)(df(3))
+        inner.union(staged.selectExpr("CAST(v AS BIGINT) AS id"))
+          .write.format("parquet").option("path", dir.resolve("t").toString).saveAsTable(name)
+      }
+      assert(top.count() === 5)
+    }
+    (1 to 64).foreach(i => Seq("top", "inner").foreach(k =>
+      memo.release(spark, "/tmp", s"tbl_${k}_$i")))
+  }
+
+  test("release on a table entry drops its table and dir; the next call rebuilds it") {
+    val memo = new SessionMemo
+    val made = collection.mutable.Buffer.empty[(String, java.nio.file.Path)]
+    val first = memo.table(spark, "/tmp", "tbl_release", 1L)(rangeTable(4, made))
+    assert(first.count() === 4)
+    val Seq((name, dir)) = made.toSeq
+    memo.release(spark, "/tmp", "tbl_release")
+    assert(memo.entryCount(spark, "/tmp", "tbl_release") === 0)
+    assert(!spark.catalog.tableExists(name) && !java.nio.file.Files.exists(dir))
+    assert(memo.table(spark, "/tmp", "tbl_release", 1L)(rangeTable(6, made)).count() === 6)
+    assert(made.size === 2, "a released table entry builds afresh")
+    memo.release(spark, "/tmp", "tbl_release")
+  }
 }

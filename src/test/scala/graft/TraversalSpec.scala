@@ -618,6 +618,19 @@ class TraversalSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("staged catalog read: the first load right after addGraph states its row count") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-firstload").toString
+    val cat = new GraphCatalog(spark, tmp)
+    cat.addGraph("big", pastBounds())
+    // no listener-bus drain: the write itself takes its count
+    val first = cat.load("big")
+    assert(staged(first, 70000L), first.queryExecution.analyzed)
+    val levels = Traversals.bfs(spark.read.parquet(s"$tmp/big/edges"), 0L)
+      .collect().map(_.getInt(1)).max + 1
+    // one job per level, none for a bounded collect
+    assert(jobsOf(Traversals.bfs(first, 0L).collect())._2 === levels)
+  }
+
   test("staged catalog read: modifyGraph and addEdges release the stage; a released stage throws") {
     import spark.implicits._
     val (cat, _) = stagedCatalog("graft-release")

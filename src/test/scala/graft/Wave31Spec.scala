@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{PipelineQueries, RelationalQueries, Staging, Tables}
+import graft.queries.{PipelineQueries, RelationalQueries, SessionMemo, Tables}
 import graft.streaming.{EventStreams, StateStores}
 
 /** r17 verdict items 1 + 6: the two streaming partial-appenders added
@@ -68,9 +68,9 @@ class Wave31Spec extends SparkSpec {
       assert(replayed == batch,
         "maintained digest table diverged from the batch recompute")
     } finally {
-      Staging.deleteRecursively(streamDir)
-      Staging.deleteRecursively(ckpt)
-      Staging.deleteRecursively(outDir)
+      SessionMemo.deleteRecursively(streamDir)
+      SessionMemo.deleteRecursively(ckpt)
+      SessionMemo.deleteRecursively(outDir)
     }
   }
 
@@ -107,9 +107,9 @@ class Wave31Spec extends SparkSpec {
         assert(got == batch,
           s"restart-recovered digest table diverged (provider=$provider)")
       } finally {
-        Staging.deleteRecursively(streamDir)
-        Staging.deleteRecursively(ckpt)
-        Staging.deleteRecursively(outDir)
+        SessionMemo.deleteRecursively(streamDir)
+        SessionMemo.deleteRecursively(ckpt)
+        SessionMemo.deleteRecursively(outDir)
       }
     }
   }
@@ -150,9 +150,9 @@ class Wave31Spec extends SparkSpec {
       assert(replayed == direct,
         "replayed streaming IVM view diverged from the recompute")
     } finally {
-      Staging.deleteRecursively(streamDir)
-      Staging.deleteRecursively(ckpt)
-      Staging.deleteRecursively(outDir)
+      SessionMemo.deleteRecursively(streamDir)
+      SessionMemo.deleteRecursively(ckpt)
+      SessionMemo.deleteRecursively(outDir)
     }
   }
 
@@ -223,9 +223,9 @@ class Wave31Spec extends SparkSpec {
       assert(recovered.nonEmpty && recovered == direct,
         "restart-recovered IVM view diverged from the recompute")
     } finally {
-      Staging.deleteRecursively(streamDir)
-      Staging.deleteRecursively(ckpt)
-      Staging.deleteRecursively(outDir)
+      SessionMemo.deleteRecursively(streamDir)
+      SessionMemo.deleteRecursively(ckpt)
+      SessionMemo.deleteRecursively(outDir)
     }
   }
 

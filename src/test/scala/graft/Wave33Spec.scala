@@ -67,7 +67,7 @@ class Wave33Spec extends SparkSpec {
       // identical delta (the log tail is GONE)
       val last = firstRun - 1
       (0 until last).foreach { i =>
-        graft.queries.Staging.deleteRecursively(
+        graft.queries.SessionMemo.deleteRecursively(
           java.nio.file.Paths.get(ingest, s"batch_id=$i"))
       }
       EventStreams.forceReplayOfLastBatch(ckpt.toString)
@@ -83,9 +83,9 @@ class Wave33Spec extends SparkSpec {
       assert(replayed == direct,
         "compacted-snapshot IVM view diverged from the direct recompute")
     } finally {
-      graft.queries.Staging.deleteRecursively(streamDir)
-      graft.queries.Staging.deleteRecursively(ckpt)
-      graft.queries.Staging.deleteRecursively(outDir)
+      graft.queries.SessionMemo.deleteRecursively(streamDir)
+      graft.queries.SessionMemo.deleteRecursively(ckpt)
+      graft.queries.SessionMemo.deleteRecursively(outDir)
     }
   }
 }
