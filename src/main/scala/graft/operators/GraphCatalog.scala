@@ -6,8 +6,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
-  PartitioningAwareFileIndex}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -22,43 +23,48 @@ import graft.queries.SessionMemo
   * Graphs persist as Parquet edge lists under `root/<name>/edges`.
   * Consistency model: `mode("overwrite")` gives the same
   * last-writer-wins whole-graph replacement the reference's writer
-  * lock provided. Readers are **fail-stop, never torn**: a query
-  * executed against a [[load]] snapshot reads one complete graph
-  * version; if the files were replaced underneath it, the read fails
-  * with FILE_NOT_EXIST (verified) rather than mixing versions. For a
-  * read that must survive concurrent overwrites, [[loadPinned]]
-  * materialises the snapshot first (the moral equivalent of the
-  * reference's reader lock, without blocking writers).
+  * lock provided. Readers are never torn: a query executed against a
+  * [[load]] reads one complete graph version. What it does when the
+  * files are replaced underneath it depends on what the load returned:
+  * a driver-staged version (below) is a **snapshot** and keeps its
+  * rows, the reference's reader semantics; a plain read or a
+  * checkpoint stage is **fail-stop**: the read fails with
+  * FILE_NOT_EXIST (verified), or the released checkpoint fails, rather
+  * than mixing versions. For a read that must survive concurrent
+  * overwrites whatever the graph's size, [[loadPinned]] materialises
+  * the snapshot first (the moral equivalent of the reference's reader
+  * lock, without blocking writers).
   *
   * Staged versions: the reference's read servers hold the graph in
   * memory and traverse it (`secondary_server.c:91-100`). Here a
-  * version written by [[addGraph]] / [[modifyGraph]] with more than
-  * [[Traversals.bfsLocalMaxEdges]] edges is staged by its first
-  * [[load]]: a lazy `localCheckpoint` of the read, filled by the first
-  * job over it, with its exact edge count in its plan statistics (the
-  * count is observed on the write, which runs no extra job for it),
-  * so a traversal skips the bounded collect and scans the checkpoint
-  * in place. What stays in memory is one checkpoint per graph past the
-  * bound, in this catalog's [[graft.queries.SessionMemo]], keyed on
-  * the edge path and the fingerprint of the file listing the write
-  * left. That is the cost of staging: once filled, the copy (storage
-  * level MEMORY_AND_DISK) stays until the next write to the graph
-  * through this catalog, or until a load finds another writer's
-  * files, whether or not the graph is read again, and a
-  * [[loadPinned]] of a staged graph holds a second full copy. Graphs
-  * at or below the bound, graphs this catalog did not write (or whose
-  * count the write did not deliver), appended graphs and the bucketed and
-  * versioned layouts keep the plain Parquet read. The
-  * consistency model is unchanged: every write to a graph's path
+  * version written by [[addGraph]] / [[modifyGraph]] is staged by its
+  * first [[load]], in this catalog's [[graft.queries.SessionMemo]],
+  * keyed on the edge path and the fingerprint of the file listing the
+  * write left; the write observes the version's edge count, which runs
+  * no extra job. A version of at most [[Traversals.bfsLocalMaxEdges]]
+  * edges is collected once by that load and staged on the driver, as a
+  * local relation of its rows (at most 16 384 rows, about 1 MiB), so a
+  * traversal of it plans no scan and runs no job. A larger version is
+  * staged as a lazy `localCheckpoint` of the read, filled by the first
+  * job over it, with its exact edge count in its plan statistics, so a
+  * traversal skips the bounded collect and scans the checkpoint in
+  * place. That is the cost of staging: a stage (for a checkpoint,
+  * once filled; storage level MEMORY_AND_DISK) stays until the next
+  * write to the graph through this catalog, or until a load finds
+  * another writer's files, whether or not the graph is read again, and
+  * a [[loadPinned]] of a checkpoint-staged graph holds a second full
+  * copy. Graphs this catalog did not write (or whose count the write
+  * did not deliver), appended graphs and the bucketed and versioned
+  * layouts keep the plain Parquet read. Every write to a graph's path
   * releases its stage before it writes, and a listing that no longer
-  * matches the fingerprint (another writer replaced the files) is
-  * read plainly, so a DataFrame from a released stage fails as one
-  * over replaced files does, and a stage never serves rows of a
-  * superseded version to a new [[load]]. A write whose input reads the
-  * graph it writes, its files or its stage (`modifyGraph(g,
+  * matches the fingerprint (another writer replaced the files) is read
+  * plainly, so a released checkpoint fails as a read over replaced
+  * files does, and a stage never serves rows of a superseded version
+  * to a new [[load]]. A write whose input reads the graph it writes,
+  * its files or its checkpoint stage (`modifyGraph(g,
   * load(g).union(more))`, `addEdges(g, load(g)...)`), pins that input
   * before it releases or deletes anything, so it reads the old version
-  * whole.
+  * whole; a driver-staged input already holds it.
   *
   * No fixed caps (reference: 20 graphs / 100 vertices); names are
   * real names, not a load-bearing `G<k>.txt` convention
@@ -120,12 +126,6 @@ final class GraphCatalog(spark: SparkSession, root: String) {
       ids.nonEmpty && plan.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }.exists(lineage)
   }
 
-  /** The fingerprint of the files a plain read lists. */
-  private def listed(read: DataFrame): Option[Long] =
-    read.queryExecution.analyzed.collectFirst {
-      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
-    }.collect { case index: PartitioningAwareFileIndex => SessionMemo.fingerprint(index.allFiles()) }
-
   /** Reference op=1 (Add graph). Create-or-replace, atomic per graph.
     * The write observes its edge count for [[load]]'s staging, and
     * takes it once the write returns, waiting at most Spark's 100 ms
@@ -135,52 +135,78 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     val rows = Observation()
     asEdges(input).observe(rows, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).parquet(edgePath(name))
-    Bridge.observedRow(rows).foreach { r =>
-      val listing = fs.listStatus(new Path(edgePath(name))).toSeq
-      written.put(name, (SessionMemo.fingerprint(listing), r.getLong(0)))
-    }
+    for (r <- Bridge.observedRow(rows); files <- listing(name))
+      written.put(name, (files, r.getLong(0)))
   }
 
   /** Reference op=2 (Modify graph) — behaviourally identical to add
     * (`primary_server.c:70-99` uses one write path for both). */
   def modifyGraph(name: String, edges: DataFrame): Unit = addGraph(name, edges)
 
-  /** Snapshot read of a named graph's edge list (fail-stop under
-    * concurrent overwrite — see class doc). Runs no Spark job; an
-    * absent graph fails here.
+  /** Read of a named graph's edge list. An absent graph fails here.
     *
     * A version that this catalog wrote with [[addGraph]] /
-    * [[modifyGraph]] and whose observed edge count is above
-    * [[Traversals.bfsLocalMaxEdges]] is staged by its first load and
-    * returned from the stage by later ones (see the class doc): a
-    * checkpoint that the first job over it fills, stating its exact
-    * row count, and that stays in memory until the graph's next write.
-    * For a graph without a count and for any listing other than the
-    * one the write left, the load is the plain Parquet read. */
+    * [[modifyGraph]] is staged by its first load and returned from the
+    * stage by later ones (see the class doc). With an observed edge
+    * count of at most [[Traversals.bfsLocalMaxEdges]], the first load
+    * collects the version in one job and the stage is a local relation
+    * of its rows: a snapshot, which keeps its rows after an overwrite,
+    * and later loads run no job. Above the bound the stage is a
+    * checkpoint that the first job over it fills, stating its exact row
+    * count, fail-stop as the plain read is; the load runs no job. Both
+    * stay in memory until the graph's next write. For a graph without a
+    * count and for any listing other than the one the write left, the
+    * load is the plain Parquet read (fail-stop under a concurrent
+    * overwrite), and runs no job. */
   def load(name: String): DataFrame = {
     validate(name)
-    val read = readEdges(edgePath(name))
     val entry = written.get(name)
-    if (entry == null || entry._2 <= Traversals.bfsLocalMaxEdges) read
-    else if (listed(read).contains(entry._1))
+    if (entry == null) readEdges(edgePath(name))
+    else if (listing(name).contains(entry._1))
       stages(spark, edgePath(name), stageTag, entry._1) {
-        Bridge.withRowCount(read.localCheckpoint(eager = false), entry._2)
+        val read = readEdges(edgePath(name))
+        if (entry._2 <= Traversals.bfsLocalMaxEdges) held(read, entry._2)
+        else Bridge.withRowCount(read.localCheckpoint(eager = false), entry._2)
       }
     else {
       // another writer replaced the files: the count and any stage
       // describe a superseded version
       if (written.remove(name, entry)) stages.release(spark, edgePath(name), stageTag)
-      read
+      readEdges(edgePath(name))
     }
+  }
+
+  /** The fingerprint of the files under `name`'s edge path; None when
+    * it is gone. */
+  private def listing(name: String): Option[Long] =
+    try Some(SessionMemo.fingerprint(fs.listStatus(new Path(edgePath(name))).toSeq))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** `read`, a version of `rows` edges, as a local relation of its rows,
+    * collected in one job of at most `rows + 1` rows per partition. When
+    * the files hold another count (another writer replaced them since
+    * the listing), `read` itself: the next load sees the new listing and
+    * releases it. */
+  private def held(read: DataFrame, rows: Long): DataFrame = {
+    val cap = rows.toInt + 1
+    val data = read.queryExecution.toRdd.mapPartitions(_.take(cap).map(_.copy())).collect()
+    if (data.length != rows) read
+    else Bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(edgeSchema),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(data)))
   }
 
   /** Materialised snapshot: survives a concurrent overwrite of the
     * underlying files. `persist()` is NOT enough — Spark's
     * CacheManager re-caches by path on write, silently swapping in the
     * new version (observed) — so the snapshot is `localCheckpoint`ed:
-    * the computed rows are detached from the file source entirely. */
-  def loadPinned(name: String): DataFrame =
-    load(name).localCheckpoint(eager = true)
+    * the computed rows are detached from the file source entirely. A
+    * driver-staged version (see [[load]]) already is such a snapshot,
+    * and is returned as it is, with no job past its first load's. */
+  def loadPinned(name: String): DataFrame = {
+    val df = load(name)
+    if (df.queryExecution.analyzed.isInstanceOf[LocalRelation]) df
+    else df.localCheckpoint(eager = true)
+  }
 
   private def tableName(name: String) = {
     // table identifiers are strict so two catalog names can never

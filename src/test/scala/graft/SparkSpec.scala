@@ -2,6 +2,8 @@ package graft
 
 import org.apache.logging.log4j.core.Filter
 import org.apache.logging.log4j.core.filter.RegexFilter
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,4 +39,26 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

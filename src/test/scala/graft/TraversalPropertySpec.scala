@@ -199,6 +199,39 @@ class TraversalPropertySpec extends SparkSpec {
     }
   }
 
+  test("bfs, bfsLevelsMulti and dfsLeaves read a Long local relation on the driver, " +
+    "as the same rows in Parquet") {
+    (0 until 4).foreach { i =>
+      val (n, es) = messyGraph(i)
+      val dir = java.nio.file.Files.createTempDirectory("graft-held").toString
+      // one file, so the bounded collect over it is one job
+      es.toDF("src", "dst").coalesce(1).write.mode("overwrite").parquet(dir)
+      val starts = Seq(0L, (n / 2).toLong)
+      // each operator's schema and rows, and the jobs it ran with its
+      // collect
+      def ops(e: org.apache.spark.sql.DataFrame) = Seq(
+        () => Traversals.bfs(e, 0L),
+        () => Traversals.bfsLevelsMulti(e, starts),
+        () => Traversals.dfsLeaves(e, 0L)).map { op =>
+        jobsOf { val df = op(); df.schema -> df.collect().map(_.toSeq).sortBy(_.toString).toSeq }
+      }
+      val parquet = ops(spark.read.parquet(dir))
+      val held = ops(es.toDF("src", "dst"))
+      val ints = ops(es.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst"))
+      Seq("bfs", "bfsLevelsMulti", "dfsLeaves").zipWithIndex.foreach { case (op, k) =>
+        val what = s"$op, graph #$i: $es"
+        assert(held(k)._1 === parquet(k)._1, what)
+        assert(ints(k)._1 === parquet(k)._1, s"Int columns, $what")
+        // the held rows skip the bounded collect's job; over Int
+        // columns the fallback's limit folds into the local relation
+        assert(held(k)._2 === parquet(k)._2 - 1, what)
+        assert(ints(k)._2 === held(k)._2, s"Int columns, $what")
+      }
+      // bfs and dfsLeaves answer on the driver: no job at all
+      assert(held(0)._2 === 0 && held(2)._2 === 0, s"graph #$i: $es")
+    }
+  }
+
   test("dfsLeaves replays at exactly its reduced edge count and refuses one below, on both paths") {
     // a path 0 → 1 → … → 9 reaches R + 1 vertices over R = 9 reduced
     // edges, so a held bound of R (one short of reached) fails the

@@ -3,7 +3,6 @@ package graft
 import graft.sources.MatrixIO
 import graft.operators.{GraphCatalog, Traversals}
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** Golden traversal tests from FIXTURES.md — the reference's own
@@ -79,28 +78,6 @@ class TraversalSpec extends SparkSpec {
     }
   }
 
-  /** `body`'s result and the number of Spark jobs it started. */
-  def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      val out = body
-      ListenerBusDrain(sc)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("local and forced-distributed bfs/dfsLeaves return identical rows and schema " +
     "(goldens and random graphs)") {
     import spark.implicits._
@@ -126,7 +103,7 @@ class TraversalSpec extends SparkSpec {
     }
   }
 
-  test("job-count pins: a catalog load runs no job, a G7 bfs or dfsLeaves collect runs one") {
+  test("job-count pins: a G7 catalog read collects once, then runs no job") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
     val cat = new GraphCatalog(spark, tmp)
     // the matrix read checks the file on the driver and plans one input
@@ -138,14 +115,16 @@ class TraversalSpec extends SparkSpec {
       .filter(_.getFileName.toString.endsWith(".parquet")).count()
     assert(parquet === 1L)
     cat.commitVersion("g7v", edges("G7"))
-    assert(jobsOf(cat.load("g7"))._2 === 0, "load must not infer the schema")
+    // the first load collects the 12 edges the write observed, once
+    assert(jobsOf(cat.load("g7"))._2 === 1, "one collect, no schema inference")
+    assert(jobsOf(cat.load("g7"))._2 === 0, "a second load returns the stage")
     assert(jobsOf(cat.loadLatest("g7v"))._2 === 0, "loadLatest must not infer the schema")
     val (bfsRows, bfsJobs) = jobsOf(cat.bfs("g7", 0).collect())
     assert(bfsRows.sortBy(_.getLong(0)).map(_.getLong(2)).toSeq === Seq(0L, 1L, 4L, 2L, 5L, 6L, 3L))
-    assert(bfsJobs === 1)
+    assert(bfsJobs === 0)
     val (dfsRows, dfsJobs) = jobsOf(cat.dfsLeaves("g7", 0).collect())
     assert(dfsRows.map(_.getLong(0)).toSeq === Seq(3L, 5L, 6L))
-    assert(dfsJobs === 1)
+    assert(dfsJobs === 0)
     // the DataFrame-state rank: a window partitioned by level, never
     // one unpartitioned window over the whole reachable set
     val windows = Traversals.bfs(cat.load("g7"), 0, localMaxEdges = 0L, maxHeld = 0L)
@@ -465,16 +444,35 @@ class TraversalSpec extends SparkSpec {
     assert(cat.dfsLeaves("g7", 0).collect().map(_.getLong(0)).toSeq === Seq(1L))
   }
 
-  test("loadPinned snapshot survives a concurrent overwrite; plain load is fail-stop") {
+  test("loadPinned and a driver-staged load survive an overwrite") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-snap").toString
     val cat = new GraphCatalog(spark, tmp)
-    cat.addGraph("g", Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst"))
-    val pinned = cat.loadPinned("g")
+    val rows = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    cat.addGraph("g", rows.toDF("src", "dst"))
+    // a driver-staged version pins as itself: the first load's collect,
+    // then no job
+    val (pinned, pinJobs) = jobsOf(cat.loadPinned("g"))
+    assert(pinJobs === 1)
+    assert(jobsOf(cat.loadPinned("g"))._2 === 0)
     val unpinned = cat.load("g")
-    assert(unpinned.count() === 3)   // resolves pre-overwrite files
+    assert(unpinned.count() === 3)
     cat.modifyGraph("g", Seq((9L, 9L)).toDF("src", "dst"))
     assert(pinned.count() === 3, "pinned snapshot must survive the overwrite")
+    // a driver-staged load is a snapshot too: its rows, never torn
+    assert(unpinned.as[(Long, Long)].collect().sorted.toSeq === rows)
+    assert(cat.load("g").count() === 1)
+  }
+
+  test("a plain load is fail-stop under an overwrite") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-failstop").toString
+    val cat = new GraphCatalog(spark, tmp)
+    cat.addEdges("g", Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst"))
+    // an appended graph has no observed count: the plain read
+    val unpinned = cat.load("g")
+    assert(plainRead(unpinned) && unpinned.count() === 3)
+    cat.modifyGraph("g", Seq((9L, 9L)).toDF("src", "dst"))
     // plain snapshot fails cleanly (FILE_NOT_EXIST) — never torn data
     intercept[Exception] { unpinned.count() }
     assert(cat.load("g").count() === 1)
@@ -574,6 +572,10 @@ class TraversalSpec extends SparkSpec {
     case lr: org.apache.spark.sql.execution.LogicalRDD => lr.stats.rowCount.contains(BigInt(rows))
     case _ => false
   }
+
+  /** `df`'s plan is a driver-staged version: a local relation. */
+  def driverStaged(df: DataFrame): Boolean = df.queryExecution.analyzed
+    .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** `df`'s plan is the plain Parquet read. */
   def plainRead(df: DataFrame): Boolean = df.queryExecution.analyzed
@@ -702,21 +704,55 @@ class TraversalSpec extends SparkSpec {
     assert(cat.bfs("big", 0L).collect().map(_.getLong(2)).toSeq === Seq(0L, 1L, 2L))
   }
 
-  test("a graph at the local bound loads as a plain Parquet read with no job") {
+  test("a graph at the local bound is staged on the driver by one job") {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-atbound").toString
     val cat = new GraphCatalog(spark, tmp)
-    // one partition, so one Parquet file and a one-job bounded collect
     cat.addGraph("g", spark.range(0L, Traversals.bfsLocalMaxEdges, 1L, 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst")))
     ListenerBusDrain(spark.sparkContext)
     val (g, jobs) = jobsOf(cat.load("g"))
-    assert(jobs === 0 && plainRead(g))
-    assert(jobsOf(cat.bfs("g", 0L).collect())._2 === 1, "the bounded collect, then local levels")
-    // an overwrite whose input reads the files it replaces is pinned first
+    assert(jobs === 1 && driverStaged(g))
+    assert(jobsOf(cat.bfs("g", 0L).collect())._2 === 0, "local levels over the held rows")
+    // an overwrite whose input reads the stage needs no pin: the rows
+    // are on the driver
     cat.modifyGraph("g", cat.load("g").union(spark.range(1).select(col("id").as("src"),
       col("id").as("dst"))))
-    assert(cat.load("g").count() === Traversals.bfsLocalMaxEdges + 1)
+    ListenerBusDrain(spark.sparkContext)
+    val next = cat.load("g")
+    assert(staged(next, Traversals.bfsLocalMaxEdges + 1))
+    assert(next.count() === Traversals.bfsLocalMaxEdges + 1)
+  }
+
+  test("staged catalog read: an overwrite of a small graph by a second catalog is read plainly") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-foreign-small").toString
+    val cat = new GraphCatalog(spark, tmp)
+    cat.addGraph("g", Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst"))
+    val old = cat.load("g")
+    assert(driverStaged(old))
+    new GraphCatalog(spark, tmp).modifyGraph("g", Seq((0L, 1L), (1L, 2L)).toDF("src", "dst"))
+    // the listing no longer matches the one this catalog's write left
+    val now = cat.load("g")
+    assert(plainRead(now) && now.count() === 2L)
+    assert(cat.bfs("g", 0L).collect().map(_.getLong(2)).toSeq === Seq(0L, 1L, 2L))
+    assert(old.count() === 3L, "the earlier load keeps its snapshot")
+  }
+
+  test("staged catalog read: a small graph rewritten from its own load keeps the old rows") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-selfmodify-small").toString
+    val cat = new GraphCatalog(spark, tmp)
+    val rows = Seq((0L, 1L), (1L, 2L), (2L, 3L))
+    cat.addGraph("g", rows.toDF("src", "dst"))
+    val input = cat.load("g").union(Seq((3L, 4L)).toDF("src", "dst"))
+    // the write's own job only: no eager pin of its input
+    assert(jobsOf(cat.modifyGraph("g", input))._2 === 1)
+    val next = cat.load("g")
+    assert(driverStaged(next))
+    assert(next.as[(Long, Long)].collect().sorted.toSeq === rows :+ ((3L, 4L)))
+    assert(next.filter(col("src") === 3L).count() === 1L)
   }
 
   test("versioned catalog: immutable versions, atomic latest pointer, time travel, expiry") {

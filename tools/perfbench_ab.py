@@ -15,7 +15,10 @@ Prints, per workload and end-to-end metric (as BENCHMARK.json of the change
 lists them), each side's median and quartiles, the change's wins over the
 pairs (ties count for neither side), and whether a gain would meet the
 claim rule: wins in at least nine tenths of the pairs, and medians apart by
-more than the base's interquartile range. With --trace 1 the per-layer
+more than the base's interquartile range. Next to it, an end-to-end metric
+whose change median is worse than the base median by more than its
+BENCHMARK.json `bound` (a fraction of the base median) is marked
+`WORSE`: the rule that rejects a change. With --trace 1 the per-layer
 metrics are printed too. Every run's `failed` count is reported.
 """
 import argparse
@@ -58,6 +61,16 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def bound_mark(metric, bmed, cmed):
+    """'WORSE' when the change median is worse than the base median by more
+    than the metric's bound, '' when it is not or the metric has none."""
+    bound = metric.get("bound")
+    if bound is None:
+        return ""
+    worse = cmed - bmed if metric.get("better", "lower") == "lower" else bmed - cmed
+    return "WORSE" if worse > bound * abs(bmed) else "ok"
+
+
 def report(spec, workload, pairs, trace):
     metrics = [m for m in spec["end_to_end"]]
     if trace:
@@ -66,7 +79,7 @@ def report(spec, workload, pairs, trace):
           f"(failed: base {sum(b['failed'] for b, _ in pairs)}, "
           f"change {sum(c['failed'] for _, c in pairs)})")
     print(f"   {'metric':32s} {'base median [q1, q3]':>30s} {'change median [q1, q3]':>30s}"
-          f" {'delta':>8s} {'wins':>6s}  claim")
+          f" {'delta':>8s} {'wins':>6s}  claim  bound")
     for m in metrics:
         name = m["name"]
         got = [(b["metrics"].get(name, {}).get("value"), c["metrics"].get(name, {}).get("value"))
@@ -85,7 +98,8 @@ def report(spec, workload, pairs, trace):
         claim = gain and wins >= 0.9 * len(got) and abs(cmed - bmed) > (bq3 - bq1)
         print(f"   {name:32s} {bmed:>12.4g} [{bq1:.4g}, {bq3:.4g}]".ljust(70)
               + f" {cmed:>12.4g} [{cq1:.4g}, {cq3:.4g}]".ljust(31)
-              + f" {delta:>7s} {wins:>3d}/{len(got):<2d}  {'met' if claim else '-'}")
+              + f" {delta:>7s} {wins:>3d}/{len(got):<2d}  {'met' if claim else '-':5s}"
+              + f"  {bound_mark(m, bmed, cmed)}")
 
 
 def main():
