@@ -43,8 +43,11 @@ import graft.queries.SessionMemo
   * write left; the write observes the version's edge count, which runs
   * no extra job. A version of at most [[Traversals.bfsLocalMaxEdges]]
   * edges is collected once by that load and staged on the driver, as a
-  * local relation of its rows (at most 16 384 rows, about 1 MiB), so a
-  * traversal of it plans no scan and runs no job. A larger version is
+  * local relation of its rows, so a traversal of it plans no scan and
+  * runs no job. Those rows are driver heap: at most 16 384 per graph,
+  * about 1.3 MiB, which cannot spill. The catalog sets no cap on the
+  * number of graphs, so driver memory grows with the number of small
+  * graphs loaded since their last write. A larger version is
   * staged as a lazy `localCheckpoint` of the read, filled by the first
   * job over it, with its exact edge count in its plan statistics, so a
   * traversal skips the bounded collect and scans the checkpoint in
@@ -157,7 +160,10 @@ final class GraphCatalog(spark: SparkSession, root: String) {
     * stay in memory until the graph's next write. For a graph without a
     * count and for any listing other than the one the write left, the
     * load is the plain Parquet read (fail-stop under a concurrent
-    * overwrite), and runs no job. */
+    * overwrite), and runs no job. The first load of a small version
+    * is the one load that runs a job, so it is the one that can fail
+    * itself, with FILE_NOT_EXIST, when another writer replaces the
+    * files between its listing check and its collect. */
   def load(name: String): DataFrame = {
     validate(name)
     val entry = written.get(name)

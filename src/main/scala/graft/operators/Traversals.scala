@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.graftshim.Bridge.notNull
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast,
-  Expression}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
@@ -131,44 +130,15 @@ object Traversals {
     * driver array can hold. A table whose plan statistics carry an
     * exact row count above `max` (a checkpoint with its count stated,
     * as [[GraphCatalog.load]] stages a large graph) is refused with no
-    * job at all. A table the driver already holds (a local relation
-    * with Long columns, seen through renames and [[castEdges]]'
-    * projection, as [[GraphCatalog.load]] stages a small graph, or a
-    * `toDF` of a local collection) is read straight from its plan:
-    * refused on its length, returned with no query planned, and a null
-    * id fails through [[vertexAt]] as the held scan fails. */
-  private[operators] def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] =
-    heldColumns(edges.queryExecution.analyzed) match {
-      case Some((rows, Seq(s, d))) =>
-        if (rows.length > max) None
-        else Some(rows.iterator.map(r => (vertexAt(r, s), vertexAt(r, d))).toArray)
-      case _ =>
-        val spark = edges.sparkSession
-        import spark.implicits._
-        rowsAtMost(edges.as[(Long, Long)], max)
-    }
-
-  /** The rows of the local relation under `plan` and, per output
-    * column of `plan`, its index in those rows, when the relation's
-    * columns are Long and every projection between them only renames a
-    * column or casts it to Long; None for any other plan. */
-  private def heldColumns(plan: LogicalPlan): Option[(Seq[InternalRow], Seq[Int])] = {
-    def longColumn(e: Expression): Option[Attribute] = e match {
-      case a: Attribute if a.dataType == LongType => Some(a)
-      case Alias(c, _) => longColumn(c)
-      case c: Cast if c.dataType == LongType => longColumn(c.child)
-      case _ => None
-    }
-    plan match {
-      case l: LocalRelation if l.output.forall(_.dataType == LongType) =>
-        Some((l.data, l.output.indices))
-      case Project(list, child) => heldColumns(child).flatMap { case (rows, at) =>
-        val index = child.output.map(_.exprId).zip(at).toMap
-        val cols = list.map(e => longColumn(e).flatMap(a => index.get(a.exprId)))
-        if (cols.forall(_.isDefined)) Some((rows, cols.flatten)) else None
-      }
-      case _ => None
-    }
+    * job at all. A table the driver already holds (a local relation,
+    * as [[GraphCatalog.load]] stages a small graph, or a `toDF` of a
+    * local collection) runs no job either: the optimizer folds the
+    * limit and [[castEdges]]' projection into the relation, and the
+    * collect reads its rows on the driver. */
+  private[operators] def collectAtMost(edges: DataFrame, max: Long): Option[Array[(Long, Long)]] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    rowsAtMost(edges.as[(Long, Long)], max)
   }
 
   /** [[collectAtMost]] over any typed table. */

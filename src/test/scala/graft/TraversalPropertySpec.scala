@@ -199,8 +199,8 @@ class TraversalPropertySpec extends SparkSpec {
     }
   }
 
-  test("bfs, bfsLevelsMulti and dfsLeaves read a Long local relation on the driver, " +
-    "as the same rows in Parquet") {
+  test("bfs, bfsLevelsMulti and dfsLeaves collect a local relation with no job, " +
+    "and agree with the same rows in Parquet") {
     (0 until 4).foreach { i =>
       val (n, es) = messyGraph(i)
       val dir = java.nio.file.Files.createTempDirectory("graft-held").toString
@@ -222,8 +222,8 @@ class TraversalPropertySpec extends SparkSpec {
         val what = s"$op, graph #$i: $es"
         assert(held(k)._1 === parquet(k)._1, what)
         assert(ints(k)._1 === parquet(k)._1, s"Int columns, $what")
-        // the held rows skip the bounded collect's job; over Int
-        // columns the fallback's limit folds into the local relation
+        // the bounded collect's limit (and, over Int columns, the
+        // cast) folds into the local relation: no job for it
         assert(held(k)._2 === parquet(k)._2 - 1, what)
         assert(ints(k)._2 === held(k)._2, s"Int columns, $what")
       }
